@@ -8,9 +8,9 @@ import org.apache.spark.sql.DataFrame
   * signatures) and the connected-components fixpoint result — reuse
   * within one operator invocation is the point, but a returned cached
   * frame with no owner leaks one in-memory relation per call. Every
-  * operator cache is therefore created through [[cached]], and the two
-  * entrypoint mains (Verify, Bench) call [[clear]] between queries so
-  * no relation outlives the query that built it. Library users embed
+  * operator cache is therefore created through [[cached]], and every
+  * entry-point main (Verify, Bench, Plans, StageProf) calls [[clear]]
+  * between queries so no relation outlives the query that built it. Library users embed
   * the same call at their own batch boundaries.
   */
 object Caches {

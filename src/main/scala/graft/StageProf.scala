@@ -1,16 +1,12 @@
 package graft
 
-import scala.collection.mutable
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-
-/** Dev utility: run ONE registered query (one pass, same noop-sink
-  * discipline as [[Bench]]) with a stage listener attached, then print
-  * every completed stage's wall time, executor CPU/run time, task
-  * count and shuffle bytes — the attribution step of guide §1 when a
-  * key's core-seconds need explaining operator-by-operator and the UI
-  * is off. Optional second arg = number of passes (cache-build vs
-  * steady-state attribution).
+/** Dev utility: run ONE registered query (each pass a [[Bench.pass]])
+  * with a stage listener attached, then print every completed stage's
+  * wall time, executor CPU/run time, task count and shuffle bytes —
+  * the attribution step when a key's core-seconds need explaining
+  * operator-by-operator and the UI is off. The spill column is disk
+  * bytes spilled. Optional second
+  * arg = number of passes (cache-build vs steady-state attribution).
   *
   * Usage: sbt "runMain graft.StageProf graph_pagerank 2"
   */
@@ -26,45 +22,27 @@ object StageProf {
     val spark = GraftSession.local(cpus, appName = "graft-stageprof")
     spark.sparkContext.setLogLevel("ERROR")
 
-    case class St(id: Int, nameLine: String, wallMs: Long, runMs: Long,
-                  cpuMs: Long, tasks: Int, inMb: Double, srMb: Double,
-                  swMb: Double, spillMb: Double)
-    val stages = mutable.ArrayBuffer.empty[St]
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-        val i = e.stageInfo
-        val m = i.taskMetrics
-        stages += St(i.stageId, i.name.linesIterator.next(),
-          i.completionTime.getOrElse(0L) - i.submissionTime.getOrElse(0L),
-          m.executorRunTime, m.executorCpuTime / 1000000,
-          i.numTasks, m.inputMetrics.bytesRead / 1e6,
-          m.shuffleReadMetrics.remoteBytesRead / 1e6 +
-            m.shuffleReadMetrics.localBytesRead / 1e6,
-          m.shuffleWriteMetrics.bytesWritten / 1e6,
-          m.memoryBytesSpilled / 1e6)
-      }
-    })
+    val log = new Bench.StageLog
+    spark.sparkContext.addSparkListener(log)
 
     (1 to passes).foreach { p =>
-      stages.clear()
-      Caches.clear()
-      val t0 = System.nanoTime()
-      fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-      val wall = (System.nanoTime() - t0) / 1e9
+      log.drain()
+      val wall = Bench.pass(spark, sfDir, fn)
       // listener bus is async; give it a moment to drain
       Thread.sleep(500)
+      val stages = log.drain()
       println(f"== $name pass $p: wall=$wall%.3f s, ${stages.size} stages ==")
       println(f"${"stage"}%6s ${"wall_ms"}%8s ${"run_ms"}%8s ${"cpu_ms"}%8s " +
         f"${"tasks"}%5s ${"in_MB"}%7s ${"sr_MB"}%7s ${"sw_MB"}%7s ${"spill"}%6s  name")
       stages.sortBy(_.id).foreach { s =>
         println(f"${s.id}%6d ${s.wallMs}%8d ${s.runMs}%8d ${s.cpuMs}%8d " +
-          f"${s.tasks}%5d ${s.inMb}%7.1f ${s.srMb}%7.1f ${s.swMb}%7.1f " +
-          f"${s.spillMb}%6.1f  ${s.nameLine.take(70)}")
+          f"${s.tasks}%5d ${s.inputB / 1e6}%7.1f ${s.readB / 1e6}%7.1f ${s.writeB / 1e6}%7.1f " +
+          f"${s.spillB / 1e6}%6.1f  ${s.name.take(70)}")
       }
       val top = stages.sortBy(-_.runMs).take(8)
       println("-- top by executor run time --")
       top.foreach(s => println(f"  stage ${s.id}%4d run=${s.runMs}%7d ms " +
-        f"cpu=${s.cpuMs}%7d ms  ${s.nameLine.take(70)}"))
+        f"cpu=${s.cpuMs}%7d ms  ${s.name.take(70)}"))
     }
     Caches.clear()
     spark.stop()

@@ -1,5 +1,9 @@
 package graft
 import java.nio.file.{Files, Paths}
+
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -23,21 +27,13 @@ object Verify {
       // No operator-internal cache outlives the query that built it.
       Caches.clear()
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson(SparkEntry.oracleSql))
     spark.stop()
   }
+
+  /** The oracle map as one JSON object. A tab or CR in an oracle's SQL
+    * must come out escaped, or a JSON reader rejects the whole file and
+    * the hash-compare silently counts zero. */
+  def oracleJson(oracle: Map[String, String]): String =
+    new ObjectMapper().registerModule(DefaultScalaModule).writeValueAsString(oracle)
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Column-level text-analysis primitives for the LLM-data pipeline
@@ -102,11 +102,12 @@ object TextFunctions {
     * on every input, without materializing the match array. Resolves
     * through the session registry; registered by GraftExtensions at
     * session build, and defensively re-registered here off the active
-    * session for foreign sessions built without the extension.
+    * (else default) session for foreign sessions built without the
+    * extension. With no session at all the Column is still built.
     */
   def regexpCountNative(c: Column, pattern: String): Column = {
-    graft.plans.GraftFunctions.ensureRegistered(
-      org.apache.spark.sql.SparkSession.active)
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .foreach(graft.plans.GraftFunctions.ensureRegistered)
     call_function("graft_regexp_count", c, lit(pattern))
   }
 

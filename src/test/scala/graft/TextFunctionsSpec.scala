@@ -25,6 +25,17 @@ class TextFunctionsSpec extends AnyFunSuite with SparkFixture {
     assert(one(bpeTokenCount(col("text")), "ab12,cd") == 4L)
   }
 
+  test("regexpCountNative builds its Column with no active or default session") {
+    import org.apache.spark.sql.SparkSession
+    val s = spark // built before clearing, restored after
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    val c =
+      try regexpCountNative(col("text"), "[a-z]+")
+      finally { SparkSession.setDefaultSession(s); SparkSession.setActiveSession(s) }
+    assert(one(c, "ab 12 cd") == 2L)
+  }
+
   test("markerCount counts only listed tokens") {
     assert(one(markerCount(col("text"), Seq("the", "a")), "The a THE b c") == 3L)
   }
