@@ -19,6 +19,22 @@ import org.apache.spark.sql.SparkSession
   *    matters for the NANOS one, and is harmless otherwise.
   *  - UTC session timezone: timestamp→date/epoch conversions must not
   *    depend on the host machine's zone.
+  *  - `spark.hadoop.fs.file.impl` and
+  *    `spark.hadoop.fs.AbstractFileSystem.file.impl` point the `file:`
+  *    scheme of the `FileSystem` and `FileContext` APIs at
+  *    [[graft.io.NoForkLocalFileSystem]] and [[graft.io.NoForkLocalFs]].
+  *    Without libhadoop, Hadoop forks `chmod`, `readlink` and `ls` for
+  *    local files: thousands of processes per streaming run, on the
+  *    commit path of every micro-batch (checkpoint, state store, sink
+  *    metadata). These make the same calls through java.nio and keep
+  *    the rest of Hadoop's behaviour: `.crc` files from its checksum
+  *    layers, temp-then-rename commits (`Rename.NONE` still fails on
+  *    an existing destination) and umask-applied mode bits. Caveat:
+  *    Hadoop caches one `FileSystem` per scheme per JVM, so the confs
+  *    must be on the builder before anything creates a `file:`
+  *    `FileSystem`; a `getOrCreate` onto an existing context keeps
+  *    Hadoop's classes, which is still correct, only slower. Set only
+  *    where the JVM has the nio `unix` attribute view (not on Windows).
   *
   * [[configure]] layers these onto ANY builder (cluster deployments
   * bring their own master/resources); [[local]] is the local-mode
@@ -47,6 +63,13 @@ object GraftSession {
       // conf: must be set at session build, which is why it lives
       // here and not in any operator.
       .config("spark.sql.codegen.cache.maxEntries", "10000")
+      .config(localFs)
+
+  private val localFs: Map[String, String] =
+    if (!java.nio.file.FileSystems.getDefault.supportedFileAttributeViews.contains("unix")) Map.empty
+    else Map(
+      "spark.hadoop.fs.file.impl" -> classOf[graft.io.NoForkLocalFileSystem].getName,
+      "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[graft.io.NoForkLocalFs].getName)
 
   /** Local-mode session: `cores` threads, shuffle partitions = cores,
     * UI off (the mains' configuration, shared so it cannot drift).

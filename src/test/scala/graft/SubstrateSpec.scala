@@ -136,4 +136,44 @@ class SubstrateSpec extends AnyFunSuite with SparkFixture {
     val p2 = Substrate.materializedDir(spark, "spec_dir", corpus, Nil)(build)
     assert(p2 == p1 && builds == 1, "_SUCCESS-marked dir leaf must not rebuild")
   }
+
+  test("two concurrent writers of one leaf: one publish wins, the loser's temp is gone, both read the same rows") {
+    import java.util.concurrent.{CountDownLatch, CyclicBarrier, Executors, TimeUnit}
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    val corpus = newCorpus("race", 12)
+    val inBuild = new CountDownLatch(1)
+    val bothBuilding = new CyclicBarrier(2)
+    val builds = new java.util.concurrent.atomic.AtomicInteger
+    def build() = {
+      builds.incrementAndGet()
+      inBuild.countDown()
+      bothBuilding.await(60, TimeUnit.SECONDS)
+      plan(corpus)
+    }
+    val pool = Executors.newFixedThreadPool(2)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+    try {
+      val first = Future(Substrate.materialized(spark, "spec_race", corpus, Nil)(build()))
+      // a second JVM has no memo of the first writer's build: drop this
+      // one's so the second writer builds and publishes too
+      assert(inBuild.await(60, TimeUnit.SECONDS))
+      Caches.clearModels()
+      val second = Future(Substrate.materialized(spark, "spec_race", corpus, Nil)(build()))
+      val p1 = Await.result(first, 2.minutes)
+      val p2 = Await.result(second, 2.minutes)
+      assert(builds.get == 2, "both writers must have built a temp leaf")
+      assert(p1 == p2 && Files.exists(Paths.get(p1, "_SUCCESS")))
+      // Rename.NONE refuses the existing leaf: the loser's temp is not
+      // moved inside the winner's, and is deleted
+      val inside = Files.list(Paths.get(p1)).toArray.map(_.asInstanceOf[java.nio.file.Path].getFileName.toString)
+      assert(!inside.exists(n => n.startsWith(".spec_race") || n == "_temporary"),
+        s"debris inside the published leaf: ${inside.toSeq}")
+      val temps = Files.list(Paths.get(p1).getParent).toArray.map(_.toString)
+        .filter(_.contains("/.spec_race"))
+      assert(temps.isEmpty, s"staging leaves left behind: ${temps.toSeq}")
+      val rows = Seq(p1, p2).map(p => spark.read.parquet(p).collect().toSeq)
+      assert(rows(0) == rows(1) && rows(0).map(_.getLong(0)) == Seq(78L))
+    } finally pool.shutdownNow()
+  }
 }
