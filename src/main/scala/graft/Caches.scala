@@ -2,20 +2,31 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 
-/** Explicit lifecycle for operator-internal `cache()` calls.
+/** The per-query release list: everything an operator materializes
+  * beyond its returned plan is created through one of three
+  * registrars, and [[clear]] releases all of it.
   *
-  * The dedup family caches shared scans (hashed shingles, simhash
-  * signatures) and the connected-components fixpoint result — reuse
-  * within one operator invocation is the point, but a returned cached
-  * frame with no owner leaks one in-memory relation per call. Every
-  * operator cache is therefore created through [[cached]], and every
-  * entry-point main (Verify, Bench, Plans, StageProf) calls [[clear]]
-  * between queries so no relation outlives the query that built it. Library users embed
-  * the same call at their own batch boundaries.
+  *  - [[cached]]: a `cache()`d shared scan (hashed shingles, simhash
+  *    signatures, symmetric edge lists), unpersisted at [[clear]].
+  *  - [[roundCheckpoint]]: one round of an iterative fixpoint loop.
+  *    Loops free each predecessor early with [[unpersistRound]]; the
+  *    final round backs the returned plan and is freed at [[clear]].
+  *  - [[scratchDir]]: a per-query temp dir (an extract landing dir, a
+  *    streaming sink and checkpoint), deleted at [[clear]].
+  *
+  * Every entry-point main (Verify, Bench, Plans, StageProf) calls
+  * [[clear]] between queries so nothing outlives the query that built
+  * it. Library users embed the same call at their own batch
+  * boundaries. The model memo ([[model]]) is separate: it is
+  * session-lifetime driver state, not per-query.
   */
 object Caches {
-  private val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-  private val cleanups = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
+  // Keyed by what each release frees, so freeing a round early drops
+  // its entry and the list holds at most one round generation per loop.
+  private val releases = scala.collection.mutable.LinkedHashMap.empty[AnyRef, () => Unit]
+
+  private def register(key: AnyRef)(release: => Unit): Unit =
+    synchronized { releases(key) = () => release }
 
   /** Round materialization for iterative operators (connected
     * components, PageRank): eager local checkpoint by default —
@@ -23,9 +34,14 @@ object Caches {
     * per round — or reliable `checkpoint()` when `reliable` (requires
     * the session's checkpoint dir; survives executor loss on a real
     * cluster, where local checkpoint blocks die with their executor).
+    * The round's blocks are released by [[unpersistRound]] or, at the
+    * latest, by [[clear]].
     */
-  def roundCheckpoint(df: DataFrame, reliable: Boolean): DataFrame =
-    if (reliable) df.checkpoint(true) else df.localCheckpoint(true)
+  def roundCheckpoint(df: DataFrame, reliable: Boolean): DataFrame = {
+    val round = if (reliable) df.checkpoint(true) else df.localCheckpoint(true)
+    roundRdd(round).foreach(rdd => register(rdd)(rdd.unpersist(false)))
+    round
+  }
 
   /** Run an iterative fixpoint loop (PageRank, label propagation,
     * connected components, BFS, k-core peel) with adaptive execution
@@ -60,26 +76,60 @@ object Caches {
     }
   }
 
-  /** Free a checkpointed round's materialized blocks (call once its
-    * successor exists; the final round should instead be registered
-    * via [[onClear]]). The checkpointed frame's plan is exactly a
-    * LogicalRDD over the persisted RDD; a reliable-checkpoint RDD
-    * holds no block-manager blocks, so unpersist is a harmless no-op
-    * there. If a future Spark stops exposing the bare LogicalRDD this
-    * silently becomes a no-op — acceptable (blocks then live until
-    * [[clear]]), but keep the match in ONE place so a fix reaches
-    * every iterator.
+  /** Free a checkpointed round's materialized blocks now, once its
+    * successor exists, and drop it from the [[clear]] list. A
+    * reliable-checkpoint RDD holds no block-manager blocks, so this
+    * is a harmless no-op there.
     */
-  def unpersistRound(df: DataFrame): Unit = df.queryExecution.logical match {
-    case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
-    case _ => ()
+  def unpersistRound(df: DataFrame): Unit = roundRdd(df).foreach { rdd =>
+    rdd.unpersist(false)
+    synchronized { releases -= rdd }
   }
 
+  /** The RDD behind a checkpointed round: its plan is exactly a
+    * LogicalRDD over the persisted RDD. If a future Spark stops
+    * exposing the bare LogicalRDD, rounds are simply never freed —
+    * keep the match in ONE place so a fix reaches every loop.
+    */
+  private def roundRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
+    df.queryExecution.logical match {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => Some(lr.rdd)
+      case _ => None
+    }
+
   /** Cache `df` and register it for the next [[clear]]. */
-  def cached(df: DataFrame): DataFrame = synchronized {
+  def cached(df: DataFrame): DataFrame = {
     df.cache()
-    frames += df
+    // BLOCKING unpersist (r21): with blocking=false the removal is
+    // async on the BlockManagerMaster, so a caller that immediately
+    // re-caches (Bench's pass loop, any re-invoked operator) stacks
+    // fresh blocks on top of zombie ones still awaiting cleanup —
+    // storage memory fills, MEMORY_AND_DISK starts evicting to disk,
+    // and on a slow-disk host each successive pass gets slower (the
+    // r20 driver record's assoc_rules grew 8.4→32 s across four
+    // in-process passes with zero recompiles and no GC signature —
+    // exactly an accumulating-state curve). Blocking waits only for
+    // block drop (milliseconds locally) and makes the memory state
+    // deterministic at every clear().
+    register(df)(df.unpersist(true))
     df
+  }
+
+  /** Create a fresh temp dir named `prefix…` for a result that is read
+    * lazily after the operator returns (so it cannot be deleted in a
+    * `finally`), and register it for deletion at the next [[clear]].
+    */
+  def scratchDir(prefix: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    register(dir)(deleteTree(dir))
+    dir.toString
+  }
+
+  private def deleteTree(root: java.nio.file.Path): Unit = {
+    val walk = java.nio.file.Files.walk(root)
+    try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+      .forEach(p => java.nio.file.Files.deleteIfExists(p))
+    finally walk.close()
   }
 
   private val models =
@@ -131,38 +181,18 @@ object Caches {
     */
   def modelMissCount: Int = modelMisses.get()
 
-  /** Register a cleanup thunk to run at the next [[clear]] — for
-    * materializations `DataFrame.unpersist` cannot reach (e.g. the
-    * RDD behind a checkpointed frame, which the cache manager does
-    * not track). Must be idempotent and non-throwing.
+  /** Run every registered release: unpersist cached frames
+    * (BLOCKING), free final rounds, delete scratch dirs. Best-effort
+    * per release — one that throws (a lost block-drop RPC, a scratch
+    * dir a /tmp reaper already took) never stops the rest, and
+    * [[clear]] itself never throws.
     */
-  def onClear(f: () => Unit): Unit = synchronized { cleanups += f }
-
-  /** Unpersist (BLOCKING, best-effort) every registered frame and run
-    * every registered cleanup. Idempotent: frames already unpersisted
-    * by their operator are a no-op. Never throws from the unpersist
-    * path — a removal failure degrades to the old async behaviour.
-    */
-  def clear(): Unit = synchronized {
-    // BLOCKING unpersist (r21): with blocking=false the removal is
-    // async on the BlockManagerMaster, so a caller that immediately
-    // re-caches (Bench's pass loop, any re-invoked operator) stacks
-    // fresh blocks on top of zombie ones still awaiting cleanup —
-    // storage memory fills, MEMORY_AND_DISK starts evicting to disk,
-    // and on a slow-disk host each successive pass gets slower (the
-    // r20 driver record's assoc_rules grew 8.4→32 s across four
-    // in-process passes with zero recompiles and no GC signature —
-    // exactly an accumulating-state curve). Blocking waits only for
-    // block drop (milliseconds locally) and makes the memory state
-    // deterministic at every clear(). The wait can surface RPC
-    // failures (executor lost on a real cluster) that fire-and-forget
-    // never did — swallowed per frame, because clear() is a
-    // boundary-hygiene call and its callers (Bench's pass loop, batch
-    // drivers) must not die on a failed block drop.
-    frames.foreach(f => try f.unpersist(true)
-                        catch { case _: Exception => () })
-    frames.clear()
-    cleanups.foreach(f => f())
-    cleanups.clear()
+  def clear(): Unit = {
+    val pending = synchronized {
+      val all = releases.values.toList
+      releases.clear()
+      all
+    }
+    pending.foreach(release => try release() catch { case _: Exception => () })
   }
 }

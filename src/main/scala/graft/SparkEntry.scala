@@ -4533,7 +4533,6 @@ object SparkEntry {
     val n = fit.iters
     val k = fit.cids.length
     val dim = fit.centroidMicro.head.length
-    val uCols = (1 to dim).map(j => s"u$j").mkString(", ")
     def sumU(j: Int) =
       s"""CAST(CASE WHEN SUM(CAST(FLOOR(1000000 * CAST(e.embedding[$j] AS DOUBLE)) AS BIGINT)) >= 0
                THEN SUM(CAST(FLOOR(1000000 * CAST(e.embedding[$j] AS DOUBLE)) AS BIGINT)) // COUNT(*)
@@ -4696,10 +4695,6 @@ object SparkEntry {
       s"(CASE WHEN $x < 0 THEN CAST($x AS HUGEINT) + $T64 ELSE CAST($x AS HUGEINT) END)"
     def xorShr(col: String, n: Int): String =
       toUnsigned(s"xor(${toSigned(col)}, CAST($col // ${BigInt(1) << n} AS BIGINT))")
-    def xorC(col: String, c: BigInt): String = {
-      val sc = if (c >= (BigInt(1) << 63)) c - M else c
-      toUnsigned(s"xor(${toSigned(col)}, CAST($sc AS BIGINT))")
-    }
     def xorCols(a: String, b: String): String =
       toUnsigned(s"xor(${toSigned(a)}, ${toSigned(b)})")
 

@@ -100,9 +100,9 @@ case class MinHashSig(child: Expression, nPerms: Int, seed: Long = 42L)
   * multi-column function). Output: array<long> of length `nBands`,
   * pair it with `posexplode` for (band_idx, band_hash).
   *
-  * Exists because composing `bandHashes(minhashSignature(c))` as
-  * column expressions duplicates the signature expression into every
-  * `element_at` — measured ~64× recompute of the MinHash scan per row
+  * Exists because banding a `minhashSignature(c)` expression with
+  * per-band `element_at` column expressions duplicates the signature
+  * expression into every `element_at` — measured ~64× recompute of the MinHash scan per row
   * at sf0.1 (neither CollapseProject's expensive-expression guard nor
   * codegen subexpression elimination reliably prevents it inside a
   * single `array(struct(...))` tree). A banded signature is also what

@@ -119,10 +119,4 @@ object TextFunctions {
     */
   def fingerprintKey(c: Column): Column =
     array_join(array_sort(array_distinct(tokens(c))), " ")
-
-  /** 64-bit hash of the fingerprint key — what actually shuffles at
-    * 100 TB (8 bytes/doc instead of the full key). Not oracle-compared
-    * (engine-specific hash); exercised in ScalaTest.
-    */
-  def fingerprint64(c: Column): Column = xxhash64(fingerprintKey(c))
 }

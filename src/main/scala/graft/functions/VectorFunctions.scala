@@ -30,54 +30,12 @@ object VectorFunctions {
     when(d === 0.0, 0.0).otherwise(dot(a, b) / d)
   }
 
-  /** Deterministic pseudo-random hyperplane component r(plane, j) in
-    * [-1, 1], derived from xxhash64 so every executor materializes the
-    * same planes with no broadcast state.
-    */
-  private def planeComponent(plane: Int, j: Column): Column =
-    (pmod(xxhash64(lit(plane), j), lit(2000001L)) - lit(1000000L)) / 1000000.0
-
-  /** Projection of `vec` onto pseudo-random hyperplane `plane`. */
-  def hyperplaneProjection(vec: Column, plane: Int): Column =
-    aggregate(
-      transform(vec, (v, j) => v.cast("double") * planeComponent(plane, j)),
-      lit(0.0), (acc, x) => acc + x)
-
-  /** `nBits`-bit random-hyperplane LSH signature packed into a long:
-    * bit b = sign of the projection onto plane b. Vectors with high
-    * cosine similarity agree on most bits (SRP-LSH, Charikar 2002), so
-    * equal-signature bucketing groups near-duplicates.
-    */
-  def hyperplaneSignature(vec: Column, nBits: Int): Column = {
-    require(nBits >= 1 && nBits <= 63, s"nBits must be in [1,63], got $nBits")
-    (0 until nBits)
-      .map(b => shiftleft(when(hyperplaneProjection(vec, b) >= 0.0, 1L).otherwise(0L), b))
-      .reduce(_ bitwiseOR _)
-  }
-
-  /** OR-amplified SRP-LSH banding: `nBands` independent band keys, band
-    * b being a `bitsPerBand`-bit signature over planes
-    * [b·bitsPerBand, (b+1)·bitsPerBand). Two vectors at angle θ share a
-    * given band w.p. (1-θ/π)^bitsPerBand and are candidates if ANY band
-    * matches — recall 1-(1-p^r)^b, tuned via (b, r) to the corpus's
-    * similarity profile. Returns array<struct<band_idx, band_hash>>
-    * ready for `explode` → equi-join; only these fixed-width keys ever
-    * shuffle, never embeddings by construction of the callers.
-    */
-  def bandSignatures(vec: Column, nBands: Int, bitsPerBand: Int): Column =
-    array((0 until nBands).map { b =>
-      struct(
-        lit(b).as("band_idx"),
-        (0 until bitsPerBand)
-          .map(j => shiftleft(
-            when(hyperplaneProjection(vec, b * bitsPerBand + j) >= 0.0, 1L).otherwise(0L), j))
-          .reduce(_ bitwiseOR _).as("band_hash"))
-    }: _*)
-
-  /** Slice a packed `nBands·bitsPerBand`-bit signature long (e.g. from
-    * the codegen'd `graft_srp_sig`) into the same
-    * array<struct<band_idx, band_hash>> shape as [[bandSignatures]] —
-    * compute the signature ONCE per row, band it for free.
+  /** Slice a packed `nBands·bitsPerBand`-bit SRP-LSH signature long
+    * (from the codegen'd `graft_srp_sig`) into `nBands` band keys,
+    * band b being bits [b·bitsPerBand, (b+1)·bitsPerBand): compute the
+    * signature ONCE per row, band it for free. Returns
+    * array<struct<band_idx, band_hash>> ready for `explode` →
+    * equi-join.
     */
   def sliceBands(sig: Column, nBands: Int, bitsPerBand: Int): Column = {
     require(nBands * bitsPerBand <= 63, s"$nBands bands x $bitsPerBand bits exceeds 63")

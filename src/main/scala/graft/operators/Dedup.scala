@@ -70,26 +70,6 @@ object Dedup {
   def minhashSignature(shingleCol: Column, nPerms: Int): Column =
     call_function("graft_minhash", shingleCol, lit(nPerms))
 
-  /** LSH banding: split a minhash signature into `nBands` bands of
-    * `rowsPerBand` and hash each band. Docs agreeing on ANY band become
-    * candidates — the (band_idx, band_hash) pair is the shuffle key.
-    *
-    * NOTE for the hot path: do NOT feed this a signature EXPRESSION —
-    * composed as `bandHashes(minhashSignature(c))` the signature is
-    * duplicated into every `element_at` and recomputed per band
-    * (measured ~64× at sf0.1). The operators below use the fused
-    * [[graft.functions.MinHashBands]] (`graft_minhash_bands`) instead;
-    * this form remains for banding an already-materialized signature
-    * column.
-    */
-  def bandHashes(sigCol: Column, nBands: Int, rowsPerBand: Int): Column =
-    array((0 until nBands).map { b =>
-      struct(
-        lit(b).as("band_idx"),
-        xxhash64((0 until rowsPerBand)
-          .map(r => element_at(sigCol, b * rowsPerBand + r + 1)): _*).as("band_hash"))
-    }: _*)
-
   /** Exact Jaccard similarity of two array columns as floor(1000*j)
     * (integer output: engine-neutral, no float-compare hazards).
     */
@@ -256,13 +236,6 @@ object Dedup {
     if (sym.isEmpty)
       return ids.select(col(id), col(id).as(repCol), lit(false).as("is_dup")).orderBy(id)
 
-    // Round lifecycle shared with GraphOps.pageRank — see
-    // Caches.roundCheckpoint / Caches.unpersistRound.
-    def checkpointed(df: DataFrame): DataFrame =
-      graft.Caches.roundCheckpoint(df, reliable)
-    def unpersistRound(df: DataFrame): Unit =
-      graft.Caches.unpersistRound(df)
-
     // Round 0 fuses the first neighbor-min into label init: the touched
     // vertex set is sym's group-by spine anyway, so labeling each vertex
     // least(id, min neighbor) costs the same one aggregate as a plain
@@ -277,9 +250,9 @@ object Dedup {
     // sides are LogicalRDDs the static planner cannot size, so AQE's
     // runtime broadcast of the node-scale sides is load-bearing here
     // (r22 A/B at sf0.1/32: 4.0 s adaptive vs 12.4 s static).
-    var kept = checkpointed(sym.groupBy(col("a").as(id))
+    var kept = graft.Caches.roundCheckpoint(sym.groupBy(col("a").as(id))
       .agg(min(col("b")).as("nbr0"))
-      .select(col(id), least(col(id), col("nbr0")).as(repCol)))
+      .select(col(id), least(col(id), col("nbr0")).as(repCol)), reliable)
     var cur = kept
     var i = 0
     var changed = true
@@ -289,7 +262,7 @@ object Dedup {
       val par2 = cur.select(col(id).as("q_id"), col(repCol).as("q_rep"))
       val nbrMin = sym.join(lbl, col("b") === col("l_id"))
         .groupBy(col("a")).agg(min("l_rep").as("nbr_rep"))
-      val next = checkpointed(
+      val next = graft.Caches.roundCheckpoint(
         cur.join(nbrMin, col(id) === col("a"), "left")
           .select(col(id), col(repCol).as("old_rep"),
                   least(col(repCol), coalesce(col("nbr_rep"), col(repCol))).as("rep1"))
@@ -299,19 +272,17 @@ object Dedup {
           .join(par2, col("rep2") === col("q_id"), "left")
           .select(col(id), col("old_rep"),
                   least(col("rep2"), coalesce(col("q_rep"), col("rep2"))).as(repCol))
-          .select(col(id), col(repCol), (col(repCol) =!= col("old_rep")).as("changed")))
+          .select(col(id), col(repCol), (col(repCol) =!= col("old_rep")).as("changed")),
+        reliable)
       // Cheap aggregate over the materialized checkpoint.
       changed = next.agg(coalesce(max(col("changed")), lit(false))).head().getBoolean(0)
-      unpersistRound(kept)
+      graft.Caches.unpersistRound(kept)
       kept = next
       cur = next.select(col(id), col(repCol))
       i += 1
     }
-    // The final round must stay materialized until the caller consumes
-    // the result; hand its blocks to the Caches lifecycle (freed at the
-    // same batch boundary as the operator's cached scans).
-    val lastRound = kept
-    graft.Caches.onClear(() => unpersistRound(lastRound))
+    // The final round stays registered: it backs the returned plan
+    // until the caller's clear().
     ids.join(cur, Seq(id), "left")
       .select(col(id), coalesce(col(repCol), col(id)).as(repCol))
       .withColumn("is_dup", col(repCol) =!= col(id))

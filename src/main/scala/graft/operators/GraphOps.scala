@@ -92,7 +92,6 @@ object GraphOps {
       }
       ranks
     }
-    graft.Caches.onClear(() => graft.Caches.unpersistRound(lastRound))
     lastRound.orderBy("node")
   }
 
@@ -541,16 +540,7 @@ object GraphOps {
     }
     // The final merged settled set (and the last frontier, a distinct
     // checkpoint when the loop exited with growth) back the RETURNED
-    // plan, so they cannot be freed here — register them for the
-    // caller's batch-boundary clear() instead, the same final-round
-    // contract as [[labelPropagation]]/[[pageRank]]: no checkpoint
-    // block outlives the query that built it.
-    val lastDist = dist
-    val lastFrontier = frontier
-    graft.Caches.onClear { () =>
-      graft.Caches.unpersistRound(lastDist)
-      graft.Caches.unpersistRound(lastFrontier)
-    }
+    // plan, so they stay registered for the caller's clear().
     nodes.join(dist, nodes("part_key") === dist("node"), "left")
       .select(col("part_key"), col("hops"))
       .orderBy("part_key")
@@ -632,7 +622,6 @@ object GraphOps {
     val labelsInit = graft.Caches.staticRounds(s) {
       graft.Caches.roundCheckpoint(nodes, reliable = false)
     }
-    graft.Caches.onClear(() => graft.Caches.unpersistRound(labelsInit))
     var labels: DataFrame =
       labelsInit.select(col("node"), col("node").as("label"))
     // DELTA-FRONTIER rounds (r19): synchronous LP's update for node v
@@ -706,8 +695,6 @@ object GraphOps {
         labels = if (track) next.select("node", "label") else next
       }
     }
-    val last = curCp
-    graft.Caches.onClear(() => last.foreach(graft.Caches.unpersistRound))
     val sizes = labels.groupBy("label").agg(count(lit(1)).as("community_size"))
     labels.join(Hints.maybeBroadcast(sizes), "label")
       .select(col("node").as("part_key"), col("label").as("community"),
@@ -918,8 +905,6 @@ object GraphOps {
         nAlive = nNext
       }
     }
-    val last = alive
-    graft.Caches.onClear(() => graft.Caches.unpersistRound(last))
     alive.select(col("node").as("part_key"), col("core_degree"))
       .orderBy("part_key")
   }

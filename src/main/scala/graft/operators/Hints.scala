@@ -27,13 +27,6 @@ import org.apache.spark.sql.functions.broadcast
   */
 object Hints {
 
-  /** Session conf key overriding the hint threshold (bytes, or a
-    * "10MB"-style size string; negative disables the hint entirely).
-    * Defaults to the session's `spark.sql.autoBroadcastJoinThreshold`
-    * so the hint never promises more than the session itself would.
-    */
-  val ThresholdKey = "spark.graft.broadcastDimThreshold"
-
   private[operators] def parseBytes(v: String): Long = {
     val t = v.trim
     try t.toLong
@@ -43,12 +36,13 @@ object Hints {
   }
 
   /** `broadcast(df)` if the plan-estimated size of `df` is within the
-    * threshold (see [[ThresholdKey]]); `df` unchanged otherwise.
+    * session's `spark.sql.autoBroadcastJoinThreshold` (negative
+    * disables the hint), so the hint never promises more than the
+    * session itself would; `df` unchanged otherwise.
     */
   def maybeBroadcast(df: DataFrame): DataFrame = {
-    val conf = df.sparkSession.conf
     val thr = parseBytes(
-      conf.get(ThresholdKey, conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")))
+      df.sparkSession.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760"))
     if (thr >= 0 && df.queryExecution.optimizedPlan.stats.sizeInBytes <= thr) broadcast(df)
     else df
   }

@@ -1400,7 +1400,6 @@ object Similarity {
     */
   def embeddingTopPc(s: SparkSession, dir: String, iters: Int = 8): DataFrame = {
     require(iters >= 1 && iters <= 32, s"iters $iters out of range")
-    import s.implicits._
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     val xq = Tables.embeddings(s, dir).select(col("vec_id"),
       expr("transform(embedding, e -> CAST(FLOOR(e * CAST(1000000 AS DOUBLE)) AS BIGINT))")

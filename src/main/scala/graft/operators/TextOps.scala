@@ -359,11 +359,6 @@ object TextOps {
       .orderBy("term", "posting_rank")
   }
 
-  /** Canonical fingerprint key per document (sorted distinct tokens).
-    * The 64-bit hash variant ([[graft.functions.TextFunctions.fingerprint64]])
-    * is what a 100 TB dedup would shuffle; the string key is emitted
-    * here because it is engine-neutral and oracle-checkable.
-    */
   /** PII patterns over normalized (lowercased) text, applied in a fixed
     * sequence so counts never overlap: emails first, then phone-shaped
     * digit runs, then any remaining ≥5-digit run. Kept inside the
@@ -492,6 +487,10 @@ object TextOps {
       .orderBy("doc_id")
   }
 
+  /** Canonical fingerprint key per document (sorted distinct tokens),
+    * emitted as the string key because it is engine-neutral and
+    * oracle-checkable.
+    */
   def textFingerprint(s: SparkSession, dir: String): DataFrame = {
     Tables.documents(s, dir)
       .select(

@@ -143,31 +143,11 @@ object TrainingOps {
     s.conf.set(key,
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
-      val out  = java.nio.file.Files.createTempDirectory("graft_tws_out").toString
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_tws_ckpt").toString
-      // Both dirs are per-invocation scratch (ADVICE r20: bench passes
-      // plus gate runs were accumulating RocksDB/parquet debris in
-      // /tmp). The sink dir must outlive this call — the returned
-      // frame reads it lazily — so cleanup rides the standard
-      // Caches.clear() lifecycle (Bench/Verify/Plans run it after
-      // every key), not a finally block.
-      // Whole body best-effort: Caches.onClear callbacks must never
-      // throw (a traversal race with a /tmp reaper would otherwise
-      // propagate out of Caches.clear() at the start of the NEXT
-      // bench pass and abort the whole sweep). Leftover scratch on a
-      // lost race is exactly as harmless as the pre-cleanup state.
-      def rmRf(p: String): Unit = try {
-        import scala.jdk.CollectionConverters._
-        val root = java.nio.file.Paths.get(p)
-        if (java.nio.file.Files.exists(root)) {
-          val walk = java.nio.file.Files.walk(root)
-          try walk.iterator().asScala.toSeq.reverseIterator
-            .foreach(f => try java.nio.file.Files.deleteIfExists(f)
-                          catch { case _: java.io.IOException => () })
-          finally walk.close()
-        }
-      } catch { case _: Exception => () }
-      graft.Caches.onClear(() => { rmRf(out); rmRf(ckpt) })
+      // Per-invocation scratch, deleted at Caches.clear(): the sink
+      // dir must outlive this call because the returned frame reads it
+      // lazily.
+      val out  = graft.Caches.scratchDir("graft_tws_out")
+      val ckpt = graft.Caches.scratchDir("graft_tws_ckpt")
       val docPath = s"$dir/documents.parquet"
       // the file-stream source requires a DIRECTORY base path: a
       // Spark-written table (documents.parquet/ a dir of parts)
@@ -504,8 +484,6 @@ object TrainingOps {
         rank += 1
       }
     }
-    val lastRound = words
-    graft.Caches.onClear(() => graft.Caches.unpersistRound(lastRound))
     merges.toSeq.toDF("merge_rank", "left", "right", "pair_count")
       .orderBy("merge_rank")
   }

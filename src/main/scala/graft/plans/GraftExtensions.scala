@@ -167,12 +167,6 @@ object GraftFunctions {
     }
   }
 
-  /** Codegen'd cosine similarity over two array<float> columns. */
-  def cosineFast(s: SparkSession, a: Column, b: Column): Column = {
-    ensureRegistered(s)
-    call_function("graft_cosine", a, b)
-  }
-
   /** Codegen'd `nBits`-bit SRP signature of an array<float> column.
     * `maxDim` must cover the embedding width — wider vectors fail the
     * task rather than silently truncating.

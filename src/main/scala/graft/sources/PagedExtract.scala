@@ -158,16 +158,18 @@ object PagedExtract {
   private val PageFileName = """page_(\d{5,})\.jsonl""".r
 
   /** Page numbers already committed under `landingDir`. */
-  def landedPages(s: SparkSession, landingDir: String): Set[Int] = {
+  def landedPages(s: SparkSession, landingDir: String): Set[Int] =
+    landedIds(s, landingDir, PageFileName).map(_.toInt).toSet
+
+  /** The ids that `fileName`'s one group captures from the committed
+    * file names directly under `landingDir` (none if it is absent). */
+  private def landedIds(s: SparkSession, landingDir: String,
+                        fileName: scala.util.matching.Regex): Set[String] = {
     val path = new org.apache.hadoop.fs.Path(landingDir)
     val fs = path.getFileSystem(s.sparkContext.hadoopConfiguration)
     if (!fs.exists(path)) Set.empty
-    else fs.listStatus(path).iterator.flatMap { st =>
-      st.getPath.getName match {
-        case PageFileName(n) => Some(n.toInt)
-        case _               => None
-      }
-    }.toSet
+    else fs.listStatus(path).iterator.map(_.getPath.getName)
+      .collect { case fileName(id) => id }.toSet
   }
 
   /** Distributed landing for the known-page-count case: once
@@ -340,17 +342,8 @@ object PagedExtract {
   private val KeyFileName = """key_(-?\d+)\.jsonl""".r
 
   /** Parent keys already committed under `landingDir`. */
-  def landedKeys(s: SparkSession, landingDir: String): Set[Long] = {
-    val path = new org.apache.hadoop.fs.Path(landingDir)
-    val fs = path.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(path)) Set.empty
-    else fs.listStatus(path).iterator.flatMap { st =>
-      st.getPath.getName match {
-        case KeyFileName(n) => Some(n.toLong)
-        case _              => None
-      }
-    }.toSet
-  }
+  def landedKeys(s: SparkSession, landingDir: String): Set[Long] =
+    landedIds(s, landingDir, KeyFileName).map(_.toLong).toSet
 
   /** Distributed per-parent-key detail fetch with the same
     * atomic-landing / resume / retry / rate-limit discipline as
@@ -381,7 +374,6 @@ object PagedExtract {
       "keyed-extract knobs must be non-negative (parallelism positive)")
     require(parentKeys.columns.length == 1,
       s"parentKeys must be a single key column, got ${parentKeys.columns.mkString(", ")}")
-    import org.apache.spark.sql.functions.col
     import s.implicits._
     val already = landedKeys(s, landingDir)
     val keyCol = requireLongKeys(parentKeys)
@@ -451,17 +443,8 @@ object PagedExtract {
   private val RangeFileName = """range_(-?\d+)\.jsonl""".r
 
   /** Range-unit ids already committed under `landingDir`. */
-  def landedRanges(s: SparkSession, landingDir: String): Set[Long] = {
-    val path = new org.apache.hadoop.fs.Path(landingDir)
-    val fs = path.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(path)) Set.empty
-    else fs.listStatus(path).iterator.flatMap { st =>
-      st.getPath.getName match {
-        case RangeFileName(n) => Some(n.toLong)
-        case _                => None
-      }
-    }.toSet
-  }
+  def landedRanges(s: SparkSession, landingDir: String): Set[Long] =
+    landedIds(s, landingDir, RangeFileName).map(_.toLong).toSet
 
   /** [[landKeyed]] at RANGE-UNIT granularity — the documented scale
     * path past file-per-key's ~10⁶-key checkpoint ceiling: parent
@@ -501,7 +484,7 @@ object PagedExtract {
     require(rangeWidth > 0, s"rangeWidth must be positive, got $rangeWidth")
     require(parallelism > 0 && maxRetries >= 0 && backoffMs >= 0 && minFetchIntervalMs >= 0,
       "keyed-extract knobs must be non-negative (parallelism positive)")
-    import org.apache.spark.sql.functions.{col, collect_list, expr, lit, pmod, sort_array}
+    import org.apache.spark.sql.functions.{col, collect_list, expr, sort_array}
     import s.implicits._
     val keyCol = requireLongKeys(parentKeys)
     val already = landedRanges(s, landingDir)
@@ -696,14 +679,6 @@ object PagedExtract {
     ((n + pageSize - 1) / pageSize).toInt
   }
 
-  /** End-to-end demo for the driver contract: page the documents table
-    * into a [[FilePageApi]] store (`pageSize` docs per page, 1-based),
-    * [[land]] it distributed, read the landing dir back. The oracle
-    * recomputes each doc's page as its doc_id-ordered rank div
-    * `pageSize` — pure SQL, so the whole extract→land→read loop is
-    * hash-verified against DuckDB. Driver memory stays O(1): the store
-    * build is a distributed write and every fetch touches one page.
-    */
   /** Name of the keyed store's manifest: one parent key per line for
     * every key that HAS details. Written at store build; read by
     * [[FileKeyedApi]] to make "no details" and "store not visible"
@@ -761,13 +736,7 @@ object PagedExtract {
   def demoKeyedExtract(s: SparkSession, dir: String): DataFrame = {
     requireLocalSubstrate()
     val store = keyedDemoStore(s, dir)
-    val landing = Files.createTempDirectory("graft_kextract").toString
-    graft.Caches.onClear { () =>
-      def rm(p: java.io.File): Unit = {
-        Option(p.listFiles).foreach(_.foreach(rm)); p.delete(); ()
-      }
-      rm(new java.io.File(landing))
-    }
+    val landing = graft.Caches.scratchDir("graft_kextract")
     val report = landKeyed(s, keyedDemoParents(s, dir), new FileKeyedApi(store), landing)
     require(report.ok, s"demo keyed extract lost keys: ${report.failed}")
     readLandedKeys(s, landing, keyedDemoSchema)
@@ -792,13 +761,7 @@ object PagedExtract {
   def demoRangedExtract(s: SparkSession, dir: String): DataFrame = {
     requireLocalSubstrate()
     val store = keyedDemoStore(s, dir)
-    val landing = Files.createTempDirectory("graft_rextract").toString
-    graft.Caches.onClear { () =>
-      def rm(p: java.io.File): Unit = {
-        Option(p.listFiles).foreach(_.foreach(rm)); p.delete(); ()
-      }
-      rm(new java.io.File(landing))
-    }
+    val landing = graft.Caches.scratchDir("graft_rextract")
     val report = landKeyedRanges(s, keyedDemoParents(s, dir),
       new FileKeyedApi(store), landing, rangeWidth = 64)
     require(report.ok, s"demo ranged extract lost units: ${report.failed}")
@@ -846,17 +809,6 @@ object PagedExtract {
     StructField("day", LongType), StructField("event_id", LongType),
     StructField("user_id", LongType), StructField("event_type", StringType)))
 
-  /** End-to-end demo of [[landIncremental]] for the driver contract:
-    * the events table becomes a day-partitioned remote store (a
-    * `/exports/{day}`-style endpoint via [[FileKeyedApi]]), then TWO
-    * scheduled runs execute — the first sees only the earliest 60% of
-    * days, the second sees everything. The incremental contract is
-    * asserted IN the operator: run 2 must fetch exactly the late days
-    * and must skip every early day by WATERMARK (not by file probe).
-    * The landing dir read back is the full table, so the oracle — a
-    * straight events projection — hash-verifies store build + two
-    * incremental runs + checkpoint round-trip end to end.
-    */
   /** The demo stores are Substrate leaves read back with plain
     * java.io ([[FilePageApi]]/[[FileKeyedApi]] — they ARE the
     * simulated remote system, local by construction), so a non-local
@@ -874,6 +826,17 @@ object PagedExtract {
         "support a LOCAL substrate dir (no scheme, or file://)")
     }
 
+  /** End-to-end demo of [[landIncremental]] for the driver contract:
+    * the events table becomes a day-partitioned remote store (a
+    * `/exports/{day}`-style endpoint via [[FileKeyedApi]]), then TWO
+    * scheduled runs execute — the first sees only the earliest 60% of
+    * days, the second sees everything. The incremental contract is
+    * asserted IN the operator: run 2 must fetch exactly the late days
+    * and must skip every early day by WATERMARK (not by file probe).
+    * The landing dir read back is the full table, so the oracle — a
+    * straight events projection — hash-verifies store build + two
+    * incremental runs + checkpoint round-trip end to end.
+    */
   def demoIncrementalExtract(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr}
     requireLocalSubstrate()
@@ -893,13 +856,7 @@ object PagedExtract {
         ds.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
       ()
     }
-    val landing = Files.createTempDirectory("graft_iextract").toString
-    graft.Caches.onClear { () =>
-      def rm(p: java.io.File): Unit = {
-        Option(p.listFiles).foreach(_.foreach(rm)); p.delete(); ()
-      }
-      rm(new java.io.File(landing))
-    }
+    val landing = graft.Caches.scratchDir("graft_iextract")
     val days: Seq[Long] =
       Files.readAllLines(Paths.get(store, KeysManifest)).asScala
         .filter(_.nonEmpty).map(_.toLong).sorted.toSeq
@@ -918,6 +875,14 @@ object PagedExtract {
       .orderBy("day", "event_id")
   }
 
+  /** End-to-end demo for the driver contract: page the documents table
+    * into a [[FilePageApi]] store (`pageSize` docs per page, 1-based),
+    * [[land]] it distributed, read the landing dir back. The oracle
+    * recomputes each doc's page as its doc_id-ordered rank div
+    * `pageSize` — pure SQL, so the whole extract→land→read loop is
+    * hash-verified against DuckDB. Driver memory stays O(1): the store
+    * build is a distributed write and every fetch touches one page.
+    */
   def demoExtract(s: SparkSession, dir: String, pageSize: Int = 100): DataFrame = {
     requireLocalSubstrate()
     // The SIMULATED REMOTE store is a pure function of (corpus,
@@ -938,18 +903,10 @@ object PagedExtract {
       .getOrElse(Array.empty[java.io.File])
       .count(f => f.isDirectory && f.getName.startsWith("pg="))
     require(nPages > 0, s"page store at $store has no pg= leaves")
-    val landing = Files.createTempDirectory("graft_extract").toString
-    // The landing dir must outlive the (lazy) read below, so tie its
-    // deletion to the operator-cache lifecycle: Bench/tests clear
-    // Caches after materializing each query, which is exactly when the
-    // files are no longer needed. The store is a substrate leaf now —
-    // shared and immutable, never deleted here.
-    graft.Caches.onClear { () =>
-      def rm(p: java.io.File): Unit = {
-        Option(p.listFiles).foreach(_.foreach(rm)); p.delete(); ()
-      }
-      rm(new java.io.File(landing))
-    }
+    val landing = graft.Caches.scratchDir("graft_extract")
+    // The landing dir must outlive the (lazy) read below, so it is a
+    // Caches scratch dir, deleted at the caller's clear(). The store is
+    // a substrate leaf — shared and immutable, never deleted here.
     val report = land(s, new FilePageApi(store, nPages), landing)
     require(report.ok, s"demo extract lost pages: ${report.failed}")
     readLanded(s, landing, demoSchema).orderBy("doc_id")

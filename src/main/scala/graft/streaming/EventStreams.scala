@@ -351,34 +351,48 @@ object EventStreams {
     require(ctxLen > 0 && nShards > 0, "ctxLen and nShards must be positive")
     val s = docs.sparkSession
     import s.implicits._
+    tokenCounted(docs, nShards).groupByKey(_.shard)
+      .flatMapGroupsWithState[Long, PackedDoc](
+        OutputMode.Append, GroupStateTimeout.NoTimeout) {
+        (shard, it, state: GroupState[Long]) =>
+          val (out, off) = packShard(shard, it, state.getOption.getOrElse(0L), ctxLen)
+          state.update(off)
+          out
+      }
+  }
+
+  /** The packers' input: each doc's shard and BPE token count. */
+  private def tokenCounted(docs: DataFrame, nShards: Int): Dataset[TokDoc] = {
     import graft.functions.TextFunctions.{bpeTokenCountOfNorm, normText}
-    val counted = docs
+    docs
       .select(col("doc_id"), normText(col("text")).as("norm"))
       .select(col("doc_id"),
               (col("doc_id") % nShards).cast("int").as("shard"),
               bpeTokenCountOfNorm(col("norm")).as("n_tokens"))
-      .as[TokDoc]
-    counted.groupByKey(_.shard)
-      .flatMapGroupsWithState[Long, PackedDoc](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (shard, it, state: GroupState[Long]) =>
-          var off = state.getOption.getOrElse(0L)
-          val out = it.toArray.sortBy(_.doc_id).map { d =>
-            val start = off
-            off += d.n_tokens
-            val last = if (d.n_tokens == 0) start / ctxLen else (off - 1) / ctxLen
-            PackedDoc(d.doc_id, shard.toLong, d.n_tokens, start / ctxLen, last)
-          }
-          state.update(off)
-          out.iterator
-      }
+      .as[TokDoc](org.apache.spark.sql.Encoders.product[TokDoc])
+  }
+
+  /** The packers' state step: one shard's arrivals in doc_id order,
+    * packed from running token offset `off0`. Returns the packed docs
+    * and the offset to carry into the next micro-batch.
+    */
+  private def packShard(shard: Int, docs: Iterator[TokDoc], off0: Long,
+                        ctxLen: Int): (Iterator[PackedDoc], Long) = {
+    var off = off0
+    val out = docs.toArray.sortBy(_.doc_id).map { d =>
+      val start = off
+      off += d.n_tokens
+      val last = if (d.n_tokens == 0) start / ctxLen else (off - 1) / ctxLen
+      PackedDoc(d.doc_id, shard.toLong, d.n_tokens, start / ctxLen, last)
+    }
+    (out.iterator, off)
   }
 
   /** r19 MIGRATION SPIKE (verdict item 8): [[packSequencesStateful]]
     * re-expressed under Spark 4.x's `transformWithState` — the API
     * that succeeds `mapGroupsWithState`/`flatMapGroupsWithState`. The
     * state loop is IDENTICAL (one ValueState[Long] running token
-    * offset per shard; same sort, same window arithmetic), so
+    * offset per shard; the same [[packShard]] step), so
     * StreamingSpec proving tws == fMGWS == the hash-verified batch
     * twin across micro-batch splits answers the migration question:
     * for this family (cdc / attribution / cusum / pack_sequences —
@@ -399,21 +413,13 @@ object EventStreams {
     require(ctxLen > 0 && nShards > 0, "ctxLen and nShards must be positive")
     val s = docs.sparkSession
     import s.implicits._
-    import graft.functions.TextFunctions.{bpeTokenCountOfNorm, normText}
-    val counted = docs
-      .select(col("doc_id"), normText(col("text")).as("norm"))
-      .select(col("doc_id"),
-              (col("doc_id") % nShards).cast("int").as("shard"),
-              bpeTokenCountOfNorm(col("norm")).as("n_tokens"))
-      .as[TokDoc]
-    counted.groupByKey(_.shard)
+    tokenCounted(docs, nShards).groupByKey(_.shard)
       .transformWithState(new PackSequencesProcessor(ctxLen),
         org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Append())
   }
 
   /** The [[packSequencesStatefulTws]] state loop as a
-    * StatefulProcessor — line-for-line the fMGWS closure with
-    * GroupState swapped for ValueState. */
+    * StatefulProcessor: [[packShard]] with its offset in a ValueState. */
   private[graft] class PackSequencesProcessor(ctxLen: Int)
       extends org.apache.spark.sql.streaming.StatefulProcessor[Int, TokDoc, PackedDoc] {
     import org.apache.spark.sql.streaming.{TimeMode, TimerValues, TTLConfig}
@@ -423,15 +429,10 @@ object EventStreams {
         "off", org.apache.spark.sql.Encoders.scalaLong, TTLConfig.NONE)
     override def handleInputRows(shard: Int, it: Iterator[TokDoc],
                                  tv: TimerValues): Iterator[PackedDoc] = {
-      var off = if (offState.exists()) offState.get() else 0L
-      val out = it.toArray.sortBy(_.doc_id).map { d =>
-        val start = off
-        off += d.n_tokens
-        val last = if (d.n_tokens == 0) start / ctxLen else (off - 1) / ctxLen
-        PackedDoc(d.doc_id, shard.toLong, d.n_tokens, start / ctxLen, last)
-      }
+      val (out, off) =
+        packShard(shard, it, if (offState.exists()) offState.get() else 0L, ctxLen)
       offState.update(off)
-      out.iterator
+      out
     }
   }
 

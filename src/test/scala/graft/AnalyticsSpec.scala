@@ -160,7 +160,6 @@ class AnalyticsSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("gopher filter agrees with hand stats on crafted docs") {
-    import spark.implicits._
     // crafted corpora through the same column pipeline via a temp view
     // is overkill — check threshold logic against the real table
     val out = TextOps.textGopherFilter(spark, sf).cache()
@@ -1064,7 +1063,6 @@ class AnalyticsSpec extends AnyFunSuite with SparkFixture {
     import graft.operators.Analytics
     val out = Analytics.customerRfm(spark, sf).collect()
     assert(out.nonEmpty)
-    val n = out.length
     // each score dimension is a balanced 5-way split (ntile fill rule)
     Seq(4, 5, 6).foreach { i =>
       val sizes = out.groupBy(_.getLong(i)).view.mapValues(_.size)

@@ -15,7 +15,7 @@ class BenchSpec extends AnyFunSuite {
                   queries: Map[String, Double] = Map.empty) = Record(file, sf, degraded, queries)
 
   /** Route a run against a set of records on disk. */
-  private def route(sfDir: String, disk: Seq[Record], filtered: Boolean = false,
+  private def route(sfDir: String, disk: Seq[Record], filtered: Boolean,
                     degraded: Boolean = false, recordOverride: Option[String] = None) = {
     val byFile = disk.map(r => r.file -> r).toMap
     Bench.route(sfDir, filtered, degraded, recordOverride, byFile.get)

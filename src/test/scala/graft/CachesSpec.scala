@@ -1,14 +1,68 @@
 package graft
 
+import java.nio.file.{Files, Paths}
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 
 import org.scalatest.funsuite.AnyFunSuite
+import graft.operators.GraphOps
 
-/** Lifecycle semantics of the model memo: per-key locking (a slow fit
-  * must not serialize unrelated keys), same-key dedupe, and failure
-  * non-caching.
+/** Lifecycle semantics of the per-query release list (what [[Caches.clear]]
+  * frees, and that one failing release never stops the rest) and of the
+  * model memo: per-key locking (a slow fit must not serialize unrelated
+  * keys), same-key dedupe, and failure non-caching.
   */
-class CachesSpec extends AnyFunSuite {
+class CachesSpec extends AnyFunSuite with SparkFixture {
+
+  /** Run `op` between two clear()s and return the persistent RDDs it
+    * added that are still pinned before the second clear(), plus the
+    * ones of those still pinned after it.
+    */
+  private def pinnedAround(op: => Unit) = {
+    val sc = spark.sparkContext
+    Caches.clear()
+    val before = sc.getPersistentRDDs.keySet
+    op
+    val pinned = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }.values.toSeq
+    Caches.clear()
+    (pinned, sc.getPersistentRDDs.keySet.intersect(pinned.map(_.id).toSet))
+  }
+
+  test("pageRank pins its cached inputs plus one round until clear(), not one per round") {
+    val (pinned, left) = pinnedAround(GraphOps.pageRank(spark, sf, iters = 4))
+    assert(pinned.count(_.isCheckpointed) == 1,
+      s"expected the final round only, got ${pinned.map(r => r.id -> r.isCheckpointed)}")
+    assert(pinned.exists(!_.isCheckpointed), "the cached nodes/edges inputs were not pinned")
+    assert(left.isEmpty, s"clear() left RDDs $left pinned")
+  }
+
+  test("connectedComponents pins its cached inputs plus one round until clear()") {
+    val (pinned, left) = pinnedAround(GraphOps.graphComponents(spark, sf))
+    assert(pinned.count(_.isCheckpointed) == 1,
+      s"expected the final round only, got ${pinned.map(r => r.id -> r.isCheckpointed)}")
+    assert(pinned.exists(!_.isCheckpointed), "the cached edge list was not pinned")
+    assert(left.isEmpty, s"clear() left RDDs $left pinned")
+  }
+
+  test("scratchDir exists until clear() and is gone after") {
+    val dir = Caches.scratchDir("caches-spec")
+    Files.createDirectories(Paths.get(dir, "sub"))
+    Files.write(Paths.get(dir, "sub", "part-0"), Array[Byte](1, 2, 3))
+    assert(Files.isDirectory(Paths.get(dir)))
+    Caches.clear()
+    assert(!Files.exists(Paths.get(dir)), s"$dir survived clear()")
+  }
+
+  test("clear() runs every later release when a scratch dir was already deleted") {
+    val gone = Caches.scratchDir("caches-spec-gone")
+    val kept = Caches.scratchDir("caches-spec-kept")
+    val df = Caches.cached(spark.range(100).selectExpr("id * 7 AS caches_spec"))
+    df.count()
+    Files.delete(Paths.get(gone))
+    Caches.clear()
+    assert(!Files.exists(Paths.get(kept)), s"$kept survived clear()")
+    assert(df.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
+      "cached frame still cached after clear()")
+  }
 
   test("model(): a slow fit blocks only its own key, not other keys") {
     // fit A parks until fit B completes; under a GLOBAL fit lock this

@@ -107,7 +107,6 @@ class JoinsViewsSpec extends AnyFunSuite with SparkFixture {
     // Independent road in-engine: windowed version table, explicit
     // [valid_from, valid_to) interval join — the oracle's formulation.
     val ev = Tables.events(spark, sf)
-    val vw = Window.partitionBy("user_id").orderBy(col("ts_ns"), col("event_id"))
     val v = ev.filter(col("event_type") =!= "purchase")
       .select(col("user_id").as("v_user"), col("ts_ns").as("v_ns"),
               col("event_id").as("state_event_id"), col("event_type").as("state_type"))

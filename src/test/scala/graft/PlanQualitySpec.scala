@@ -72,7 +72,6 @@ class PlanQualitySpec extends AnyFunSuite with SparkFixture {
   }
 
   test("dim broadcast is size-guarded: hash-broadcast when small, shuffle join when large") {
-    import graft.operators.Hints
     // Small dim (sf0.001 stats are KB): the hint fires on every guarded
     // site and the plan is a BroadcastHashJoin.
     Seq(Views.topActors(spark, sf), Views.topGenres(spark, sf),
@@ -81,13 +80,12 @@ class PlanQualitySpec extends AnyFunSuite with SparkFixture {
       assert(plan(df).contains("BroadcastHashJoin"),
         s"small dim not broadcast:\n${plan(df)}")
     }
-    // Simulated design-scale dim: force the guard threshold to 1 byte
-    // (every estimate exceeds it → no hint) and disable the session's
-    // own auto-broadcast so the planner's fallback is visible. The plan
-    // MUST degrade to a shuffle join rather than attempt the broadcast.
+    // Simulated design-scale dim: disable the session's auto-broadcast,
+    // which is also the hint's threshold (every estimate exceeds it →
+    // no hint), so the planner's fallback is visible. The plan MUST
+    // degrade to a shuffle join rather than attempt the broadcast.
     val conf = spark.conf
     val prevAuto = conf.get("spark.sql.autoBroadcastJoinThreshold")
-    conf.set(Hints.ThresholdKey, "1")
     conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       Seq(Views.topActors(spark, sf), Analytics.q3TopUnshipped(spark, sf)).foreach { df =>
@@ -98,7 +96,6 @@ class PlanQualitySpec extends AnyFunSuite with SparkFixture {
           s"no shuffle join fallback in forced-large plan:\n$p")
       }
     } finally {
-      conf.unset(Hints.ThresholdKey)
       conf.set("spark.sql.autoBroadcastJoinThreshold", prevAuto)
     }
   }
@@ -530,7 +527,6 @@ class PlanQualitySpec extends AnyFunSuite with SparkFixture {
     // injected bloom filter built from the dim keys. Local thresholds
     // are tuned so the injection fires on test-size data; at scale the
     // defaults (10 MB creation side) gate it the same way.
-    import graft.operators.Hints
     val conf = spark.conf
     val saved = Seq(
       "spark.sql.optimizer.runtime.bloomFilter.enabled",
@@ -540,13 +536,11 @@ class PlanQualitySpec extends AnyFunSuite with SparkFixture {
     conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
     conf.set("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0")
     conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    conf.set(Hints.ThresholdKey, "1")
     try {
       val p = plan(Analytics.q3TopUnshipped(spark, sf))
       assert(p.contains("might_contain"),
         s"no bloom runtime filter injected on the shuffle join:\n$p")
     } finally {
-      conf.unset(Hints.ThresholdKey)
       saved.foreach { case (k, v) =>
         v.fold(conf.unset(k))(conf.set(k, _)) }
     }

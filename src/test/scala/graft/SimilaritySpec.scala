@@ -395,7 +395,6 @@ class SimilaritySpec extends AnyFunSuite with SparkFixture {
   }
 
   test("PQ ADC recall vs exact top-10; codes decode to the encoder's own centroid choice") {
-    import org.apache.spark.sql.functions.{size => asize}
     val bf = Similarity.annBruteforceTopK(spark, sf).select("probe_id", "neighbor_id")
     val pq = Similarity.annPqTopK(spark, sf).select("probe_id", "neighbor_id")
     val nBf = bf.count()

@@ -3,7 +3,6 @@ package graft
 import java.nio.file.Files
 import java.security.MessageDigest
 
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{Dedup, TextOps, TrainingOps}
 

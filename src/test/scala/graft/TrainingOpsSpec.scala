@@ -81,7 +81,6 @@ class TrainingOpsSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("sample_stratified takes exactly ceil(pct% of n) per stratum, deterministically") {
-    import org.apache.spark.sql.functions._
     val pct = 10
     val out = TrainingOps.sampleStratified(spark, sf, pct).cache()
     val stratSizes = Tables.documents(spark, sf)
@@ -178,7 +177,6 @@ class TrainingOpsSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("bpe_train greedy fold handles overlapping runs (aaa + (a,a) -> [aa, a])") {
-    import spark.implicits._
     // synthetic corpus where the top pair overlaps itself: "aaa" x3
     // round 1 must pick (a,a) with count 6 (two positions per word)
     // and rewrite each word to [aa, a] (greedy non-overlap), so round
@@ -301,7 +299,6 @@ class TrainingOpsSpec extends AnyFunSuite with SparkFixture {
 
   test("contamination_report: crafted fixture — pair counts, worst pick, clean eval row") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
     val dir = java.nio.file.Files.createTempDirectory("graft-contam").toString
     // eval ids are multiples of 97; 8-grams are windows of 8 tokens.
     // w1..w12 gives 5 distinct 8-grams; sharing a doc PREFIX of k+7
