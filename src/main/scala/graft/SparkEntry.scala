@@ -336,10 +336,6 @@ object SparkEntry {
   //                     + COUNT(*)) / (2.0*COUNT(*))) / 100.0
   //   epochS(t)= epoch_ns(t)//1000000000
 
-  /** For each key in `queries`, equivalent ANSI SQL runnable by DuckDB
-    * on the same parquet tables. Omitted for non-SQL-expressible ops →
-    * driver records a weaker rows-only check.
-    */
   /** Generated oracle for `embedding_top_pc`: the power iteration
     * UNROLLED — one (project, trunc-rescale, weighted-sum, L∞
     * renormalize) CTE block per round, exactly the integral arithmetic
@@ -461,6 +457,10 @@ object SparkEntry {
         FROM binned GROUP BY event_type, bin ORDER BY event_type, bin"""
   }
 
+  /** For each key in `queries`, equivalent ANSI SQL runnable by DuckDB
+    * on the same parquet tables. Omitted for non-SQL-expressible ops →
+    * driver records a weaker rows-only check.
+    */
   def oracleSql: Map[String, String] =
     staticOracleSql ++ dynamicOracles.flatMap { case (k, f) =>
       // a generator failure must degrade THAT key to rows-only, not
@@ -3529,21 +3529,6 @@ object SparkEntry {
          ORDER BY c.split_a, c.split_b""",
   ).map { case (k, v) => k -> v.stripMargin.replaceAll("\\s+", " ").trim }
 
-  /** Exact-double brute-force ANN oracle. DuckDB's
-    * `list_cosine_similarity` computes in float32 (1-ulp score drift →
-    * hash mismatches), but an explicitly expanded per-dimension sum of
-    * `CAST(... AS DOUBLE)` products evaluates left-associated in IEEE
-    * double — the SAME operation order as [[graft.functions.CosineSim]]'s
-    * sequential loop — so floor(1e6·cos) is bit-identical across
-    * engines (verified at sf0.001 and sf0.01). Fixed to the testdata's
-    * 64-dim embeddings; the oracle is per-corpus by nature.
-    */
-  /** Unrolled Jacobi label-propagation mirror (5 rounds over the
-    * co-purchase graph) — aggregates over a recursive reference are
-    * not portable SQL, so the iteration count is baked like the
-    * PageRank oracle's. Tie-break (cnt desc, label) matches the
-    * engine's window exactly.
-    */
   /** Shared CTE chain for the label-prop family: co-purchase edges,
     * symmetrized adjacency, and `iters` unrolled Jacobi rounds ending
     * at `lp<iters>`. One definition so the community assignment in
@@ -3576,6 +3561,12 @@ object SparkEntry {
         $rounds"""
   }
 
+  /** Unrolled Jacobi label-propagation mirror (5 rounds over the
+    * co-purchase graph) — aggregates over a recursive reference are
+    * not portable SQL, so the iteration count is baked like the
+    * PageRank oracle's. Tie-break (cnt desc, label) matches the
+    * engine's window exactly.
+    */
   private lazy val labelPropOracle: String = {
     val iters = 5
     s"""WITH ${labelPropChain(iters)}
@@ -5482,6 +5473,15 @@ object SparkEntry {
         ORDER BY s.doc_id"""
   }
 
+  /** Exact-double brute-force ANN oracle. DuckDB's
+    * `list_cosine_similarity` computes in float32 (1-ulp score drift →
+    * hash mismatches), but an explicitly expanded per-dimension sum of
+    * `CAST(... AS DOUBLE)` products evaluates left-associated in IEEE
+    * double — the SAME operation order as [[graft.functions.CosineSim]]'s
+    * sequential loop — so floor(1e6·cos) is bit-identical across
+    * engines (verified at sf0.001 and sf0.01). Fixed to the testdata's
+    * 64-dim embeddings; the oracle is per-corpus by nature.
+    */
   private lazy val annBruteforceOracle: String = {
     val dim = 64
     val dot = (1 to dim).map(i => s"CAST(a.embedding[$i] AS DOUBLE)*CAST(p.pe[$i] AS DOUBLE)").mkString(" + ")

@@ -2363,31 +2363,6 @@ object Analytics {
       .limit(10)
   }
 
-  /** CUSUM changepoint monitor over the per-type daily event series —
-    * the SEQUENTIAL member of the outlier family ([[anomalyZscore]] /
-    * [[anomalyMad]] / [[anomalyTukey]] flag individual points; CUSUM
-    * accumulates small persistent shifts none of them sees, the
-    * Page-1954 control chart every feed monitor runs). Two one-sided
-    * statistics: S↑ₜ = max(0, S↑ₜ₋₁ + (xₜ − μ − κ)) catches surges,
-    * S↓ the mirror catches silent decays; a flag fires when either
-    * exceeds h.
-    *
-    * The max(0, …) recursion looks inherently sequential, but
-    * S↑ₜ = Pₜ − min(0, min_{j≤t} Pⱼ) for the drift-adjusted prefix
-    * sum Pₜ — two cumulative windows (running sum, running min),
-    * no iterative loop. Windows partition by event TYPE over the
-    * DAY-grain frame: partition size is calendar-bounded (days),
-    * never corpus-bounded — the daily collapse happens first (one
-    * partial-agg shuffle), and zero-event days join in from the
-    * per-type day spine ([[gapFillDays]] precedent) because a DROP
-    * is precisely a run of days the raw groupBy never emits.
-    *
-    * ALL-INTEGRAL at scale ×4n (n = spine days, T = type total):
-    * with κ = μ/4 and h = 2μ, deviation 4n·xₜ − 5T, threshold 8T —
-    * exact longs (4n·x ≤ 4·10⁴·x and prefixes ≤ 4nT ~ 10⁵·T stay
-    * far below 2⁶³ at any single-type daily volume), no float mean
-    * for engines to round apart.
-    */
   /** The shared CUSUM chart over a per-(type, bucket) count collapse —
     * one definition for the daily ([[anomalyCusum]]) and hourly
     * ([[streamCusum]]) grains so a threshold or scaling change can
@@ -2422,6 +2397,31 @@ object Analytics {
       .orderBy("event_type", bucket)
   }
 
+  /** CUSUM changepoint monitor over the per-type daily event series —
+    * the SEQUENTIAL member of the outlier family ([[anomalyZscore]] /
+    * [[anomalyMad]] / [[anomalyTukey]] flag individual points; CUSUM
+    * accumulates small persistent shifts none of them sees, the
+    * Page-1954 control chart every feed monitor runs). Two one-sided
+    * statistics: S↑ₜ = max(0, S↑ₜ₋₁ + (xₜ − μ − κ)) catches surges,
+    * S↓ the mirror catches silent decays; a flag fires when either
+    * exceeds h.
+    *
+    * The max(0, …) recursion looks inherently sequential, but
+    * S↑ₜ = Pₜ − min(0, min_{j≤t} Pⱼ) for the drift-adjusted prefix
+    * sum Pₜ — two cumulative windows (running sum, running min),
+    * no iterative loop. Windows partition by event TYPE over the
+    * DAY-grain frame: partition size is calendar-bounded (days),
+    * never corpus-bounded — the daily collapse happens first (one
+    * partial-agg shuffle), and zero-event days join in from the
+    * per-type day spine ([[gapFillDays]] precedent) because a DROP
+    * is precisely a run of days the raw groupBy never emits.
+    *
+    * ALL-INTEGRAL at scale ×4n (n = spine days, T = type total):
+    * with κ = μ/4 and h = 2μ, deviation 4n·xₜ − 5T, threshold 8T —
+    * exact longs (4n·x ≤ 4·10⁴·x and prefixes ≤ 4nT ~ 10⁵·T stay
+    * far below 2⁶³ at any single-type daily volume), no float mean
+    * for engines to round apart.
+    */
   def anomalyCusum(s: SparkSession, dir: String): DataFrame =
     cusumChart(
       Tables.events(s, dir)

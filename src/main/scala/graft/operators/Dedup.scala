@@ -656,11 +656,6 @@ object Dedup {
       .orderBy("doc_id")
   }
 
-  /** MinHash(64 perms) + LSH(16 bands × 4) over word-3-gram shingles,
-    * candidates verified with exact shingle Jaccard ≥ 0.8. The
-    * ~(1/16)^(1/4) ≈ 0.5 banding threshold over-generates candidates
-    * slightly; exact verification trims to the true near-dup set.
-    */
   /** The MinHash-LSH pipeline up to (and including) exact verification:
     * returns (ids, verified pairs a<b). Shared by [[dedupMinhashLsh]]
     * (one-hop verdicts) and [[dedupClusters]] (true connected
@@ -696,6 +691,11 @@ object Dedup {
     (hashed.select("doc_id"), verified)
   }
 
+  /** MinHash(64 perms) + LSH(16 bands × 4) over word-3-gram shingles,
+    * candidates verified with exact shingle Jaccard ≥ 0.8. The
+    * ~(1/16)^(1/4) ≈ 0.5 banding threshold over-generates candidates
+    * slightly; exact verification trims to the true near-dup set.
+    */
   def dedupMinhashLsh(s: SparkSession, dir: String,
                       nPerms: Int = 64, nBands: Int = 16,
                       shingleN: Int = 3, tauX1000: Long = 800): DataFrame = {
@@ -1054,14 +1054,6 @@ object Dedup {
       .orderBy("doc_id")
   }
 
-  /** Embedding near-dup: banded random-hyperplane LSH (8 bands ×
-    * 6 bits — a cos ≥ 0.9 pair shares a given 6-bit band w.p.
-    * (1-θ/π)^6 ≈ 0.39, so ANY-band collision catches it w.p.
-    * 1-(1-0.39)^8 ≈ 0.98), exact cosine ≥ τ verification within
-    * band buckets. Only (vec_id, band keys) shuffle through the
-    * candidate join; embeddings join back solely for the ≪n²
-    * verified candidates.
-    */
   /** Shared SRP-LSH → exact-cosine-verify pipeline behind both
     * embedding dedup surfaces: returns (all vec_ids, verified a<b
     * pairs with cosine ≥ tau). [[dedupEmbeddingCosine]] reduces the
@@ -1148,6 +1140,14 @@ object Dedup {
       .orderBy("vec_id")
   }
 
+  /** Embedding near-dup: banded random-hyperplane LSH (8 bands ×
+    * 6 bits — a cos ≥ 0.9 pair shares a given 6-bit band w.p.
+    * (1-θ/π)^6 ≈ 0.39, so ANY-band collision catches it w.p.
+    * 1-(1-0.39)^8 ≈ 0.98), exact cosine ≥ τ verification within
+    * band buckets. Only (vec_id, band keys) shuffle through the
+    * candidate join; embeddings join back solely for the ≪n²
+    * verified candidates.
+    */
   def dedupEmbeddingCosine(s: SparkSession, dir: String,
                            nBands: Int = 8, bitsPerBand: Int = 6,
                            tau: Double = 0.9): DataFrame = {

@@ -68,6 +68,67 @@ object Similarity {
   private def scoreX1e6(a: Column, b: Column): Column =
     floor(call_function("graft_cosine", a, b) * 1e6).cast("long")
 
+  /** THE top-k step: every ANN tier re-ranks its candidates through
+    * this one definition, and the DuckDB oracles replay the same rule.
+    * Per `by` group it ranks on (`score` desc, `neighbor_id` asc),
+    * keeps the first `k` rows and selects (`by`, rank, neighbor_id,
+    * `keep`…, `score`). One definition because [[annRecallReport]]
+    * compares the tiers' (probe, neighbor) rows against brute force:
+    * a drifted tie-break would move recall with no index change. No
+    * final sort — batch callers order by (`by`, rank) themselves and
+    * the streaming probe emits unordered.
+    */
+  private[graft] def topK(scored: DataFrame, by: String, score: String, k: Int,
+                          keep: String*): DataFrame =
+    scored
+      .withColumn("rank", row_number().over(
+        Window.partitionBy(by).orderBy(col(score).desc, col("neighbor_id"))))
+      .filter(col("rank") <= k)
+      .select(by, ("rank" +: "neighbor_id" +: keep :+ score): _*)
+
+  /** The IVF centroid table (cell, centroid): what probes rank cells
+    * against, and the `ivf_centroids` leaf of the serving index.
+    */
+  private def centroidFrame(s: SparkSession, centroids: Array[Array[Float]]): DataFrame =
+    s.createDataFrame(centroids.toSeq.zipWithIndex.map { case (c, i) => (i, c) })
+      .toDF("cell", "centroid")
+
+  /** THE IVF cell ranking: `probes` (probe_id, probe_emb, any carried
+    * columns) × the broadcast `centers`, each probe's cells ranked by
+    * (centroid cosine desc, cell asc) into `cell_rank`. Every
+    * window-ranked IVF tier probes through it, so the batch, filtered,
+    * PQ and streaming tiers cannot pick different cells.
+    */
+  private def rankedCells(probes: DataFrame, centers: DataFrame): DataFrame =
+    probes.crossJoin(broadcast(centers))
+      .select(probes.columns.toSeq.map(col) :+ col("cell") :+
+              scoreX1e6(col("probe_emb"), col("centroid")).as("cell_sim"): _*)
+      .withColumn("cell_rank", row_number().over(
+        Window.partitionBy("probe_id").orderBy(col("cell_sim").desc, col("cell"))))
+
+  /** THE IVF search body: each probe keeps its `nProbeCells` best cells
+    * ([[rankedCells]]), ONE broadcast (cell)-keyed equi-join pairs it
+    * with those cells' `postings` (cell, vec_id, …), each candidate is
+    * scored as `score` by `scoreOf`, and [[topK]] re-ranks. No
+    * distinct(): cells partition the corpus, so a (probe, neighbor)
+    * pair can only arise once — unlike LSH bands. [[annIvfTopK]] runs
+    * it over the in-memory assignment, [[annIvfPqTopK]] over PQ codes
+    * and the streaming probe over the persisted serving index.
+    */
+  private[graft] def ivfSearch(probes: DataFrame, centers: DataFrame, postings: DataFrame,
+                               k: Int, nProbeCells: Int, score: String = "cosine_x1e6",
+                               scoreOf: Column = scoreX1e6(col("probe_emb"), col("embedding"))
+                              ): DataFrame = {
+    val probeCells = rankedCells(probes, centers)
+      .filter(col("cell_rank") <= nProbeCells)
+      .select("probe_id", "probe_emb", "cell")
+    topK(postings
+        .join(broadcast(probeCells), Seq("cell"))
+        .filter(col("vec_id") =!= col("probe_id"))
+        .select(col("probe_id"), col("vec_id").as("neighbor_id"), scoreOf.as(score)),
+      "probe_id", score, k)
+  }
+
   /** Baseline: exact cosine top-k per probe. Corpus scanned once;
     * probe set broadcast; per-probe ranking by (score desc, vec_id)
     * for full determinism.
@@ -79,13 +140,7 @@ object Similarity {
       .join(broadcast(probes(emb)), col("vec_id") =!= col("probe_id"))
       .select(col("probe_id"), col("vec_id").as("neighbor_id"),
               scoreX1e6(col("probe_emb"), col("embedding")).as("cosine_x1e6"))
-    val w = Window.partitionBy("probe_id")
-      .orderBy(col("cosine_x1e6").desc, col("neighbor_id"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("probe_id", "rank", "neighbor_id", "cosine_x1e6")
-      .orderBy("probe_id", "rank")
+    topK(scored, "probe_id", "cosine_x1e6", k).orderBy("probe_id", "rank")
   }
 
   /** Attribute-FILTERED vector search: per probe, exact cosine top-k
@@ -115,13 +170,7 @@ object Similarity {
             col("vec_id") =!= col("probe_id"))
       .select(col("probe_id"), col("vec_id").as("neighbor_id"), col("label"),
               scoreX1e6(col("probe_emb"), col("embedding")).as("cosine_x1e6"))
-    val w = Window.partitionBy("probe_id")
-      .orderBy(col("cosine_x1e6").desc, col("neighbor_id"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("probe_id", "rank", "neighbor_id", "label", "cosine_x1e6")
-      .orderBy("probe_id", "rank")
+    topK(scored, "probe_id", "cosine_x1e6", k, "label").orderBy("probe_id", "rank")
   }
 
   /** Label-segmented IVF — the 100 TB serving form [[annFilteredTopK]]'s
@@ -179,27 +228,19 @@ object Similarity {
     // adaptive probing reads the assignment twice (occupancy +
     // candidates) — one shared scan
     val assigned = if (nProbeCells > 0) assigned0 else graft.Caches.cached(assigned0)
-    val centers = s.createDataFrame(
-      centroids.toSeq.zipWithIndex.map { case (c, i) => (i, c) })
-      .toDF("cell", "centroid")
-    val cellRank = Window.partitionBy("probe_id")
-      .orderBy(col("cell_sim").desc, col("cell"))
-    val rankedCells = probeBatch(emb)
-      .select(col("vec_id").as("probe_id"), col("embedding").as("probe_emb"),
-              col("label").as("probe_label"))
-      .crossJoin(broadcast(centers))
-      .select(col("probe_id"), col("probe_emb"), col("probe_label"), col("cell"),
-              scoreX1e6(col("probe_emb"), col("centroid")).as("cell_sim"))
-      .withColumn("cell_rank", row_number().over(cellRank))
+    val ranked = rankedCells(
+      probeBatch(emb).select(col("vec_id").as("probe_id"), col("embedding").as("probe_emb"),
+                             col("label").as("probe_label")),
+      centroidFrame(s, centroids))
     val probeCells = (if (nProbeCells > 0)
-        rankedCells.filter(col("cell_rank") <= nProbeCells)
+        ranked.filter(col("cell_rank") <= nProbeCells)
       else {
         val occ = assigned.groupBy(col("cell").as("o_cell"), col("label").as("o_label"))
           .agg(count(lit(1)).as("occ"))
         val cumBefore = Window.partitionBy("probe_id").orderBy("cell_rank")
           .rowsBetween(Window.unboundedPreceding, -1)
         val stratumTotal = Window.partitionBy("probe_id")
-        rankedCells
+        ranked
           // inner join: a cell holding none of the probe's stratum is
           // never probed (it could contribute no candidate)
           .join(broadcast(occ),
@@ -212,68 +253,16 @@ object Similarity {
       })
       .select(col("probe_id"), col("probe_emb"), col("probe_label"),
               col("cell").as("p_cell"))
-    val w = Window.partitionBy("probe_id")
-      .orderBy(col("cosine_x1e6").desc, col("neighbor_id"))
-    assigned
+    // no distinct(): cells partition the corpus (see ivfSearch)
+    val scored = assigned
       .join(broadcast(probeCells),
             col("cell") === col("p_cell") && col("label") === col("probe_label"))
       .filter(col("vec_id") =!= col("probe_id"))
       .select(col("probe_id"), col("vec_id").as("neighbor_id"), col("label"),
               scoreX1e6(col("probe_emb"), col("embedding")).as("cosine_x1e6"))
-      // no distinct(): cells partition the corpus (see annIvfTopK)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("probe_id", "rank", "neighbor_id", "label", "cosine_x1e6")
-      .orderBy("probe_id", "rank")
+    topK(scored, "probe_id", "cosine_x1e6", k, "label").orderBy("probe_id", "rank")
   }
 
-  /** Scale path: banded (OR-amplified) SRP-LSH with MULTI-PROBE on the
-    * broadcast side. Corpus and probes each compute `nBands` band keys;
-    * a corpus vector is a candidate for a probe iff ANY band key
-    * matches either the probe's own key or one of its hamming-1
-    * variants (each single-bit flip of a band = crossing ONE
-    * hyperplane — the nearest neighboring bucket, the classic
-    * multi-probe recall boost at zero corpus-side cost: the probe
-    * table just grows ×(1+bits), and it is broadcast). The corpus is
-    * scored map-side with NO shuffle of embeddings — only candidate
-    * (probe_id, neighbor_id, score) triples shuffle into distinct +
-    * per-probe top-k. Exact cosine re-ranks candidates; single-probe
-    * band-match prob is p^r with p = 1-θ/π — multi-probe adds the
-    * r one-bit-off buckets, ≈ (1+r(1-p)/p)·p^r per band. Output schema
-    * matches [[annBruteforceTopK]] so recall is directly measurable
-    * (SimilaritySpec asserts it).
-    */
-  /** Scale path #2: IVF (inverted-file) ANN — the partition-based
-    * alternative to LSH bucketing. A k-means coarse quantizer
-    * (MLlib, fixed seed) assigns every corpus vector to exactly ONE
-    * of `nCells` cells; a probe searches only its `nProbeCells`
-    * closest cells (by cosine to the centroid) and re-ranks
-    * exhaustively inside them.
-    *
-    * Why both this and [[annLshTopK]]: IVF cells PARTITION the corpus
-    * (no per-band duplication, no `distinct()` over candidates —
-    * each neighbor can arrive at a probe once), adapt to the data's
-    * actual cluster structure, and make the recall/cost dial explicit
-    * (`nProbeCells / nCells` of the corpus scored per probe). The
-    * price is a training pass; at 100 TB the quantizer trains on a
-    * sample and the assignment is one row-local map stage — the
-    * centroid table (nCells × dim floats) is broadcast-sized by
-    * construction, and only (probe, cell)-matched candidates shuffle,
-    * never the full corpus.
-    *
-    * Output schema matches [[annBruteforceTopK]] so recall is
-    * directly measurable (SimilaritySpec asserts it at the defaults,
-    * and that probing EVERY cell reproduces brute force exactly).
-    *
-    * The recall of any partition-based ANN is data-dependent: on a
-    * clustered corpus a few cells hold each probe's true neighbors
-    * and a small `nProbeCells` suffices; the synthetic test
-    * embeddings are near-uniform (the adversarial case — true top-k
-    * scatter across cells ~uniformly), where recall ≈ the probed
-    * fraction. The default 8/16 measures 0.80-0.86 on the test
-    * corpora; production corpora with real cluster structure run far
-    * tighter dials (nProbeCells ≪ nCells).
-    */
   /** Shared IVF coarse quantizer: graft's own Lloyd loop
     * ([[lloydFit]], deterministic lowest-vec_id seeding) — cell
     * assignment plus the centroid matrix. Centroids live on the driver
@@ -334,10 +323,7 @@ object Similarity {
     }
     val centroidsPath = graft.Substrate.materialized(
       s, "ivf_centroids", realDir, Seq(nCells)) {
-      val (_, centroids) = ivfAssigned(emb, nCells, dir)
-      s.createDataFrame(
-        centroids.toSeq.zipWithIndex.map { case (c, i) => (i, c) })
-        .toDF("cell", "centroid")
+      centroidFrame(s, ivfAssigned(emb, nCells, dir)._2)
     }
     (cellsPath, centroidsPath)
   }
@@ -352,9 +338,9 @@ object Similarity {
     * registered twin runs the SAME per-batch transform over the
     * canonical deterministic probe batch, so the stream is
     * hash-verifiable: output is bit-equal to [[annIvfTopK]] at the
-    * same dial (identical cell ranking, candidate join, and exact
-    * re-rank — only where the index bytes come from differs), and the
-    * key shares its quantizer-literal oracle. StreamingSpec proves
+    * same dial (both run [[ivfSearch]] — only where the index bytes
+    * come from differs), and the key shares its quantizer-literal
+    * oracle. StreamingSpec proves
     * foreachBatch over micro-batch splits == this twin.
     */
   def streamAnnProbe(s: SparkSession, dir: String, k: Int = 10,
@@ -367,36 +353,44 @@ object Similarity {
       .orderBy("probe_id", "rank")
   }
 
+  /** Scale path #2: IVF (inverted-file) ANN — the partition-based
+    * alternative to LSH bucketing. A k-means coarse quantizer
+    * (MLlib, fixed seed) assigns every corpus vector to exactly ONE
+    * of `nCells` cells; a probe searches only its `nProbeCells`
+    * closest cells (by cosine to the centroid) and re-ranks
+    * exhaustively inside them.
+    *
+    * Why both this and [[annLshTopK]]: IVF cells PARTITION the corpus
+    * (no per-band duplication, no `distinct()` over candidates —
+    * each neighbor can arrive at a probe once), adapt to the data's
+    * actual cluster structure, and make the recall/cost dial explicit
+    * (`nProbeCells / nCells` of the corpus scored per probe). The
+    * price is a training pass; at 100 TB the quantizer trains on a
+    * sample and the assignment is one row-local map stage — the
+    * centroid table (nCells × dim floats) is broadcast-sized by
+    * construction, and only (probe, cell)-matched candidates shuffle,
+    * never the full corpus.
+    *
+    * Output schema matches [[annBruteforceTopK]] so recall is
+    * directly measurable (SimilaritySpec asserts it at the defaults,
+    * and that probing EVERY cell reproduces brute force exactly).
+    *
+    * The recall of any partition-based ANN is data-dependent: on a
+    * clustered corpus a few cells hold each probe's true neighbors
+    * and a small `nProbeCells` suffices; the synthetic test
+    * embeddings are near-uniform (the adversarial case — true top-k
+    * scatter across cells ~uniformly), where recall ≈ the probed
+    * fraction. The default 8/16 measures 0.80-0.86 on the test
+    * corpora; production corpora with real cluster structure run far
+    * tighter dials (nProbeCells ≪ nCells).
+    */
   def annIvfTopK(s: SparkSession, dir: String, k: Int = 10,
                  nCells: Int = 16, nProbeCells: Int = 8): DataFrame = {
     GraftFunctions.ensureRegistered(s)
     val emb = graft.Caches.cached(
       Tables.embeddings(s, dir).select(col("vec_id"), col("embedding")))
     val (assigned, centroids) = ivfAssigned(emb, nCells, dir)
-    val centers = s.createDataFrame(
-      centroids.toSeq.zipWithIndex.map { case (c, i) => (i, c) })
-      .toDF("cell", "centroid")
-    val cellRank = Window.partitionBy("probe_id")
-      .orderBy(col("cell_sim").desc, col("cell"))
-    val probeCells = probes(emb)
-      .crossJoin(broadcast(centers))
-      .select(col("probe_id"), col("probe_emb"), col("cell"),
-              scoreX1e6(col("probe_emb"), col("centroid")).as("cell_sim"))
-      .withColumn("cell_rank", row_number().over(cellRank))
-      .filter(col("cell_rank") <= nProbeCells)
-      .select("probe_id", "probe_emb", "cell")
-    val w = Window.partitionBy("probe_id")
-      .orderBy(col("cosine_x1e6").desc, col("neighbor_id"))
-    assigned
-      .join(broadcast(probeCells), Seq("cell"))
-      .filter(col("vec_id") =!= col("probe_id"))
-      .select(col("probe_id"), col("vec_id").as("neighbor_id"),
-              scoreX1e6(col("probe_emb"), col("embedding")).as("cosine_x1e6"))
-      // no distinct(): cells partition the corpus, so a (probe,
-      // neighbor) pair can only arise once — unlike LSH bands
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("probe_id", "rank", "neighbor_id", "cosine_x1e6")
+    ivfSearch(probes(emb), centroidFrame(s, centroids), assigned, k, nProbeCells)
       .orderBy("probe_id", "rank")
   }
 
@@ -443,16 +437,10 @@ object Similarity {
       "exact all-pairs is " +
       "O(n²) by contract and corpus-broadcast-bound — use knnGraphIvf " +
       "(knn_graph_ivf), which prunes candidates by IVF cell and never broadcasts the corpus")
-    val other = broadcast(corpus)
-    val w = Window.partitionBy("vec_id")
-      .orderBy(col("cosine_x1e6").desc, col("neighbor_id"))
-    emb.join(other, col("vec_id") =!= col("neighbor_id"))
+    val scored = emb.join(broadcast(corpus), col("vec_id") =!= col("neighbor_id"))
       .select(col("vec_id"), col("neighbor_id"),
               scoreX1e6(col("embedding"), col("n_emb")).as("cosine_x1e6"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("vec_id", "rank", "neighbor_id", "cosine_x1e6")
-      .orderBy("vec_id", "rank")
+    topK(scored, "vec_id", "cosine_x1e6", k).orderBy("vec_id", "rank")
   }
 
   /** The kNN graph over IVF candidates — the 100 TB path [[knnGraph]]'s
@@ -500,16 +488,11 @@ object Similarity {
               explode(slice(rankedCells, 1, nProbeCells)).as("pc"))
       .select(col("probe_id"), col("probe_emb"), col("pc.cell").as("cell"))
     // post-rename: vec_id IS the probe, neighbor_id the cell member
-    val w = Window.partitionBy("vec_id")
-      .orderBy(col("cosine_x1e6").desc, col("neighbor_id"))
-    assigned.join(probeSide, Seq("cell"))
+    val scored = assigned.join(probeSide, Seq("cell"))
       .filter(col("vec_id") =!= col("probe_id"))
       .select(col("probe_id").as("vec_id"), col("vec_id").as("neighbor_id"),
               scoreX1e6(col("probe_emb"), col("embedding")).as("cosine_x1e6"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("vec_id", "rank", "neighbor_id", "cosine_x1e6")
-      .orderBy("vec_id", "rank")
+    topK(scored, "vec_id", "cosine_x1e6", k).orderBy("vec_id", "rank")
   }
 
   /** Product-quantization ANN — the MEMORY tier of the family:
@@ -579,17 +562,12 @@ object Similarity {
       call_function("graft_pq_encode", col("embedding"), cbLit).as("codes")))
     val decoded = flatten(transform(sequence(lit(1), lit(nSub)),
       m => element_at(element_at(cbLit, m), element_at(col("codes"), m) + 1)))
-    val w = Window.partitionBy("probe_id")
-      .orderBy(col("adc_cosine_x1e6").desc, col("neighbor_id"))
-    encoded
+    val scored = encoded
       .select(col("vec_id"), decoded.as("decoded"))
       .join(broadcast(probes(emb)), col("vec_id") =!= col("probe_id"))
       .select(col("probe_id"), col("vec_id").as("neighbor_id"),
               scoreX1e6(col("probe_emb"), col("decoded")).as("adc_cosine_x1e6"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("probe_id", "rank", "neighbor_id", "adc_cosine_x1e6")
-      .orderBy("probe_id", "rank")
+    topK(scored, "probe_id", "adc_cosine_x1e6", k).orderBy("probe_id", "rank")
   }
 
   /** Shared PQ codebook training: `nSub` independent seeded MLlib
@@ -709,30 +687,10 @@ object Similarity {
     // the d·4-byte embedding for every candidate read from here on
     val encoded = graft.Caches.cached(assigned.select(col("vec_id"), col("cell"),
       call_function("graft_pq_encode", col("embedding"), cbLit).as("codes")))
-    val centers = s.createDataFrame(
-      centroids.toSeq.zipWithIndex.map { case (c, i) => (i, c) })
-      .toDF("cell", "centroid")
-    val cellRank = Window.partitionBy("probe_id")
-      .orderBy(col("cell_sim").desc, col("cell"))
-    val probeCells = probes(emb)
-      .crossJoin(broadcast(centers))
-      .select(col("probe_id"), col("probe_emb"), col("cell"),
-              scoreX1e6(col("probe_emb"), col("centroid")).as("cell_sim"))
-      .withColumn("cell_rank", row_number().over(cellRank))
-      .filter(col("cell_rank") <= nProbeCells)
-      .select("probe_id", "probe_emb", "cell")
     val decoded = flatten(transform(sequence(lit(1), lit(nSub)),
       m => element_at(element_at(cbLit, m), element_at(col("codes"), m) + 1)))
-    val w = Window.partitionBy("probe_id")
-      .orderBy(col("adc_cosine_x1e6").desc, col("neighbor_id"))
-    encoded
-      .join(broadcast(probeCells), Seq("cell"))
-      .filter(col("vec_id") =!= col("probe_id"))
-      .select(col("probe_id"), col("vec_id").as("neighbor_id"),
-              scoreX1e6(col("probe_emb"), decoded).as("adc_cosine_x1e6"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("probe_id", "rank", "neighbor_id", "adc_cosine_x1e6")
+    ivfSearch(probes(emb), centroidFrame(s, centroids), encoded, k, nProbeCells,
+              "adc_cosine_x1e6", scoreX1e6(col("probe_emb"), decoded))
       .orderBy("probe_id", "rank")
   }
 
@@ -819,30 +777,9 @@ object Similarity {
       .select(col("probe_id"), col("vec_id").as("neighbor_id"),
         floor(call_function("graft_cosine_sq8", col("probe_emb"), col("codes")) * 1e6)
           .cast("long").as("cosine_x1e6"))
-    val w = Window.partitionBy("probe_id")
-      .orderBy(col("cosine_x1e6").desc, col("neighbor_id"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("probe_id", "rank", "neighbor_id", "cosine_x1e6")
-      .orderBy("probe_id", "rank")
+    topK(scored, "probe_id", "cosine_x1e6", k).orderBy("probe_id", "rank")
   }
 
-  /** Per-label embedding centroids via the custom
-    * [[graft.functions.VecSumMicro]] AGGREGATE: one groupBy whose
-    * per-group state is a single long[dim] of exact micro-unit sums —
-    * partial-aggregated, so the exchange carries one fixed-width
-    * state per (partition, label) instead of every vector (the
-    * explode + groupBy(label, pos) road shuffles n·dim rows). This is
-    * the k-means-update / SemDeDup-representative primitive.
-    *
-    * Output explodes the summed vector to (label, pos) rows AFTER
-    * aggregation — |labels|·dim rows, nothing at any corpus size.
-    * `centroid_micro` is the TRUNCATED (toward zero, Spark `div`)
-    * per-component mean in micro-units; sums can be negative, so the
-    * oracle mirrors truncation explicitly (DuckDB `//` floors).
-    * Dimension is locked by the first vector; mixed widths fail.
-    */
   /** Embedding-space data quality: flag vectors ABNORMALLY FAR from
     * their label's centroid — mislabeled rows, corrupted encodes, and
     * truncation artifacts all surface as centroid-distance outliers,
@@ -882,6 +819,21 @@ object Similarity {
       .orderBy("vec_id")
   }
 
+  /** Per-label embedding centroids via the custom
+    * [[graft.functions.VecSumMicro]] AGGREGATE: one groupBy whose
+    * per-group state is a single long[dim] of exact micro-unit sums —
+    * partial-aggregated, so the exchange carries one fixed-width
+    * state per (partition, label) instead of every vector (the
+    * explode + groupBy(label, pos) road shuffles n·dim rows). This is
+    * the k-means-update / SemDeDup-representative primitive.
+    *
+    * Output explodes the summed vector to (label, pos) rows AFTER
+    * aggregation — |labels|·dim rows, nothing at any corpus size.
+    * `centroid_micro` is the TRUNCATED (toward zero, Spark `div`)
+    * per-component mean in micro-units; sums can be negative, so the
+    * oracle mirrors truncation explicitly (DuckDB `//` floors).
+    * Dimension is locked by the first vector; mixed widths fail.
+    */
   def embeddingCentroids(s: SparkSession, dir: String): DataFrame = {
     GraftFunctions.ensureRegistered(s)
     Tables.requireLabel(Tables.embeddings(s, dir))
@@ -929,6 +881,25 @@ object Similarity {
       .orderBy("tier")
   }
 
+  /** The RRF fusion body over explicit (id, lex_rank) / (id, sem_rank)
+    * lists — factored so the serving key and its recall monitor
+    * ([[hybridRecallReport]], which fuses the EXACT semantic list the
+    * same way) run the identical fusion code. Both inputs are bounded
+    * top-k lists, so the full-outer join and the rank window run on a
+    * dial-sized frame.
+    */
+  private def rrfFuse(lex: DataFrame, sem: DataFrame, kRrf: Int): DataFrame = {
+    require(kRrf > 0, s"kRrf $kRrf must be positive")
+    lex.join(sem, Seq("id"), "full_outer")
+      .select(col("id"), col("lex_rank"), col("sem_rank"),
+        (coalesce(expr(s"1000000 div ($kRrf + lex_rank)"), lit(0L)) +
+         coalesce(expr(s"1000000 div ($kRrf + sem_rank)"), lit(0L)))
+          .as("rrf_x1e6"))
+      .withColumn("fused_rank",
+        row_number().over(Window.orderBy(col("rrf_x1e6").desc, col("id")))
+          .cast("long"))
+  }
+
   /** SURVEY §2 `hybrid_rank_rrf`: hybrid lexical+semantic retrieval by
     * reciprocal-rank fusion — the RAG-serving join of the two index
     * halves the engine already builds: [[graft.operators.TextOps
@@ -954,25 +925,6 @@ object Similarity {
     * At 100 TB nothing changes: each half is already the tier's
     * serving plan, and fusion is rank arithmetic on 2k rows.
     */
-  /** The RRF fusion body over explicit (id, lex_rank) / (id, sem_rank)
-    * lists — factored so the serving key and its recall monitor
-    * ([[hybridRecallReport]], which fuses the EXACT semantic list the
-    * same way) run the identical fusion code. Both inputs are bounded
-    * top-k lists, so the full-outer join and the rank window run on a
-    * dial-sized frame.
-    */
-  private def rrfFuse(lex: DataFrame, sem: DataFrame, kRrf: Int): DataFrame = {
-    require(kRrf > 0, s"kRrf $kRrf must be positive")
-    lex.join(sem, Seq("id"), "full_outer")
-      .select(col("id"), col("lex_rank"), col("sem_rank"),
-        (coalesce(expr(s"1000000 div ($kRrf + lex_rank)"), lit(0L)) +
-         coalesce(expr(s"1000000 div ($kRrf + sem_rank)"), lit(0L)))
-          .as("rrf_x1e6"))
-      .withColumn("fused_rank",
-        row_number().over(Window.orderBy(col("rrf_x1e6").desc, col("id")))
-          .cast("long"))
-  }
-
   def hybridRankRrf(s: SparkSession, dir: String, kLex: Int = 50,
                     kSem: Int = 10, kRrf: Int = 60,
                     queryId: Long = 0L): DataFrame = {
@@ -1203,35 +1155,6 @@ object Similarity {
       cids: Array[Long], centroidMicro: Array[Array[Long]],
       nVectors: Array[Long], iters: Int, converged: Boolean)
 
-  /** Full Lloyd loop over the embedding corpus — [[kmeansStep]]
-    * iterated to convergence under the driver-sync-per-round contract
-    * of the CC/PageRank/BPE family. Every quantity is integral or a
-    * pure function of integral state, so the whole trajectory is
-    * deterministic and replayable:
-    *
-    * - seeds: the k lowest vec_ids; a seed's initial centroid is its
-    *   embedding micro-scaled (`floor(1e6·x)` per position).
-    * - assignment: the codegen'd `graft_kmeans_assign` argmin against
-    *   `centroid_micro / 1e6` doubles (ties → lowest cid) — row-local
-    *   against a plan-constant seed matrix, zero shuffle.
-    * - update: [[graft.functions.VecSumMicro]] exact integral sums,
-    *   one partial-aggregated groupBy collecting k·dim longs to the
-    *   driver per round; `centroid_micro = sum_micro div n` (toward-
-    *   zero, Spark's `div`).
-    * - empty clusters: re-seeded from the corpus vectors farthest
-    *   (codegen'd `graft_l2sq`) from their own cluster's UPDATED
-    *   centroid — ranked (dist² desc, vec_id asc), matched to empty
-    *   cids in ascending-cid order. Standard Lloyd farthest-point
-    *   re-seed, made deterministic.
-    * - convergence: every centroid_micro array exactly equal to the
-    *   previous round's (long equality — no float tolerance) and no
-    *   re-seed fired. Stops early; `maxIters` caps.
-    *
-    * Scale shape: per round one corpus scan (assignment fused into
-    * the scan stage) and one k-row aggregate; driver traffic is the
-    * k·dim centroid matrix — the same bounded-sync economics as
-    * PageRank's rank vector. The corpus never shuffles.
-    */
   /** Deterministic Gonzalez farthest-point seeding: anchor = the
     * lowest vec_id's vector; each subsequent seed is the corpus
     * vector MAXIMIZING its minimum `graft_l2sq` distance to the
@@ -1261,6 +1184,35 @@ object Similarity {
     chosen.toArray
   }
 
+  /** Full Lloyd loop over the embedding corpus — [[kmeansStep]]
+    * iterated to convergence under the driver-sync-per-round contract
+    * of the CC/PageRank/BPE family. Every quantity is integral or a
+    * pure function of integral state, so the whole trajectory is
+    * deterministic and replayable:
+    *
+    * - seeds: the k lowest vec_ids; a seed's initial centroid is its
+    *   embedding micro-scaled (`floor(1e6·x)` per position).
+    * - assignment: the codegen'd `graft_kmeans_assign` argmin against
+    *   `centroid_micro / 1e6` doubles (ties → lowest cid) — row-local
+    *   against a plan-constant seed matrix, zero shuffle.
+    * - update: [[graft.functions.VecSumMicro]] exact integral sums,
+    *   one partial-aggregated groupBy collecting k·dim longs to the
+    *   driver per round; `centroid_micro = sum_micro div n` (toward-
+    *   zero, Spark's `div`).
+    * - empty clusters: re-seeded from the corpus vectors farthest
+    *   (codegen'd `graft_l2sq`) from their own cluster's UPDATED
+    *   centroid — ranked (dist² desc, vec_id asc), matched to empty
+    *   cids in ascending-cid order. Standard Lloyd farthest-point
+    *   re-seed, made deterministic.
+    * - convergence: every centroid_micro array exactly equal to the
+    *   previous round's (long equality — no float tolerance) and no
+    *   re-seed fired. Stops early; `maxIters` caps.
+    *
+    * Scale shape: per round one corpus scan (assignment fused into
+    * the scan stage) and one k-row aggregate; driver traffic is the
+    * k·dim centroid matrix — the same bounded-sync economics as
+    * PageRank's rank vector. The corpus never shuffles.
+    */
   private[graft] def lloydFit(emb: DataFrame, k: Int, maxIters: Int,
                               seedMaxmin: Boolean = false): LloydResult = {
     require(k >= 1, s"k must be >= 1, got $k")
@@ -1329,19 +1281,6 @@ object Similarity {
     LloydResult(cids, micro, nVec, iters, converged)
   }
 
-  /** Registered full-Lloyd operator: [[lloydFit]]'s final state as a
-    * per-(cluster, dim) frame — `kmeans_step` run to fixpoint. The
-    * output is pure model state (k·dim rows built driver-side, the
-    * same bounded object the IVF tiers memoize); its correctness
-    * claim is the ==single-node-Lloyd spec in SimilaritySpec, plus
-    * the live identity that [[annIvfTopK]]'s quantizer IS this fit
-    * (`Caches.model` shared key).
-    *
-    * `n_vectors` is the membership of the final assignment round; on
-    * a converged run that assignment is already the fixpoint of the
-    * reported centroids (the round that proved convergence re-derived
-    * them exactly).
-    */
   /** The memoized full-Lloyd fit behind `kmeans_fit` — shared with the
     * DuckDB oracle generator (which needs the realized round count to
     * unroll the trajectory), so generating the oracle after the query
@@ -1357,6 +1296,19 @@ object Similarity {
     }
   }
 
+  /** Registered full-Lloyd operator: [[lloydFit]]'s final state as a
+    * per-(cluster, dim) frame — `kmeans_step` run to fixpoint. The
+    * output is pure model state (k·dim rows built driver-side, the
+    * same bounded object the IVF tiers memoize); its correctness
+    * claim is the ==single-node-Lloyd spec in SimilaritySpec, plus
+    * the live identity that [[annIvfTopK]]'s quantizer IS this fit
+    * (`Caches.model` shared key).
+    *
+    * `n_vectors` is the membership of the final assignment round; on
+    * a converged run that assignment is already the fixpoint of the
+    * reported centroids (the round that proved convergence re-derived
+    * them exactly).
+    */
   def kmeansFit(s: SparkSession, dir: String, k: Int = 8,
                 maxIters: Int = 20): DataFrame = {
     GraftFunctions.ensureRegistered(s)
@@ -1485,6 +1437,22 @@ object Similarity {
       .orderBy("vec_id", "pos")
   }
 
+  /** Scale path: banded (OR-amplified) SRP-LSH with MULTI-PROBE on the
+    * broadcast side. Corpus and probes each compute `nBands` band keys;
+    * a corpus vector is a candidate for a probe iff ANY band key
+    * matches either the probe's own key or one of its hamming-1
+    * variants (each single-bit flip of a band = crossing ONE
+    * hyperplane — the nearest neighboring bucket, the classic
+    * multi-probe recall boost at zero corpus-side cost: the probe
+    * table just grows ×(1+bits), and it is broadcast). The corpus is
+    * scored map-side with NO shuffle of embeddings — only candidate
+    * (probe_id, neighbor_id, score) triples shuffle into distinct +
+    * per-probe top-k. Exact cosine re-ranks candidates; single-probe
+    * band-match prob is p^r with p = 1-θ/π — multi-probe adds the
+    * r one-bit-off buckets, ≈ (1+r(1-p)/p)·p^r per band. Output schema
+    * matches [[annBruteforceTopK]] so recall is directly measurable
+    * (SimilaritySpec asserts it).
+    */
   def annLshTopK(s: SparkSession, dir: String, k: Int = 10,
                  nBands: Int = 12, bitsPerBand: Int = 3): DataFrame = {
     GraftFunctions.ensureRegistered(s)
@@ -1513,12 +1481,6 @@ object Similarity {
       .select(col("probe_id"), col("vec_id").as("neighbor_id"),
               scoreX1e6(col("probe_emb"), col("embedding")).as("cosine_x1e6"))
       .distinct() // a candidate can match on several bands
-    val w = Window.partitionBy("probe_id")
-      .orderBy(col("cosine_x1e6").desc, col("neighbor_id"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("probe_id", "rank", "neighbor_id", "cosine_x1e6")
-      .orderBy("probe_id", "rank")
+    topK(scored, "probe_id", "cosine_x1e6", k).orderBy("probe_id", "rank")
   }
 }

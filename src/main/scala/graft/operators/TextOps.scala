@@ -31,10 +31,6 @@ object TextOps {
   val stopwords: Seq[String] =
     Seq("the", "a", "of", "and", "is", "to", "in")
 
-  /** Marker-word-count language ID: score each language by how many
-    * tokens are that language's closed-class markers; argmax with a
-    * fixed tie-break order (en > de > fr > es).
-    */
   /** Appends the four marker scores and the argmax `lang_guess` to a
     * frame carrying a `toks` ATTRIBUTE (tokens projected once — the
     * inline markerCount form would re-run the normalize+split scan per
@@ -59,6 +55,10 @@ object TextOps {
         .otherwise("es"))
   }
 
+  /** Marker-word-count language ID: score each language by how many
+    * tokens are that language's closed-class markers; argmax with a
+    * fixed tie-break order (en > de > fr > es).
+    */
   def textLangId(s: SparkSession, dir: String): DataFrame = {
     val d = Tables.documents(s, dir)
       .select(col("doc_id"), tokens(col("text")).as("toks"))
@@ -534,35 +534,6 @@ object TextOps {
       .orderBy("doc_id", "pos")
   }
 
-  /** Winnowing document fingerprints (Schleimer, Wilkerson, Aiken —
-    * "Winnowing: Local Algorithms for Document Fingerprinting",
-    * SIGMOD 2003): hash every k-char gram of the normalized text,
-    * slide a window of `w` consecutive hashes, select each window's
-    * minimum (rightmost on ties), and dedup the selections. The
-    * winnowing GUARANTEE — any match of length ≥ k+w−1 between two
-    * documents shares at least one selected fingerprint — is what
-    * makes the ~2/(w+1) density a sound plagiarism/near-dup index
-    * where uniform sampling of k-grams is not.
-    *
-    * The whole selection is the fused codegen'd kernel
-    * [[graft.functions.GraftWinnow]] — k-gram hashing, window minima
-    * and adjacent dedup as ONE primitive pass per row (byte-offset
-    * walk + hash array + monotonic deque) — replacing the interpreted
-    * transform/array_min-over-slices/filter HOF chain (O(L·w)
-    * interpreted lambda evals per document; see §6's
-    * expression-duplication pathology for why the HOF form was also
-    * fragile to stage). Normalization (whitespace collapse, trim,
-    * lower) stays in the plan as native codegen'd expressions. One
-    * scan, zero shuffles beyond the parallelism repartition — the
-    * TextOps contract. The checksum (XOR fold of selected hashes —
-    * order-insensitive, ANSI-overflow-proof) is the compact signature
-    * a cross-corpus fingerprint join would key on. xxhash64 has no
-    * DuckDB twin, so correctness rides TextFunctionsSpec: kernel ==
-    * the HOF road bit-for-bit on the corpus, the coverage guarantee
-    * (every window contains a selection), the density bound,
-    * selection stability under duplication, and a shared-substring
-    * collision fixture.
-    */
   /** Core winnowing selection over any (doc_id, text) frame — exposed
     * for the spec's crafted-document fixtures. Emits the selected
     * fingerprint structs (hash, −position) so tests can assert the
@@ -593,6 +564,35 @@ object TextOps {
         .as("norm"))
     .repartition(col("doc_id"))
 
+  /** Winnowing document fingerprints (Schleimer, Wilkerson, Aiken —
+    * "Winnowing: Local Algorithms for Document Fingerprinting",
+    * SIGMOD 2003): hash every k-char gram of the normalized text,
+    * slide a window of `w` consecutive hashes, select each window's
+    * minimum (rightmost on ties), and dedup the selections. The
+    * winnowing GUARANTEE — any match of length ≥ k+w−1 between two
+    * documents shares at least one selected fingerprint — is what
+    * makes the ~2/(w+1) density a sound plagiarism/near-dup index
+    * where uniform sampling of k-grams is not.
+    *
+    * The whole selection is the fused codegen'd kernel
+    * [[graft.functions.GraftWinnow]] — k-gram hashing, window minima
+    * and adjacent dedup as ONE primitive pass per row (byte-offset
+    * walk + hash array + monotonic deque) — replacing the interpreted
+    * transform/array_min-over-slices/filter HOF chain (O(L·w)
+    * interpreted lambda evals per document; see §6's
+    * expression-duplication pathology for why the HOF form was also
+    * fragile to stage). Normalization (whitespace collapse, trim,
+    * lower) stays in the plan as native codegen'd expressions. One
+    * scan, zero shuffles beyond the parallelism repartition — the
+    * TextOps contract. The checksum (XOR fold of selected hashes —
+    * order-insensitive, ANSI-overflow-proof) is the compact signature
+    * a cross-corpus fingerprint join would key on. xxhash64 has no
+    * DuckDB twin, so correctness rides TextFunctionsSpec: kernel ==
+    * the HOF road bit-for-bit on the corpus, the coverage guarantee
+    * (every window contains a selection), the density bound,
+    * selection stability under duplication, and a shared-substring
+    * collision fixture.
+    */
   def winnowingFingerprint(s: SparkSession, dir: String,
                            k: Int = 8, w: Int = 4): DataFrame = {
     require(k >= 2 && w >= 1, s"need k >= 2, w >= 1; got k=$k, w=$w")

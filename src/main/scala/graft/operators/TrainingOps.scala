@@ -443,12 +443,25 @@ object TrainingOps {
     */
   def bpeTrain(s: SparkSession, dir: String, nMerges: Int = 10): DataFrame = {
     import s.implicits._
+    bpeRounds(s, dir, nMerges)._1.toDF("merge_rank", "left", "right", "pair_count")
+      .orderBy("merge_rank")
+  }
+
+  /** [[bpeTrain]]'s round loop: the merge list (rank, left, right,
+    * count) and the last round's (word, syms, cnt) frame. Every round
+    * rewrites every distinct word by the merge it just picked, so the
+    * last round holds each word's symbols after all merges in rank
+    * order — the encoding [[bpeApply]] persists.
+    */
+  private def bpeRounds(s: SparkSession, dir: String,
+                        nMerges: Int): (Seq[(Long, String, String, Long)], DataFrame) = {
     require(nMerges >= 1, s"nMerges must be >= 1, got $nMerges")
     val words0 = Tables.documents(s, dir)
       .select(explode(tokens(col("text"))).as("word"))
       .filter(col("word") =!= "")
       .groupBy("word").agg(count(lit(1)).as("cnt"))
-      .select(expr("filter(split(word, ''), ch -> ch <> '')").as("syms"), col("cnt"))
+      .select(col("word"), expr("filter(split(word, ''), ch -> ch <> '')").as("syms"),
+              col("cnt"))
     var words = graft.Caches.roundCheckpoint(words0, reliable = false)
     val merges = scala.collection.mutable.ArrayBuffer[(Long, String, String, Long)]()
     var rank = 1
@@ -472,7 +485,7 @@ object TrainingOps {
         // the running tail is exactly (l) and the element is (r) — then
         // the tail becomes the merged symbol. "aaa" + (a,a) -> [aa, a].
         val next = graft.Caches.roundCheckpoint(
-          words.select(
+          words.select(col("word"),
             aggregate(col("syms"), array().cast("array<string>"),
               (acc, x) => when(
                   size(acc) > 0 && element_at(acc, -1) === lit(l) && x === lit(r),
@@ -484,20 +497,9 @@ object TrainingOps {
         rank += 1
       }
     }
-    merges.toSeq.toDF("merge_rank", "left", "right", "pair_count")
-      .orderBy("merge_rank")
+    (merges.toSeq, words)
   }
 
-  /** Per-source dataset card — the manifest row a training mix is
-    * audited by: document count, token/char volume, language spread,
-    * and exact-dup count within the source (docs minus distinct
-    * normalized-content hashes). One partial-aggregated shuffle whose
-    * key space is the SOURCE list (dozens, not corpus-sized); the two
-    * distinct aggregates piggyback on the same expand. Token counts
-    * reuse the BPE-ish regex of [[TextOps.textTokenCount]] and the
-    * content hash is [[Dedup.dedupExactHash]]'s sha2-256, so the card
-    * reports the same numbers the pipeline's other stages act on.
-    */
   /** Deterministic global training-order shuffle — the "shuffle the
     * corpus before sharding" step every pretraining run needs, as a
     * pure function of (doc_id, seed): shuffle key = 48 bits of
@@ -633,6 +635,16 @@ object TrainingOps {
       .orderBy("source")
   }
 
+  /** Per-source dataset card — the manifest row a training mix is
+    * audited by: document count, token/char volume, language spread,
+    * and exact-dup count within the source (docs minus distinct
+    * normalized-content hashes). One partial-aggregated shuffle whose
+    * key space is the SOURCE list (dozens, not corpus-sized); the two
+    * distinct aggregates piggyback on the same expand. Token counts
+    * reuse the BPE-ish regex of [[TextOps.textTokenCount]] and the
+    * content hash is [[Dedup.dedupExactHash]]'s sha2-256, so the card
+    * reports the same numbers the pipeline's other stages act on.
+    */
   def corpusManifest(s: SparkSession, dir: String): DataFrame = {
     Tables.requireLang(Tables.documents(s, dir))
       .select(
@@ -796,22 +808,20 @@ object TrainingOps {
     * post-merge token count and fertility (tokens per 1M words).
     *
     * The encoded VOCABULARY (word → post-merge symbol count) is a
-    * classic build-once/serve-many artifact, and since r20 it is
-    * [[graft.Substrate]]-persisted per (corpus, nMerges) — the same
-    * contract as the dedup band index and the IVF postings. The
-    * BUILD derives the merge list ([[graft.Caches.model]]-memoized
-    * train) and applies it as `nMerges` nested row-local `aggregate`
-    * HOF rewrites over the DISTINCT-word frame (the same greedy
-    * left-to-right fold the trainer used, in rank order — BPE
-    * application is BY DEFINITION the training folds replayed); that
-    * giant generated projection now runs ONCE PER INGEST, not once
-    * per query. SERVING is: explode the corpus to words, one
-    * size-guarded join against the KB-scale persisted vocab, one
-    * per-doc partial agg — no deep fold in the hot path at all.
-    * (r19 forensics: the fold's generated code was janino-recompiled
-    * per bench pass when the 100-entry codegen cache evicted under
-    * the full-sweep ordering — a stable ~8× inflation on the serving
-    * path the persistence removes structurally, not just caches away.)
+    * classic build-once/serve-many artifact, [[graft.Substrate]]-
+    * persisted per (corpus, nMerges) — the same contract as the dedup
+    * band index and the IVF postings. The BUILD is [[bpeTrain]]'s own
+    * round loop ([[bpeRounds]]): training already rewrites every
+    * distinct word by each merge, greedy left-to-right in rank order,
+    * and BPE application is BY DEFINITION those rewrites replayed, so
+    * the leaf is the last round's (word, symbol count) — no second
+    * implementation of the rewrite and no second documents scan.
+    * SERVING is: explode the corpus to words, one size-guarded join
+    * against the KB-scale persisted vocab, one per-doc partial agg —
+    * no merge fold in the hot path at all. (r19 forensics: a fold in
+    * the serving plan was janino-recompiled per bench pass when the
+    * 100-entry codegen cache evicted under the full-sweep ordering —
+    * a stable ~8× inflation the persisted leaf removes structurally.)
     *
     * Hash-verified since r16: the oracle replays training AND
     * application end to end through the same generated CTE chain
@@ -824,25 +834,8 @@ object TrainingOps {
     require(nMerges >= 1, s"nMerges must be >= 1, got $nMerges")
     val realDir = graft.Substrate.canonicalDir(s, dir)
     val vocabPath = graft.Substrate.materialized(s, "bpevocab", realDir, Seq(nMerges)) {
-      val mergeList: Seq[(String, String)] =
-        graft.Caches.model("bpe_merges", realDir, nMerges) {
-          bpeTrain(s, dir, nMerges).collect()
-            .map(r => (r.getString(1), r.getString(2))).toSeq
-        }
-      val syms0: Column = expr("filter(split(word, ''), ch -> ch <> '')")
-      val symsMerged = mergeList.foldLeft(syms0) { case (syms, (l, r)) =>
-        val merged = l + r
-        aggregate(syms, array().cast("array<string>"),
-          (acc, x) => when(
-              size(acc) > 0 && element_at(acc, -1) === lit(l) && x === lit(r),
-              concat(slice(acc, lit(1), size(acc) - 1), array(lit(merged))))
-            .otherwise(concat(acc, array(x))))
-      }
-      Tables.documents(s, dir)
-        .select(explode(tokens(col("text"))).as("word"))
-        .filter(col("word") =!= "")
-        .distinct()
-        .select(col("word"), size(symsMerged).cast("long").as("n_syms"))
+      bpeRounds(s, dir, nMerges)._2
+        .select(col("word"), size(col("syms")).cast("long").as("n_syms"))
     }
     val encoded = s.read.parquet(vocabPath)
     Tables.documents(s, dir)

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.functions.OracleSafe.sum2
@@ -438,13 +437,15 @@ object EventStreams {
 
   /** The IVF probe transform over a PERSISTED serving index — online
     * vector search, the ANN family's streaming member: arriving query
-    * vectors rank the broadcast centroid table (bounded: nCells rows),
-    * keep their nProbeCells nearest cells, and pay ONE (cell)-keyed
-    * equi-join against the substrate-persisted cell postings; exact
-    * cosine re-rank within the candidates only. Identical candidate
-    * discipline and scoring to [[graft.operators.Similarity]]'s
-    * `annIvfTopK`, so the output is bit-equal to the batch tier at the
-    * same dial — which is what keeps the stream hash-verifiable.
+    * vectors run [[graft.operators.Similarity.ivfSearch]], the one IVF
+    * search body `annIvfTopK` also runs, over the substrate-persisted
+    * serving index instead of the in-memory assignment: the broadcast
+    * centroid table (bounded: nCells rows) ranks cells, each probe
+    * keeps its nProbeCells nearest, ONE (cell)-keyed equi-join pairs
+    * it with the persisted cell postings, and the shared top-k step
+    * re-ranks by exact cosine. Only where the index bytes come from
+    * differs, so the output is bit-equal to the batch tier at the same
+    * dial — which is what keeps the stream hash-verifiable.
     *
     * BATCH transform by construction (the per-probe top-k needs the
     * probe's candidate set complete; every probe's candidates arrive
@@ -462,29 +463,8 @@ object EventStreams {
                         nProbeCells: Int = 8): DataFrame = {
     val s = batch.sparkSession
     graft.plans.GraftFunctions.ensureRegistered(s)
-    def scoreX1e6(a: Column, b: Column): Column =
-      floor(call_function("graft_cosine", a, b) * 1e6).cast("long")
-    val centers = s.read.parquet(centroidsPath)
-    val postings = s.read.parquet(cellsPath)
-    val cellRank = Window.partitionBy("probe_id")
-      .orderBy(col("cell_sim").desc, col("cell"))
-    val probeCells = batch.select(col("probe_id"), col("probe_emb"))
-      .crossJoin(broadcast(centers))
-      .select(col("probe_id"), col("probe_emb"), col("cell"),
-              scoreX1e6(col("probe_emb"), col("centroid")).as("cell_sim"))
-      .withColumn("cell_rank", row_number().over(cellRank))
-      .filter(col("cell_rank") <= nProbeCells)
-      .select("probe_id", "probe_emb", "cell")
-    val w = Window.partitionBy("probe_id")
-      .orderBy(col("cosine_x1e6").desc, col("neighbor_id"))
-    postings
-      .join(broadcast(probeCells), Seq("cell"))
-      .filter(col("vec_id") =!= col("probe_id"))
-      .select(col("probe_id"), col("vec_id").as("neighbor_id"),
-              scoreX1e6(col("probe_emb"), col("embedding")).as("cosine_x1e6"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("probe_id", "rank", "neighbor_id", "cosine_x1e6")
+    graft.operators.Similarity.ivfSearch(batch.select(col("probe_id"), col("probe_emb")),
+      s.read.parquet(centroidsPath), s.read.parquet(cellsPath), k, nProbeCells)
   }
 
   /** Stream-stream event-time interval join: each purchase joins the

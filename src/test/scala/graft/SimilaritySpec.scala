@@ -68,6 +68,38 @@ class SimilaritySpec extends AnyFunSuite with SparkFixture {
     graft.Caches.clear()
   }
 
+  test("topK: ties at the k-th score break on neighbor_id, k rows per group, keep columns in order") {
+    import spark.implicits._
+    // probe 1 has 5 candidates and a three-way tie across the k-th
+    // score; probe 2 has fewer than k; probe 3 reuses probe 1's
+    // neighbor ids with higher scores and must not displace them
+    val scored = Seq(
+      (1L, 7L, "a", 70L, 80L), (1L, 3L, "b", 30L, 80L), (1L, 5L, "c", 50L, 80L),
+      (1L, 9L, "d", 90L, 90L), (1L, 1L, "e", 10L, 70L),
+      (2L, 4L, "f", 40L, 10L), (2L, 2L, "g", 20L, 10L),
+      (3L, 3L, "h", 31L, 100L), (3L, 7L, "i", 71L, 95L), (3L, 8L, "j", 81L, 95L),
+      (3L, 6L, "k", 61L, 95L))
+      .toDF("probe_id", "neighbor_id", "tag", "extra", "s")
+    val out = Similarity.topK(scored, "probe_id", "s", 3, "tag", "extra")
+    assert(out.columns.toSeq == Seq("probe_id", "rank", "neighbor_id", "tag", "extra", "s"))
+    assert(Similarity.topK(scored, "probe_id", "s", 3, "extra", "tag").columns.toSeq ==
+      Seq("probe_id", "rank", "neighbor_id", "extra", "tag", "s"))
+    val got = out.orderBy("probe_id", "rank").as[(Long, Int, Long, String, Long, Long)]
+      .collect().toSeq
+    assert(got == Seq(
+      (1L, 1, 9L, "d", 90L, 90L), (1L, 2, 3L, "b", 30L, 80L), (1L, 3, 5L, "c", 50L, 80L),
+      (2L, 1, 2L, "g", 20L, 10L), (2L, 2, 4L, "f", 40L, 10L),
+      (3L, 1, 3L, "h", 31L, 100L), (3L, 2, 6L, "k", 61L, 95L), (3L, 3, 7L, "i", 71L, 95L)))
+  }
+
+  test("ann_ivf_topk and stream_ann_probe return the same rows") {
+    val ivf = Similarity.annIvfTopK(spark, sf)
+    val stream = Similarity.streamAnnProbe(spark, sf)
+    assert(ivf.count() > 0)
+    assert(ivf.exceptAll(stream).count() == 0 && stream.exceptAll(ivf).count() == 0)
+    graft.Caches.clear()
+  }
+
   test("knn_graph restricted to the probe subset equals brute-force ANN exactly") {
     val bf = Similarity.annBruteforceTopK(spark, sf, k = 10)
     val knn = Similarity.knnGraph(spark, sf, k = 10)

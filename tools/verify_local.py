@@ -3,8 +3,13 @@
 scale factor, then execute each oracle SQL in DuckDB over the same
 parquet tables and compare (columns sorted by name, rows sorted, values
 compared exactly after canonicalization). Dev tool only — not part of
-the shipped library."""
-import json, subprocess, sys, glob, os
+the shipped library.
+
+`--repo` is the checkout whose graft.Verify runs (default: the one
+holding this script) and `--out` where it writes one parquet per query
+plus oracle_sql.json (default /tmp/graft_verify), so two checkouts can
+be checked side by side into two output dirs."""
+import argparse, json, subprocess, sys, glob, os
 import duckdb
 import pandas as pd
 
@@ -13,26 +18,29 @@ import pandas as pd
 # the compare coerces to object dtype itself)
 pd.set_option("future.no_silent_downcasting", True)
 
-SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-OUT = "/tmp/graft_verify"
+ap = argparse.ArgumentParser(description="graft.Verify + DuckDB oracle compare")
+ap.add_argument("sf_dir", help="scale-factor dir holding the input parquet tables")
+ap.add_argument("--repo", default=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                help="checkout to build and run graft.Verify in")
+ap.add_argument("--out", default="/tmp/graft_verify", help="graft.Verify output dir")
+ap.add_argument("--no-build", action="store_true", help="re-compare the existing output dir")
+ap.add_argument("--only", metavar="QUERY_KEY", help="run one query key")
+ARGS = ap.parse_args()
+# absolute: graft.Verify runs with the checkout as its working dir
+SF_DIR, OUT = os.path.abspath(ARGS.sf_dir), os.path.abspath(ARGS.out)
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
 def run_verify():
     only = ""
-    if "--only" in sys.argv:
-        i = sys.argv.index("--only")
-        if i + 1 >= len(sys.argv) or sys.argv[i + 1].startswith("-"):
-            print("usage: verify_local.py [SF_DIR] [--no-build] [--only QUERY_KEY]")
-            sys.exit(2)
-        val = sys.argv[i + 1]
+    if ARGS.only is not None:
         # interpolated into the sbt runMain string — restrict to key chars
-        if not val.replace("_", "").isalnum():
-            print(f"--only expects a query key (letters/digits/underscore), got: {val!r}")
+        if not ARGS.only.replace("_", "").isalnum():
+            print(f"--only expects a query key (letters/digits/underscore), got: {ARGS.only!r}")
             sys.exit(2)
-        only = " " + val
+        only = " " + ARGS.only
     r = subprocess.run(
         ["sbt", "-batch", f'runMain graft.Verify {SF_DIR} {OUT}{only}'],
-        capture_output=True, text=True, cwd="/root/repo", timeout=1200)
+        capture_output=True, text=True, cwd=ARGS.repo, timeout=1200)
     if r.returncode != 0:
         print(r.stdout[-4000:]); print(r.stderr[-4000:]); sys.exit(1)
     errs = [l for l in (r.stdout + r.stderr).splitlines() if "[verify]" in l]
@@ -54,7 +62,7 @@ def canon(df):
     return df
 
 def main():
-    if "--no-build" not in sys.argv:
+    if not ARGS.no_build:
         run_verify()
     con = duckdb.connect()
     for t in TABLES:
