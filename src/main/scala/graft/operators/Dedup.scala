@@ -79,15 +79,14 @@ object Dedup {
     // .SetOverlap]]; bit-identical to the array_intersect/union road)
     call_function("graft_set_overlap", a, b).getField("j_x1000")
 
-  /** The ONE corpus-wide text scan the LSH dedup family shares:
-    * (doc_id, hs) where hs = xxhash64 of each distinct word n-gram
-    * shingle. Cached, because the plan references it three times
-    * (banding + both verification sides) and Spark re-executes
-    * non-cached subtrees per reference — the cache turns three
-    * tokenize+shingle scans into one (measured 3.4× at sf0.1).
-    * Footprint is 8 bytes/shingle (no strings), the 100 TB analogue
-    * of persisting a signature table; LRU-evictable, and reuse across
-    * calls is a feature, not a leak.
+  /** (doc_id, hs) from (doc_id, text) rows, where hs = xxhash64 of
+    * each distinct word n-gram shingle: tokens, then [[wordNgrams]],
+    * then the hash. The one shingle derivation of the LSH family —
+    * the persisted corpus table ([[hashedShingles]]) and the streaming
+    * delta's row-local recompute
+    * ([[graft.streaming.EventStreams.dedupMinhashPersisted]]) both
+    * call it, so a streamed document hashes exactly as its substrate
+    * row does.
     *
     * Tokens are projected to an attribute BEFORE shingling: wordNgrams
     * references its input inside a transform() lambda (outside the
@@ -95,6 +94,20 @@ object Dedup {
     * re-evaluated per element_at — ~3 regex+split passes per shingle
     * position (measured 16× slower at sf0.1). Hashed-shingle Jaccard
     * equals string-shingle Jaccard up to a ~2⁻⁶⁴-per-pair collision.
+    */
+  private[graft] def shingleHashes(docs: DataFrame, shingleN: Int): DataFrame =
+    docs.select(col("doc_id"), tokens(col("text")).as("toks"))
+      .select(col("doc_id"), wordNgrams(col("toks"), shingleN).as("sh"))
+      .select(col("doc_id"), transform(col("sh"), x => xxhash64(x)).as("hs"))
+
+  /** The ONE corpus-wide text scan the LSH dedup family shares:
+    * [[shingleHashes]] over the whole corpus. Cached, because the plan
+    * references it three times (banding + both verification sides)
+    * and Spark re-executes non-cached subtrees per reference — the
+    * cache turns three tokenize+shingle scans into one (measured 3.4×
+    * at sf0.1). Footprint is 8 bytes/shingle (no strings), the 100 TB
+    * analogue of persisting a signature table; LRU-evictable, and
+    * reuse across calls is a feature, not a leak.
     */
   private[graft] def hashedShingles(s: SparkSession, dir: String, shingleN: Int): DataFrame = {
     // MATERIALIZED once per (canonical dir, shingleN) and read back as
@@ -107,10 +120,7 @@ object Dedup {
     // within one operator into one in-memory scan.
     val realDir = graft.Substrate.canonicalDir(s, dir)
     val path = graft.Substrate.materialized(s, "shingles", realDir, Seq(shingleN)) {
-      Tables.documents(s, dir)
-        .select(col("doc_id"), tokens(col("text")).as("toks"))
-        .select(col("doc_id"), wordNgrams(col("toks"), shingleN).as("sh"))
-        .select(col("doc_id"), transform(col("sh"), x => xxhash64(x)).as("hs"))
+      shingleHashes(Tables.documents(s, dir), shingleN)
     }
     // Deliberately NOT Substrate.readFanout (r22): the A/B measured
     // the fan-out STRONGLY negative here (dedup_lsh_eval 2.5 s bare vs
@@ -143,6 +153,167 @@ object Dedup {
       .filter(col("a") < col("b"))
       .distinct()
   }
+
+  /** The MinHash banding step: (`id`, band_idx, band_hash) for every
+    * (doc_id, hs) row, through the fused one-pass banded MinHash
+    * (signature mins computed ONCE per row, bands in the same loop).
+    * `useOph` swaps in the O(shingles + perms) one-permutation-hashing
+    * construction ([[graft.functions.OphMinHashBands]]) — same banding
+    * statistics up to densification noise; candidate sets may differ
+    * but the exact post-verification output does not (DedupSpec
+    * asserts classic == OPH end to end on the corpus). Every batch
+    * key, substrate build and streaming probe bands here, so the base
+    * index and a probing delta can never band differently.
+    */
+  private[graft] def minhashBands(hashed: DataFrame, id: Column, nPerms: Int, nBands: Int,
+                                  useOph: Boolean = false): DataFrame = {
+    require(nPerms % nBands == 0,
+      s"nPerms ($nPerms) must be divisible by nBands ($nBands) — integer " +
+        "division would silently drop the trailing permutations from the banding")
+    val bandFn = if (useOph) "graft_minhash_oph" else "graft_minhash_bands"
+    hashed.select(id,
+      posexplode(call_function(bandFn, col("hs"), lit(nPerms), lit(nBands)))
+        .as(Seq("band_idx", "band_hash")))
+  }
+
+  /** Within-corpus MinHash candidates with both sides' shingles
+    * attached: [[minhashBands]], then [[candidatePairs]], then the
+    * `sh_a` / `sh_b` joins — (b, a, sh_a, sh_b). The bound half of the
+    * family's bound-then-verify split; each caller applies its own
+    * exact scorer on top.
+    */
+  private def bandedCandidates(hashed: DataFrame, nPerms: Int, nBands: Int,
+                               useOph: Boolean = false): DataFrame = {
+    val cand = candidatePairs(minhashBands(hashed, col("doc_id"), nPerms, nBands, useOph), "doc_id")
+    val shA = hashed.select(col("doc_id").as("a"), col("hs").as("sh_a"))
+    val shB = hashed.select(col("doc_id").as("b"), col("hs").as("sh_b"))
+    cand.join(shA, "a").join(shB, "b")
+  }
+
+  /** The hot-band prune of a base band index: band keys shared by
+    * more than `maxBucket` rows carry no dedup signal (stopword-like
+    * bands) and are dropped — the same cap [[candidatePairs]] applies
+    * within a corpus, applied where the base's buckets live.
+    */
+  private[graft] def pruneHotBands(bands: DataFrame, maxBucket: Int): DataFrame = {
+    val hotKeys = bands.groupBy("band_idx", "band_hash")
+      .agg(count(lit(1)).as("n")).filter(col("n") > maxBucket)
+      .select("band_idx", "band_hash")
+    bands.join(hotKeys, Seq("band_idx", "band_hash"), "left_anti")
+  }
+
+  /** Delta-vs-base probe: distinct (`id`, base_id) pairs whose bands
+    * collide on one (band_idx, band_hash)-keyed equi-join against the
+    * (pruned) base index.
+    */
+  private def probeBase(deltaBands: DataFrame, baseBands: DataFrame, id: String): DataFrame =
+    deltaBands.join(baseBands, Seq("band_idx", "band_hash"))
+      .select(col(id), col("base_id")).distinct()
+
+  /** The base half of the MinHash delta-vs-base split over the corpus
+    * shingle table: the pruned band index (band_idx, band_hash,
+    * base_id) and the verify side (base_id, sh_b).
+    */
+  private def minhashBaseBands(hashed: DataFrame, deltaMod: Int, nPerms: Int,
+                               nBands: Int, maxBucket: Int): DataFrame =
+    pruneHotBands(minhashBands(hashed.filter(col("doc_id") % deltaMod =!= 0),
+      col("doc_id").as("base_id"), nPerms, nBands), maxBucket)
+
+  private def minhashBaseShingles(hashed: DataFrame, deltaMod: Int): DataFrame =
+    hashed.filter(col("doc_id") % deltaMod =!= 0)
+      .select(col("doc_id").as("base_id"), col("hs").as("sh_b"))
+
+  /** The delta-vs-base MinHash near-dup verdict: band the delta's
+    * (doc_id, hs) rows, [[probeBase]] the pruned base index, verify
+    * each candidate with exact [[jaccardX1000]] ≥ τ against the base
+    * shingles (base_id, sh_b), and pick each delta doc's best partner
+    * by (Jaccard desc, base_id asc) as a partial-aggregable
+    * max(struct(jac, −base_id)) — no window, no global sort. One row
+    * per delta doc: (doc_id, is_near_dup, best_base_id,
+    * best_jaccard_x1000), partner columns null when nothing verifies.
+    */
+  private[graft] def minhashNearDup(delta: DataFrame, baseBands: DataFrame,
+                                    baseShingles: DataFrame, nPerms: Int, nBands: Int,
+                                    tauX1000: Long): DataFrame = {
+    val best = probeBase(minhashBands(delta, col("doc_id"), nPerms, nBands), baseBands, "doc_id")
+      .join(delta.select(col("doc_id"), col("hs").as("sh_d")), "doc_id")
+      .join(baseShingles, "base_id")
+      .select(col("doc_id"), col("base_id"),
+              jaccardX1000(col("sh_d"), col("sh_b")).as("jac"))
+      .filter(col("jac") >= tauX1000)
+      .groupBy("doc_id")
+      .agg(max(struct(col("jac"), (-col("base_id")).as("neg_base"))).as("m"))
+      .select(col("doc_id"), (-col("m.neg_base")).as("best_base_id"),
+              col("m.jac").as("best_jaccard_x1000"))
+    delta.select("doc_id")
+      .join(best, Seq("doc_id"), "left")
+      .select(col("doc_id"), col("best_base_id").isNotNull.as("is_near_dup"),
+              col("best_base_id"), col("best_jaccard_x1000"))
+  }
+
+  /** (vec_id, embedding) of the corpus, cached: every embedding dedup
+    * plan references it several times (band build, verify sides, id
+    * list), and without the cache each reference re-scans and
+    * re-decodes the float arrays from parquet (measured 3.47 s vs
+    * 1.25 s at sf0.1 under pass-isolated caching).
+    */
+  private def cachedEmbeddings(s: SparkSession, dir: String): DataFrame =
+    graft.Caches.cached(Tables.embeddings(s, dir).select(col("vec_id"), col("embedding")))
+
+  /** The SRP-LSH band step: (vec_id, band_idx, band_hash). The
+    * signature is projected to an attribute before banding, so the SRP
+    * dot-product scan runs once per row, not once per band.
+    */
+  private def srpBands(emb: DataFrame, nBands: Int, bitsPerBand: Int): DataFrame =
+    emb.select(col("vec_id"),
+        call_function("graft_srp_sig", col("embedding"), lit(nBands * bitsPerBand)).as("sig"))
+      .select(col("vec_id"), explode(sliceBands(col("sig"), nBands, bitsPerBand)).as("bd"))
+      .select(col("vec_id"), col("bd.band_idx"), col("bd.band_hash"))
+
+  /** The family's content hash: sha2-256 of the normalized text. What
+    * "exact duplicate" means everywhere in graft — batch, streaming and
+    * the corpus card — and what shuffles at 100 TB (32 bytes/doc, never
+    * the text).
+    */
+  private[graft] def contentHash(text: Column): Column = sha2(normText(text), 256)
+
+  /** (doc_id, content_hash, h) from (doc_id, text): the content hash
+    * plus its 64-bit bloom key. The key hashes the CONTENT HASH, not
+    * the raw text: the xxhash64 input is then a fixed 64-byte ASCII
+    * string — cheaper than re-hashing whole documents, and exactly two
+    * XXH64 stripes with an empty tail, which is what makes the screen's
+    * bit positions replayable straight-line in the DuckDB oracle
+    * (SparkEntry.bloomProbeOracle).
+    */
+  private[graft] def bloomKeyed(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), contentHash(col("text")).as("content_hash"))
+      .withColumn("h", xxhash64(col("content_hash")))
+
+  /** The OR-merged `graft_bloom` membership sketch over bloom keys. */
+  private[graft] def bloomSketch(h: Column, numBits: Int, numHashes: Int): Column =
+    call_function("graft_bloom", h, lit(numBits), lit(numHashes)).as("bloom")
+
+  /** The bloom screen: every keyed row ([[bloomKeyed]]) probes the
+    * broadcast 1-row sketch ROW-LOCALLY, yielding (doc_id,
+    * content_hash, maybe_dup). A negative is definitively new (no
+    * false negatives); only positives need the exact hash join.
+    */
+  private[graft] def bloomScreen(keyed: DataFrame, sketch: DataFrame): DataFrame =
+    keyed.crossJoin(broadcast(sketch))
+      .select(col("doc_id"), col("content_hash"),
+        call_function("graft_bloom_contains", col("bloom"), col("h")).as("maybe_dup"))
+
+  /** Both directions of each scored pair (a, b, `score`) as (doc_id,
+    * partner, `score`) rows, so every member of a pair gets a verdict —
+    * via a 2-row explode, NOT a union of two selects over `scored` (a
+    * union would reference the subtree twice and re-execute the
+    * candidate join; same multi-reference hazard as everywhere else).
+    */
+  private def bothDirections(scored: DataFrame, score: String): DataFrame =
+    scored.select(explode(array(
+        struct(col("a").as("doc_id"), col("b").as("partner"), col(score)),
+        struct(col("b").as("doc_id"), col("a").as("partner"), col(score)))).as("e"))
+      .select(col("e.doc_id"), col("e.partner"), col(s"e.$score").as(score))
 
   /** One verdict row per doc: rep_id = smallest verified neighbor
     * below it (one-hop), else itself; is_dup = a smaller rep exists.
@@ -301,7 +472,7 @@ object Dedup {
     */
   def dedupExactHash(s: SparkSession, dir: String): DataFrame = {
     Tables.documents(s, dir)
-      .select(col("doc_id"), sha2(normText(col("text")), 256).as("content_hash"))
+      .select(col("doc_id"), contentHash(col("text")).as("content_hash"))
       .groupBy("content_hash")
       .agg(min("doc_id").as("keep_doc_id"), count(lit(1)).as("n_copies"))
       .select("keep_doc_id", "n_copies")
@@ -357,7 +528,7 @@ object Dedup {
     require(deltaMod > 1, s"deltaMod $deltaMod must exceed 1")
     // Shared by the base and delta sides — one scan+hash, not two.
     val hashed = graft.Caches.cached(Tables.documents(s, dir)
-      .select(col("doc_id"), sha2(normText(col("text")), 256).as("content_hash")))
+      .select(col("doc_id"), contentHash(col("text")).as("content_hash")))
     val base = hashed.filter(col("doc_id") % deltaMod =!= 0)
       .select(col("content_hash")).distinct()
       .withColumn("in_base", lit(true))
@@ -411,16 +582,14 @@ object Dedup {
     val hashes = graft.Substrate.materialized(
         s, "dedup_base_hashes", realDir, Seq(deltaMod)) {
       Tables.documents(s, dir).filter(col("doc_id") % deltaMod =!= 0)
-        .select(sha2(normText(col("text")), 256).as("content_hash"))
+        .select(contentHash(col("text")).as("content_hash"))
         .distinct()
         .withColumn("h", xxhash64(col("content_hash")))
     }
     val bloom = graft.Substrate.materialized(
         s, "dedup_base_bloom", realDir, Seq(deltaMod, numBits, numHashes)) {
       graft.plans.GraftFunctions.ensureRegistered(s)
-      s.read.parquet(hashes)
-        .agg(call_function("graft_bloom", col("h"), lit(numBits), lit(numHashes))
-          .as("bloom"))
+      s.read.parquet(hashes).agg(bloomSketch(col("h"), numBits, numHashes))
     }
     (hashes, bloom)
   }
@@ -452,9 +621,11 @@ object Dedup {
     * LSH family: (1) the base corpus's PRUNED banded-MinHash index
     * (band_idx, band_hash, base_id) with hot band keys (> maxBucket
     * members — stopword-like bands carrying no dedup signal) removed
-    * at publish time, and (2) the base hashed-shingle table keyed for
-    * the verify join. Both derive from the already-persisted corpus
-    * shingle substrate and are deterministic integer bytes (xxhash64
+    * at publish time ([[pruneHotBands]]), and (2) the base
+    * hashed-shingle table keyed for the verify join. Both derive from
+    * the already-persisted corpus shingle substrate through the same
+    * two definitions the batch [[dedupIncrementalMinhash]] builds its
+    * in-memory base with, and are deterministic integer bytes (xxhash64
     * signatures; the prune is a pure count threshold), published once
     * per ingest through [[graft.Substrate]]. Every micro-batch then
     * probes a manifest-sized parquet band index instead of re-banding
@@ -466,26 +637,16 @@ object Dedup {
   private[graft] def minhashBaseArtifacts(s: SparkSession, dir: String,
       deltaMod: Int = DefaultDeltaMod, nPerms: Int = 64, nBands: Int = 16,
       shingleN: Int = 3, maxBucket: Int = 1024): (String, String) = {
-    require(nPerms % nBands == 0, s"nPerms ($nPerms) not divisible by nBands ($nBands)")
     GraftFunctions.ensureRegistered(s)
     val realDir = graft.Substrate.canonicalDir(s, dir)
     val bands = graft.Substrate.materialized(
         s, "minhash_base_bands", realDir,
         Seq(deltaMod, nPerms, nBands, shingleN, maxBucket)) {
-      val baseBands = hashedShingles(s, dir, shingleN)
-        .filter(col("doc_id") % deltaMod =!= 0)
-        .select(col("doc_id").as("base_id"),
-          posexplode(call_function("graft_minhash_bands", col("hs"), lit(nPerms), lit(nBands)))
-            .as(Seq("band_idx", "band_hash")))
-      val hotKeys = baseBands.groupBy("band_idx", "band_hash")
-        .agg(count(lit(1)).as("n")).filter(col("n") > maxBucket)
-        .select("band_idx", "band_hash")
-      baseBands.join(hotKeys, Seq("band_idx", "band_hash"), "left_anti")
+      minhashBaseBands(hashedShingles(s, dir, shingleN), deltaMod, nPerms, nBands, maxBucket)
     }
     val shingles = graft.Substrate.materialized(
         s, "minhash_base_shingles", realDir, Seq(deltaMod, shingleN)) {
-      hashedShingles(s, dir, shingleN).filter(col("doc_id") % deltaMod =!= 0)
-        .select(col("doc_id").as("base_id"), col("hs").as("sh_b"))
+      minhashBaseShingles(hashedShingles(s, dir, shingleN), deltaMod)
     }
     (bands, shingles)
   }
@@ -548,30 +709,14 @@ object Dedup {
     // collisions are expected, and a verify keyed on the screen's own
     // hash would inherit them as false "exact" dups ([[dedupExactHash]]
     // / [[dedupIncremental]] define duplication by sha2-256).
-    // The bloom key hashes the CONTENT HASH, not the raw text: the
-    // xxhash64 input is then a fixed 64-byte ASCII string — cheaper
-    // than re-hashing whole documents (the sha pass already read
-    // them), and exactly two XXH64 stripes with an empty tail, which
-    // is what makes the screen's bit positions replayable straight-
-    // line in the DuckDB oracle (SparkEntry.bloomProbeOracle) — no
-    // data-length-dependent stripe loop.
-    val hashed = graft.Caches.cached(Tables.documents(s, dir)
-      .select(col("doc_id"),
-              sha2(normText(col("text")), 256).as("content_hash"))
-      .withColumn("h", xxhash64(col("content_hash"))))
+    val hashed = graft.Caches.cached(bloomKeyed(Tables.documents(s, dir)))
     val base = hashed.filter(col("doc_id") % deltaMod =!= 0)
-    val sketch = base.agg(
-      call_function("graft_bloom", col("h"), lit(numBits), lit(numHashes))
-        .as("bloom"))
+    val sketch = base.agg(bloomSketch(col("h"), numBits, numHashes))
     // cached: both the positives branch and the final join consume the
     // screen — without it the sketch build and the whole-delta probe
     // execute twice
     val screened = graft.Caches.cached(
-      hashed.filter(col("doc_id") % deltaMod === 0)
-        .crossJoin(broadcast(sketch))
-        .select(col("doc_id"), col("content_hash"),
-          call_function("graft_bloom_contains", col("bloom"), col("h"))
-            .as("maybe_dup")))
+      bloomScreen(hashed.filter(col("doc_id") % deltaMod === 0), sketch))
     // exact verification for the positives only — the negatives never
     // reach a shuffle (left join keeps them with in_base null)
     val positives = screened.filter(col("maybe_dup"))
@@ -588,21 +733,22 @@ object Dedup {
   /** Incremental NEAR-dup: today's delta batch probed against the
     * accumulated corpus's MinHash band index — the continuously-
     * ingesting counterpart of [[dedupMinhashLsh]], exactly as
-    * [[dedupIncremental]] is for exact hashes. The base side's banded
-    * signature table is the PERSISTED INDEX a production pipeline
-    * keeps (here derived from the shared cached shingle scan); a new
-    * batch costs: band its own signatures, ONE equi-join on the
-    * (band_idx, band_hash) key against the index, exact Jaccard
-    * verification on the surviving candidates — base text never
-    * rescanned, base×base pairs never reconsidered, and the join is
-    * keyed both sides (the delta grows with batch size, so neither
-    * side broadcasts by construction).
+    * [[dedupIncremental]] is for exact hashes. It runs the family's one
+    * delta-vs-base body, [[minhashNearDup]], over the in-memory corpus
+    * shingle table: the base side is the same pruned band index and
+    * base shingle table that [[minhashBaseArtifacts]] persists for the
+    * streaming twin ([[streamDedupMinhash]]), built by the same two
+    * definitions, so the batch and streaming keys differ only in where
+    * the base bytes come from. A new batch costs: band its own
+    * signatures, ONE equi-join on the (band_idx, band_hash) key against
+    * the index, exact Jaccard verification on the surviving candidates
+    * — base text never rescanned, base×base pairs never reconsidered,
+    * and the join is keyed both sides (the delta grows with batch
+    * size, so neither side broadcasts by construction).
     *
-    * The stopword-band valve moves to the INDEX side: a band key
-    * shared by more than `maxBucket` base docs carries no dedup
-    * signal and is dropped before the probe join — the same cap
-    * [[candidatePairs]] applies within-corpus, applied where the
-    * bucket lives.
+    * The stopword-band valve is [[pruneHotBands]] on the INDEX side: a
+    * band key shared by more than `maxBucket` base docs carries no
+    * dedup signal and is dropped before the probe join.
     *
     * Output: one row per DELTA doc — is it a near-dup of the base,
     * and its best base partner by (Jaccard desc, base_id). Oracle is
@@ -624,35 +770,11 @@ object Dedup {
                               shingleN: Int = 3, tauX1000: Long = 800,
                               maxBucket: Int = 1024): DataFrame = {
     require(deltaMod > 1, s"deltaMod $deltaMod must exceed 1")
-    require(nPerms % nBands == 0, s"nPerms ($nPerms) not divisible by nBands ($nBands)")
     GraftFunctions.ensureRegistered(s)
     val hashed = hashedShingles(s, dir, shingleN)
-    val bands = hashed.select(col("doc_id"),
-      posexplode(call_function("graft_minhash_bands", col("hs"), lit(nPerms), lit(nBands)))
-        .as(Seq("band_idx", "band_hash")))
-    val baseBands = bands.filter(col("doc_id") % deltaMod =!= 0)
-      .select(col("doc_id").as("base_id"), col("band_idx"), col("band_hash"))
-    val deltaBands = bands.filter(col("doc_id") % deltaMod === 0)
-    val hotKeys = baseBands.groupBy("band_idx", "band_hash")
-      .agg(count(lit(1)).as("n")).filter(col("n") > maxBucket)
-      .select("band_idx", "band_hash")
-    val prunedBase = baseBands.join(hotKeys, Seq("band_idx", "band_hash"), "left_anti")
-    val cand = deltaBands.join(prunedBase, Seq("band_idx", "band_hash"))
-      .select(col("doc_id"), col("base_id")).distinct()
-    val shD = hashed.select(col("doc_id"), col("hs").as("sh_d"))
-    val shB = hashed.select(col("doc_id").as("base_id"), col("hs").as("sh_b"))
-    val scored = cand.join(shD, "doc_id").join(shB, "base_id")
-      .select(col("doc_id"), col("base_id"),
-              jaccardX1000(col("sh_d"), col("sh_b")).as("jac"))
-      .filter(col("jac") >= tauX1000)
-    val w = Window.partitionBy("doc_id").orderBy(col("jac").desc, col("base_id"))
-    val best = scored.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-      .select(col("doc_id"), col("base_id").as("best_base_id"),
-              col("jac").as("best_jaccard_x1000"))
-    hashed.select("doc_id").filter(col("doc_id") % deltaMod === 0)
-      .join(best, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("best_base_id").isNotNull.as("is_near_dup"),
-              col("best_base_id"), col("best_jaccard_x1000"))
+    minhashNearDup(hashed.filter(col("doc_id") % deltaMod === 0),
+        minhashBaseBands(hashed, deltaMod, nPerms, nBands, maxBucket),
+        minhashBaseShingles(hashed, deltaMod), nPerms, nBands, tauX1000)
       .orderBy("doc_id")
   }
 
@@ -664,28 +786,10 @@ object Dedup {
     */
   private def minhashVerifiedPairs(s: SparkSession, dir: String,
                                    nPerms: Int, nBands: Int,
-                                   shingleN: Int, tauX1000: Long,
-                                   useOph: Boolean = false): (DataFrame, DataFrame) = {
-    require(nPerms % nBands == 0,
-      s"nPerms ($nPerms) must be divisible by nBands ($nBands) — integer " +
-        "division would silently drop the trailing permutations from the banding")
+                                   shingleN: Int, tauX1000: Long): (DataFrame, DataFrame) = {
     GraftFunctions.ensureRegistered(s)
     val hashed = hashedShingles(s, dir, shingleN)
-    // Fused one-pass banded MinHash over the pre-hashed shingles
-    // (signature mins computed ONCE per row, bands in the same loop).
-    // useOph swaps in the O(shingles + perms) one-permutation-hashing
-    // construction ([[graft.functions.OphMinHashBands]]) — same
-    // banding statistics up to densification noise; candidate sets
-    // may differ but the exact post-verification output does not
-    // (DedupSpec asserts classic == OPH end to end on the corpus).
-    val bandFn = if (useOph) "graft_minhash_oph" else "graft_minhash_bands"
-    val bands = hashed.select(col("doc_id"),
-      posexplode(call_function(bandFn, col("hs"), lit(nPerms), lit(nBands)))
-        .as(Seq("band_idx", "band_hash")))
-    val cand = candidatePairs(bands, "doc_id")
-    val shA = hashed.select(col("doc_id").as("a"), col("hs").as("sh_a"))
-    val shB = hashed.select(col("doc_id").as("b"), col("hs").as("sh_b"))
-    val verified = cand.join(shA, "a").join(shB, "b")
+    val verified = bandedCandidates(hashed, nPerms, nBands)
       .filter(jaccardX1000(col("sh_a"), col("sh_b")) >= tauX1000)
       .select("a", "b")
     (hashed.select("doc_id"), verified)
@@ -857,33 +961,14 @@ object Dedup {
   def dedupNgramJaccard(s: SparkSession, dir: String,
                         nPerms: Int = 258, nBands: Int = 86,
                         tauX1000: Long = 500, useOph: Boolean = false): DataFrame = {
-    require(nPerms % nBands == 0,
-      s"nPerms ($nPerms) must be divisible by nBands ($nBands) — integer " +
-        "division would silently drop the trailing permutations from the banding")
     GraftFunctions.ensureRegistered(s)
     val hashed = hashedShingles(s, dir, 2)
-    // Fused one-pass banded MinHash over the pre-hashed shingles; at
-    // 258 perms this row-local scan is the operator's dominant cost,
-    // exactly the regime the OPH variant caps (see minhashVerifiedPairs).
-    val bandFn = if (useOph) "graft_minhash_oph" else "graft_minhash_bands"
-    val bands = hashed.select(col("doc_id"),
-      posexplode(call_function(bandFn, col("hs"), lit(nPerms), lit(nBands)))
-        .as(Seq("band_idx", "band_hash")))
-    val cand = candidatePairs(bands, "doc_id")
-    val shA = hashed.select(col("doc_id").as("a"), col("hs").as("sh_a"))
-    val shB = hashed.select(col("doc_id").as("b"), col("hs").as("sh_b"))
-    // Score both directions so every member of a pair gets a verdict —
-    // via a 2-row explode, NOT a union of two selects over `scored`
-    // (a union would reference the subtree twice and re-execute the
-    // candidate join; same multi-reference hazard as everywhere else).
-    val scored = cand.join(shA, "a").join(shB, "b")
+    // At 258 perms the row-local banding scan is the operator's
+    // dominant cost, exactly the regime the OPH variant caps.
+    val scored = bandedCandidates(hashed, nPerms, nBands, useOph)
       .select(col("a"), col("b"), jaccardX1000(col("sh_a"), col("sh_b")).as("j"))
       .filter(col("j") >= tauX1000)
-    val both = scored.select(explode(array(
-        struct(col("a").as("doc_id"), col("b").as("partner"), col("j")),
-        struct(col("b").as("doc_id"), col("a").as("partner"), col("j")))).as("e"))
-      .select(col("e.doc_id"), col("e.partner"), col("e.j").as("j"))
-    val best = both.groupBy("doc_id")
+    val best = bothDirections(scored, "j").groupBy("doc_id")
       .agg(max(struct(col("j"), (col("partner") * -1).as("neg_partner"))).as("top"))
       .select(col("doc_id"),
               (col("top.neg_partner") * -1).as("best_match_id"),
@@ -921,17 +1006,8 @@ object Dedup {
   def dedupContainment(s: SparkSession, dir: String,
                        nPerms: Int = 258, nBands: Int = 86,
                        tauJX1000: Long = 500, tauContX1000: Long = 900): DataFrame = {
-    require(nPerms % nBands == 0,
-      s"nPerms ($nPerms) must be divisible by nBands ($nBands) — integer " +
-        "division would silently drop the trailing permutations from the banding")
     GraftFunctions.ensureRegistered(s)
     val hashed = hashedShingles(s, dir, 2)
-    val bands = hashed.select(col("doc_id"),
-      posexplode(call_function("graft_minhash_bands", col("hs"), lit(nPerms), lit(nBands)))
-        .as(Seq("band_idx", "band_hash")))
-    val cand = candidatePairs(bands, "doc_id")
-    val shA = hashed.select(col("doc_id").as("a"), col("hs").as("sh_a"))
-    val shB = hashed.select(col("doc_id").as("b"), col("hs").as("sh_b"))
     // Score once per pair; per-direction containment divides the SAME
     // intersection by each side's own shingle count. The J-floor filter
     // keeps the per-doc aggregation off the sub-threshold candidate mass
@@ -939,7 +1015,7 @@ object Dedup {
     // ONE overlap kernel pass per pair, projected to an attribute so
     // the inter and J extracts below share it (two references — the
     // CollapseProject rule)
-    val scored = cand.join(shA, "a").join(shB, "b")
+    val scored = bandedCandidates(hashed, nPerms, nBands)
       .select(col("a"), col("b"),
               call_function("graft_set_overlap", col("sh_a"), col("sh_b")).as("ov"),
               size(col("sh_a")).cast("long").as("na"),
@@ -997,13 +1073,7 @@ object Dedup {
       .join(norm.select(col("doc_id").as("b"), col("norm").as("nb")), "b")
       .select(col("a"), col("b"),
               levenshtein(col("na"), col("nb")).cast("long").as("lev"))
-    // both directions via the 2-row explode (see dedupNgramJaccard for
-    // why a union of two selects would re-execute the scoring subtree)
-    val both = scored.select(explode(array(
-        struct(col("a").as("doc_id"), col("b").as("partner"), col("lev")),
-        struct(col("b").as("doc_id"), col("a").as("partner"), col("lev")))).as("e"))
-      .select(col("e.doc_id"), col("e.partner"), col("e.lev").as("lev"))
-    val best = both.groupBy("doc_id")
+    val best = bothDirections(scored, "lev").groupBy("doc_id")
       .agg(min(struct(col("lev"), col("partner"))).as("top"))
       .select(col("doc_id"), col("top.partner").as("best_match_id"),
               col("top.lev").as("best_lev"))
@@ -1066,22 +1136,8 @@ object Dedup {
                                      nBands: Int, bitsPerBand: Int,
                                      tau: Double): (DataFrame, DataFrame) = {
     GraftFunctions.ensureRegistered(s)
-    // The family's one-shared-scan rule (see hashedShingles) applied to
-    // embeddings: the plan references this projection four times (band
-    // build, both verification sides, verdict id list), and without the
-    // cache each reference re-scans and re-decodes the float arrays
-    // from parquet (measured 3.47 s vs 1.25 s at sf0.1 under
-    // pass-isolated caching).
-    val emb = graft.Caches.cached(
-      Tables.embeddings(s, dir).select(col("vec_id"), col("embedding")))
-    // Signature projected to an attribute before banding, so the SRP
-    // dot-product scan runs once per row, not once per band (the same
-    // expression-duplication hazard as the MinHash path).
-    val bands = emb.select(col("vec_id"),
-        call_function("graft_srp_sig", col("embedding"), lit(nBands * bitsPerBand)).as("sig"))
-      .select(col("vec_id"), explode(sliceBands(col("sig"), nBands, bitsPerBand)).as("bd"))
-      .select(col("vec_id"), col("bd.band_idx"), col("bd.band_hash"))
-    val cand = candidatePairs(bands, "vec_id")
+    val emb = cachedEmbeddings(s, dir)
+    val cand = candidatePairs(srpBands(emb, nBands, bitsPerBand), "vec_id")
     val embA = emb.select(col("vec_id").as("a"), col("embedding").as("emb_a"))
     val embB = emb.select(col("vec_id").as("b"), col("embedding").as("emb_b"))
     val verified = cand.join(embA, "a").join(embB, "b")
@@ -1099,8 +1155,9 @@ object Dedup {
     * (the same deployment contract as the MinHash pair), the delta's
     * bands probe it, and only (band-matched) candidate pairs read
     * embeddings back for the exact-cosine verify. The hot-bucket cap
-    * is the same recall valve as the MinHash path (a stopword-band
-    * bucket would otherwise quadratically explode candidates).
+    * ([[pruneHotBands]]) and the band probe ([[probeBase]]) are the
+    * MinHash path's own definitions (a stopword-band bucket would
+    * otherwise quadratically explode candidates).
     *
     * The verdict is `MIN(base_id)` over verified partners — the
     * family's min-id representative convention, chosen deliberately
@@ -1113,21 +1170,11 @@ object Dedup {
                                 tau: Double = 0.9, maxBucket: Int = 1024): DataFrame = {
     require(deltaMod > 1, s"deltaMod $deltaMod must exceed 1")
     GraftFunctions.ensureRegistered(s)
-    val emb = graft.Caches.cached(
-      Tables.embeddings(s, dir).select(col("vec_id"), col("embedding")))
-    val bands = emb.select(col("vec_id"),
-        call_function("graft_srp_sig", col("embedding"), lit(nBands * bitsPerBand)).as("sig"))
-      .select(col("vec_id"), explode(sliceBands(col("sig"), nBands, bitsPerBand)).as("bd"))
-      .select(col("vec_id"), col("bd.band_idx"), col("bd.band_hash"))
-    val baseBands = bands.filter(col("vec_id") % deltaMod =!= 0)
-      .select(col("vec_id").as("base_id"), col("band_idx"), col("band_hash"))
-    val hotKeys = baseBands.groupBy("band_idx", "band_hash")
-      .agg(count(lit(1)).as("n")).filter(col("n") > maxBucket)
-      .select("band_idx", "band_hash")
-    val prunedBase = baseBands.join(hotKeys, Seq("band_idx", "band_hash"), "left_anti")
-    val cand = bands.filter(col("vec_id") % deltaMod === 0)
-      .join(prunedBase, Seq("band_idx", "band_hash"))
-      .select(col("vec_id"), col("base_id")).distinct()
+    val emb = cachedEmbeddings(s, dir)
+    val bands = srpBands(emb, nBands, bitsPerBand)
+    val prunedBase = pruneHotBands(bands.filter(col("vec_id") % deltaMod =!= 0)
+      .select(col("vec_id").as("base_id"), col("band_idx"), col("band_hash")), maxBucket)
+    val cand = probeBase(bands.filter(col("vec_id") % deltaMod === 0), prunedBase, "vec_id")
     val embD = emb.select(col("vec_id"), col("embedding").as("emb_d"))
     val embB = emb.select(col("vec_id").as("base_id"), col("embedding").as("emb_b"))
     val best = cand.join(embD, "vec_id").join(embB, "base_id")
@@ -1212,8 +1259,7 @@ object Dedup {
     GraftFunctions.ensureRegistered(s)
     val cc = dedupSemanticClusters(s, dir, nBands, bitsPerBand, tau)
       .select(col("vec_id"), col("rep_vec_id").as("component"))
-    val emb = graft.Caches.cached(
-      Tables.embeddings(s, dir).select(col("vec_id"), col("embedding")))
+    val emb = cachedEmbeddings(s, dir)
     val members = cc.join(emb, "vec_id")
     val cents = members.groupBy("component")
       .agg(call_function("graft_vec_sum_micro", col("embedding")).as("sum_micro"),
@@ -1296,15 +1342,10 @@ object Dedup {
   def dedupLshEval(s: SparkSession, dir: String,
                    nPerms: Int = 258, nBands: Int = 86,
                    tauX1000: Long = 500, sampleMod: Int = 20): DataFrame = {
-    require(nPerms % nBands == 0,
-      s"nBands ($nBands) must divide nPerms ($nPerms) evenly")
     require(sampleMod > 0, "sampleMod must be positive")
     GraftFunctions.ensureRegistered(s)
     val hashed = hashedShingles(s, dir, 2)
-    val bands = hashed.select(col("doc_id"),
-      posexplode(call_function("graft_minhash_bands", col("hs"), lit(nPerms), lit(nBands)))
-        .as(Seq("band_idx", "band_hash")))
-    val candTouching = candidatePairs(bands, "doc_id")
+    val candTouching = candidatePairs(minhashBands(hashed, col("doc_id"), nPerms, nBands), "doc_id")
       .filter(col("a") % sampleMod === 0 || col("b") % sampleMod === 0)
     // EXACT truth via the inverted-index similarity join, not a
     // sample×corpus nested loop: sample postings ⋈ corpus postings on

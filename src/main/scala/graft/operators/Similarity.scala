@@ -290,17 +290,14 @@ object Similarity {
   private def ivfAssigned(emb: DataFrame, nCells: Int,
                           dir: String): (DataFrame, Array[Array[Float]]) = {
     GraftFunctions.ensureRegistered(emb.sparkSession)
-    val fit = graft.Caches.model("ivf_quantizer", dir, nCells) {
-      lloydFit(emb, nCells, maxIters = 10, seedMaxmin = true)
-    }
-    val cents = fit.centroidMicro.map(_.map(_ / 1e6))
+    val m = ivfModel(emb, nCells, dir)
     // withColumn, not select: pass-through columns (e.g. the label a
     // segmented index keeps alongside each posting) survive assignment
     val assigned = emb.withColumn("cell",
       call_function("graft_kmeans_assign", col("embedding"),
-        typedLit(fit.cids.indices.map(_.toLong)),
-        typedLit(cents.map(_.toSeq).toSeq)).cast("int"))
-    (assigned, cents.map(_.map(_.toFloat)))
+        typedLit(m.cids.indices.map(_.toLong)),
+        typedLit(m.assignCents)).cast("int"))
+    (assigned, m.rankCents.map(_.toArray).toArray)
   }
 
   /** The substrate-persisted IVF SERVING index: cell-assigned corpus
@@ -610,21 +607,30 @@ object Similarity {
                                            assignCents: Seq[Seq[Double]],
                                            rankCents: Seq[Seq[Float]])
 
-  /** Driver-side hook for the DuckDB oracle generators: the
-    * session-memoized IVF model at a dial (shared Caches.model key
-    * with [[ivfAssigned]], so after any IVF-tier call this is a
-    * lookup, not a fit).
+  /** The one IVF quantizer definition: the session-memoized
+    * maxmin-seeded [[lloydFit]] at (dir, nCells), as [[IvfModel]]. The
+    * serving tiers ([[ivfAssigned]]) and the DuckDB oracle generators
+    * ([[ivfDefaultModel]]) both read it, so they cannot see different
+    * fits or different constants.
     */
-  private[graft] def ivfDefaultModel(s: SparkSession, dir: String,
-                                     nCells: Int = 16): IvfModel = {
-    GraftFunctions.ensureRegistered(s)
-    val emb = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
+  private def ivfModel(emb: DataFrame, nCells: Int, dir: String): IvfModel = {
     val fit = graft.Caches.model("ivf_quantizer", dir, nCells) {
       lloydFit(emb, nCells, maxIters = 10, seedMaxmin = true)
     }
     val cents = fit.centroidMicro.map(_.map(_ / 1e6))
     IvfModel(fit.cids.toSeq, cents.map(_.toSeq).toSeq,
              cents.map(_.map(_.toFloat).toSeq).toSeq)
+  }
+
+  /** Driver-side hook for the DuckDB oracle generators: the
+    * session-memoized IVF model at a dial ([[ivfModel]], shared with
+    * [[ivfAssigned]], so after any IVF-tier call this is a lookup, not
+    * a fit).
+    */
+  private[graft] def ivfDefaultModel(s: SparkSession, dir: String,
+                                     nCells: Int = 16): IvfModel = {
+    GraftFunctions.ensureRegistered(s)
+    ivfModel(Tables.embeddings(s, dir).select(col("vec_id"), col("embedding")), nCells, dir)
   }
 
   /** The DEFAULT-dial PQ codebooks (the ones `ann_pq_topk` /
@@ -864,15 +870,8 @@ object Similarity {
   def annRecallReport(s: SparkSession, dir: String, k: Int = 10): DataFrame = {
     val exact = graft.Caches.cached(
       annBruteforceTopK(s, dir, k).select("probe_id", "neighbor_id"))
-    val nExpected = exact.agg(count(lit(1)).as("n_expected"))
     def tierRow(name: String, df: DataFrame): DataFrame =
-      df.select("probe_id", "neighbor_id")
-        .join(exact, Seq("probe_id", "neighbor_id"), "left_semi")
-        .agg(count(lit(1)).as("n_hits"))
-        .crossJoin(broadcast(nExpected))
-        .select(lit(name).as("tier"), col("n_hits"), col("n_expected"),
-          when(col("n_expected") > 0,
-            expr("(n_hits * 1000000) div n_expected")).as("recall_x1e6"))
+      recallRow(name, df.select("probe_id", "neighbor_id"), exact, Seq("probe_id", "neighbor_id"))
     tierRow("ivf", annIvfTopK(s, dir, k))
       .unionAll(tierRow("ivfpq", annIvfPqTopK(s, dir, k)))
       .unionAll(tierRow("lsh", annLshTopK(s, dir, k)))
@@ -880,6 +879,22 @@ object Similarity {
       .unionAll(tierRow("sq8", annSq8TopK(s, dir, k)))
       .orderBy("tier")
   }
+
+  /** One recall row (tier, n_hits, n_expected, recall_x1e6): how many
+    * `got` rows the `want` rows contain on `keys` (a left-semi join
+    * reduced to a 1-row count), over the size of `want`, in integral
+    * ppm. The expected count rides a broadcast 1-row aggregate, so
+    * nothing reaches the driver. Shared by [[annRecallReport]] and
+    * [[hybridRecallReport]].
+    */
+  private def recallRow(tier: String, got: DataFrame, want: DataFrame,
+                        keys: Seq[String]): DataFrame =
+    got.join(want, keys, "left_semi")
+      .agg(count(lit(1)).as("n_hits"))
+      .crossJoin(broadcast(want.agg(count(lit(1)).as("n_expected"))))
+      .select(lit(tier).as("tier"), col("n_hits"), col("n_expected"),
+        when(col("n_expected") > 0,
+          expr("(n_hits * 1000000) div n_expected")).as("recall_x1e6"))
 
   /** The RRF fusion body over explicit (id, lex_rank) / (id, sem_rank)
     * lists — factored so the serving key and its recall monitor
@@ -967,22 +982,11 @@ object Similarity {
         .select(col("neighbor_id").as("id"), col("rank").as("sem_rank")))
     def topIds(fused: DataFrame) =
       fused.filter(col("fused_rank") <= k).select("id")
-    def row(tier: String, got: DataFrame, want: DataFrame): DataFrame = {
-      // the annRecallReport idiom: expected count rides a broadcast
-      // 1-row aggregate, nothing reaches the driver
-      val nExpected = want.agg(count(lit(1)).as("n_expected"))
-      got.join(want, Seq("id"), "left_semi")
-        .agg(count(lit(1)).as("n_hits"))
-        .crossJoin(broadcast(nExpected))
-        .select(lit(tier).as("tier"), col("n_hits"), col("n_expected"),
-          when(col("n_expected") > 0,
-            expr("(n_hits * 1000000) div n_expected")).as("recall_x1e6"))
-    }
-    val semRow = row("sem",
-      servedSem.select("id"), exactSem.select("id"))
-    val fusedRow = row("fused",
+    val semRow = recallRow("sem",
+      servedSem.select("id"), exactSem.select("id"), Seq("id"))
+    val fusedRow = recallRow("fused",
       topIds(rrfFuse(lex, servedSem, kRrf)),
-      topIds(rrfFuse(lex, exactSem, kRrf)))
+      topIds(rrfFuse(lex, exactSem, kRrf)), Seq("id"))
     semRow.unionAll(fusedRow).orderBy("tier")
   }
 
@@ -1324,6 +1328,26 @@ object Similarity {
       .orderBy("cluster_id", "pos")
   }
 
+  /** The mean-centered micro-quantized corpus (vec_id, xm) and its
+    * mean: embeddings quantized once to micro-units (floor(1e6·x), the
+    * [[graft.functions.VecSumMicro]] convention), the per-position mean
+    * taken with trunc division in one 64-key aggregate collected to
+    * the driver, and xm = xq − mu with the mean riding the plan as a
+    * literal. The one centering of [[embeddingTopPc]] and
+    * [[embeddingWhiten]], so the eigensolver and the whitening it
+    * feeds center identically.
+    */
+  private def centeredMicro(s: SparkSession, dir: String): (DataFrame, Array[Long]) = {
+    val xq = Tables.embeddings(s, dir).select(col("vec_id"),
+      expr("transform(embedding, e -> CAST(FLOOR(e * CAST(1000000 AS DOUBLE)) AS BIGINT))")
+        .as("xq"))
+    val mu = xq.select(posexplode(col("xq")).as(Seq("pos", "x")))
+      .groupBy("pos").agg(sum("x").as("sx"), count(lit(1)).as("n"))
+      .select(col("pos"), expr("sx div n").as("mu"))
+      .orderBy("pos").collect().map(_.getLong(1))
+    (xq.select(col("vec_id"), zip_with(col("xq"), lit(mu), (a, b) => a - b).as("xm")), mu)
+  }
+
   /** Distributed POWER ITERATION for the corpus's top principal
     * component — the linear-algebra member of the embedding family
     * (what "all-but-the-top" post-processing and PCA whitening remove
@@ -1353,16 +1377,8 @@ object Similarity {
   def embeddingTopPc(s: SparkSession, dir: String, iters: Int = 8): DataFrame = {
     require(iters >= 1 && iters <= 32, s"iters $iters out of range")
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-    val xq = Tables.embeddings(s, dir).select(col("vec_id"),
-      expr("transform(embedding, e -> CAST(FLOOR(e * CAST(1000000 AS DOUBLE)) AS BIGINT))")
-        .as("xq"))
-    val muRows = xq.select(posexplode(col("xq")).as(Seq("pos", "x")))
-      .groupBy("pos").agg(sum("x").as("sx"), count(lit(1)).as("n"))
-      .select(col("pos"), expr("sx div n").as("mu"))
-      .orderBy("pos").collect()
-    val mu = muRows.map(_.getLong(1))
-    val xm = graft.Caches.cached(xq.select(col("vec_id"),
-      zip_with(col("xq"), lit(mu), (a, b) => a - b).as("xm")))
+    val (xm0, mu) = centeredMicro(s, dir)
+    val xm = graft.Caches.cached(xm0)
     var v = Array.fill(mu.length)(1000000L)
     for (_ <- 1 to iters) {
       val sums = xm
@@ -1415,15 +1431,7 @@ object Similarity {
     }
     val d: Long = v.map(x => x * x).sum
     require(d > 0, "whitening needs a non-degenerate top component")
-    val xq = Tables.embeddings(s, dir).select(col("vec_id"),
-      expr("transform(embedding, e -> CAST(FLOOR(e * CAST(1000000 AS DOUBLE)) AS BIGINT))")
-        .as("xq"))
-    val mu = xq.select(posexplode(col("xq")).as(Seq("pos", "x")))
-      .groupBy("pos").agg(sum("x").as("sx"), count(lit(1)).as("n"))
-      .select(col("pos"), expr("sx div n").as("mu"))
-      .orderBy("pos").collect().map(_.getLong(1))
-    xq.select(col("vec_id"),
-        zip_with(col("xq"), lit(mu), (a, b) => a - b).as("xm"))
+    centeredMicro(s, dir)._1
       .select(col("vec_id"), col("xm"),
         aggregate(zip_with(col("xm"), lit(v), (a, b) => a * b),
           lit(0L), (acc, x) => acc + x).as("c"))

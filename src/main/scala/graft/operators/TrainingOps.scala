@@ -651,7 +651,7 @@ object TrainingOps {
         col("source"), col("lang"),
         bpeTokenCount(col("text")).as("toks"),
         length(normText(col("text"))).cast("long").as("chars"),
-        sha2(normText(col("text")), 256).as("h"))
+        Dedup.contentHash(col("text")).as("h"))
       .groupBy("source")
       .agg(
         count(lit(1)).as("n_docs"),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.functions.OracleSafe.sum2
+import graft.operators.Dedup
 
 /** Structured Streaming pipelines over the event stream (SURVEY.md §2
   * "Streaming"). Each transform takes the source DataFrame/Dataset as
@@ -203,14 +204,12 @@ object EventStreams {
     */
   def dedupIncremental(delta: DataFrame, base: DataFrame,
                        numBits: Int = 1 << 17, numHashes: Int = 5): DataFrame = {
-    import graft.functions.TextFunctions.normText
     val s = delta.sparkSession
     graft.plans.GraftFunctions.ensureRegistered(s)
     val baseHashed = base
-      .select(sha2(normText(col("text")), 256).as("content_hash"))
+      .select(Dedup.contentHash(col("text")).as("content_hash"))
       .withColumn("h", xxhash64(col("content_hash")))
-    val sketch = baseHashed.agg(
-      call_function("graft_bloom", col("h"), lit(numBits), lit(numHashes)).as("bloom"))
+    val sketch = baseHashed.agg(Dedup.bloomSketch(col("h"), numBits, numHashes))
     screenThenVerify(delta, sketch, baseHashed.select("content_hash").distinct())
   }
 
@@ -237,20 +236,17 @@ object EventStreams {
     screenThenVerify(delta, sketch, baseHashes)
   }
 
-  /** Shared screen-then-verify tail of the streaming dedups: broadcast
-    * the 1-row bloom, screen every delta row locally, and let only
-    * bloom-positives pay the exact hash join (a bloom-negative is
-    * definitively new — no false negatives).
+  /** Shared screen-then-verify tail of the streaming dedups: the delta
+    * is keyed and screened by the same two definitions the batch
+    * [[graft.operators.Dedup.dedupBloomProbe]] uses
+    * ([[graft.operators.Dedup.bloomKeyed]], then
+    * [[graft.operators.Dedup.bloomScreen]] against the broadcast 1-row
+    * sketch), and only bloom-positives pay the exact hash join (a
+    * bloom-negative is definitively new — no false negatives).
     */
   private def screenThenVerify(delta: DataFrame, sketch: DataFrame,
                                baseHashes: DataFrame): DataFrame = {
-    import graft.functions.TextFunctions.normText
-    val screened = delta
-      .select(col("doc_id"), sha2(normText(col("text")), 256).as("content_hash"))
-      .withColumn("h", xxhash64(col("content_hash")))
-      .crossJoin(broadcast(sketch))
-      .select(col("doc_id"), col("content_hash"),
-        call_function("graft_bloom_contains", col("bloom"), col("h")).as("maybe_dup"))
+    val screened = Dedup.bloomScreen(Dedup.bloomKeyed(delta), sketch)
     val negatives = screened.filter(!col("maybe_dup"))
       .select(col("doc_id"), col("content_hash"), lit(true).as("is_new"))
     val positives = screened.filter(col("maybe_dup"))
@@ -261,17 +257,20 @@ object EventStreams {
   }
 
   /** The MINHASH near-dup analogue of [[dedupIncrementalPersisted]]:
-    * arriving documents compute their hashed word-shingles and banded
-    * MinHash signature ROW-LOCALLY (the codegen'd
-    * `graft_minhash_bands`, identical derivation to the persisted
-    * signature table), probe the substrate-persisted PRUNED base band
-    * index with one (band_idx, band_hash)-keyed equi-join, and only
-    * band-collision candidates pay the exact shingle-Jaccard verify
-    * against the persisted base shingle table — candidate-then-verify,
-    * the batch family's discipline per micro-batch. The per-document
-    * best match folds as a partial-aggregable max(struct(jac,
-    * −base_id)) — bit-equal to the batch twin's (jac DESC, base_id
-    * ASC) window but without a per-batch global sort.
+    * arriving documents compute their hashed word-shingles ROW-LOCALLY
+    * with [[graft.operators.Dedup.shingleHashes]] — the derivation the
+    * persisted corpus shingle table is built with, so arriving text
+    * with no substrate row yet hashes bit-for-bit as it would there —
+    * and then run [[graft.operators.Dedup.minhashNearDup]], the same
+    * delta-vs-base body as the batch
+    * [[graft.operators.Dedup.dedupIncrementalMinhash]]: band, probe the
+    * substrate-persisted PRUNED base band index with one
+    * (band_idx, band_hash)-keyed equi-join, verify band-collision
+    * candidates with exact shingle Jaccard against the persisted base
+    * shingle table, and fold each document's best match as a
+    * partial-aggregable max(struct(jac, −base_id)). Only the base side
+    * differs from the batch key: persisted leaves here, the in-memory
+    * corpus table there.
     *
     * This is a BATCH transform by construction (the per-document
     * aggregation needs the batch's candidates complete): run it
@@ -288,39 +287,10 @@ object EventStreams {
                             shinglesPath: String, nPerms: Int = 64,
                             nBands: Int = 16, shingleN: Int = 3,
                             tauX1000: Long = 800): DataFrame = {
-    import graft.functions.TextFunctions.tokens
-    import graft.operators.Dedup.{wordNgrams, jaccardX1000}
     val s = batch.sparkSession
     graft.plans.GraftFunctions.ensureRegistered(s)
-    // identical shingle derivation to Dedup.hashedShingles — the
-    // row-local recompute IS the streaming reality (arriving text has
-    // no substrate row yet); determinism makes it equal bit-for-bit
-    val hashedDelta = batch
-      .select(col("doc_id"), tokens(col("text")).as("toks"))
-      .select(col("doc_id"), wordNgrams(col("toks"), shingleN).as("sh"))
-      .select(col("doc_id"), transform(col("sh"), x => xxhash64(x)).as("hs"))
-    val cachedDelta = graft.Caches.cached(hashedDelta)
-    val baseBands = s.read.parquet(bandsPath)
-    val baseShingles = s.read.parquet(shinglesPath)
-    val deltaBands = cachedDelta.select(col("doc_id"),
-      posexplode(call_function("graft_minhash_bands", col("hs"), lit(nPerms), lit(nBands)))
-        .as(Seq("band_idx", "band_hash")))
-    val cand = deltaBands.join(baseBands, Seq("band_idx", "band_hash"))
-      .select(col("doc_id"), col("base_id")).distinct()
-    val scored = cand
-      .join(cachedDelta.select(col("doc_id"), col("hs").as("sh_d")), "doc_id")
-      .join(baseShingles, "base_id")
-      .select(col("doc_id"), col("base_id"),
-              jaccardX1000(col("sh_d"), col("sh_b")).as("jac"))
-      .filter(col("jac") >= tauX1000)
-    val best = scored.groupBy("doc_id")
-      .agg(max(struct(col("jac"), (-col("base_id")).as("neg_base"))).as("m"))
-      .select(col("doc_id"), (-col("m.neg_base")).as("best_base_id"),
-              col("m.jac").as("best_jaccard_x1000"))
-    cachedDelta.select("doc_id")
-      .join(best, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("best_base_id").isNotNull.as("is_near_dup"),
-              col("best_base_id"), col("best_jaccard_x1000"))
+    Dedup.minhashNearDup(graft.Caches.cached(Dedup.shingleHashes(batch, shingleN)),
+      s.read.parquet(bandsPath), s.read.parquet(shinglesPath), nPerms, nBands, tauX1000)
   }
 
   /** A token-counted doc headed into the packer. */

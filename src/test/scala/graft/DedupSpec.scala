@@ -516,6 +516,40 @@ class DedupSpec extends AnyFunSuite with SparkFixture {
     graft.Caches.clear()
   }
 
+  test("minhashNearDup: an equal-Jaccard tie goes to the smaller base_id; below tau is not a dup") {
+    import spark.implicits._
+    graft.plans.GraftFunctions.ensureRegistered(spark)
+    val core = (1L to 9L).toSeq
+    // bases 7 and 3 both score 9/11 -> 818 against delta 10 (listed
+    // larger id first); base 5 scores lower; delta 20 is a candidate of
+    // base 3 at 5/15 -> 333 < 800; delta 30 shares nothing
+    val delta = Seq(10L -> (core :+ 500L), 20L -> ((1L to 5L) ++ (300L to 304L)),
+                    30L -> Seq(900L, 901L)).toDF("doc_id", "hs")
+    val base = Seq(7L -> (core :+ 200L), 3L -> (core :+ 100L),
+                   5L -> ((1L to 7L) :+ 600L)).toDF("doc_id", "hs")
+    // one row per band: any shared shingle min collides, so every
+    // overlapping pair is a candidate and the verdict is the verify's
+    val bands = Dedup.minhashBands(base, col("doc_id").as("base_id"), 64, 64)
+    val shingles = base.select(col("doc_id").as("base_id"), col("hs").as("sh_b"))
+    val out = Dedup.minhashNearDup(delta, bands, shingles, 64, 64, 800)
+      .collect().map(r => r.getLong(0) -> r).toMap
+    assert(out.keySet == Set(10L, 20L, 30L))
+    assert(out(10L).getBoolean(1) && out(10L).getLong(2) == 3L && out(10L).getLong(3) == 818L)
+    Seq(20L, 30L).foreach { d =>
+      assert(!out(d).getBoolean(1) && out(d).isNullAt(2) && out(d).isNullAt(3), s"delta $d")
+    }
+  }
+
+  test("pruneHotBands drops band keys with more than maxBucket members, keeps the rest") {
+    import spark.implicits._
+    val bands = Seq((0, 11L, 1L), (0, 11L, 2L), (0, 11L, 3L),
+                    (0, 22L, 4L), (0, 22L, 5L), (1, 11L, 6L))
+      .toDF("band_idx", "band_hash", "base_id")
+    val kept = Dedup.pruneHotBands(bands, maxBucket = 2)
+      .select("base_id").as[Long].collect().toSet
+    assert(kept == Set(4L, 5L, 6L))
+  }
+
   test("dedup_incremental_embedding equals brute-force delta x base cosine; partners from base only") {
     import graft.plans.GraftFunctions
     GraftFunctions.ensureRegistered(spark)
