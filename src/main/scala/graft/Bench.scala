@@ -3,6 +3,8 @@ package graft
 import java.lang.management.ManagementFactory
 import java.nio.file.{Files, Paths}
 import java.nio.file.StandardCopyOption.{ATOMIC_MOVE, REPLACE_EXISTING}
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicLong
 
 import scala.collection.immutable.ListMap
 import scala.collection.mutable
@@ -11,7 +13,7 @@ import scala.util.Try
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main: times every registered query at the given scale
@@ -159,18 +161,28 @@ object Bench {
       "canonical_ref" -> canonicalRef)
   }
 
+  /** Local property set while a pass builds its frame. Its value names
+    * the pass, so [[StageLog]] counts the jobs that build started. */
+  private[graft] val BuildProperty = "graft.bench.build"
+  private val passIds = new AtomicLong
+
   /** One pass of one key: drop operator caches, then time building the
     * frame and materializing every row (noop write). count() is not an
     * honest action: Catalyst prunes unreferenced joins and trailing
     * sorts, so an operator can bench at 0.3 s while a user reading its
-    * rows pays 30 s.
+    * rows pays 30 s. Returns the wall seconds and the pass's build tag
+    * (see [[StageLog.buildJobs]]).
     */
   private[graft] def pass(spark: SparkSession, sfDir: String,
-                          fn: (SparkSession, String) => DataFrame): Double = {
+                          fn: (SparkSession, String) => DataFrame): (Double, String) = {
     Caches.clear()
+    val sc = spark.sparkContext
+    val tag = s"pass-${passIds.incrementAndGet()}"
     val t0 = System.nanoTime()
-    fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-    (System.nanoTime() - t0) / 1e9
+    sc.setLocalProperty(BuildProperty, tag)
+    val df = try fn(spark, sfDir) finally sc.setLocalProperty(BuildProperty, null)
+    df.write.mode("overwrite").format("noop").save()
+    ((System.nanoTime() - t0) / 1e9, tag)
   }
 
   def main(args: Array[String]): Unit = {
@@ -276,6 +288,8 @@ object Bench {
         "er_note" -> ("per-pass er/fw/sp/sw snapshot the async listener bus without a " +
           "pass-boundary flush: a pass tail's stage metrics can be attributed to the next " +
           "pass - per-pass values are approximate, per-key totals exact"),
+        "bj_note" -> ("bj = jobs started while the key's function built its DataFrame " +
+          "(before execution), counted per pass by a local property on each job"),
         "queries" -> timings, "pass_detail" -> passDetail, "errors" -> errors,
         "flaky" -> flaky, "remeasured" -> remeasured, "n_failed" -> errors.size,
         "filtered" -> only.isDefined, "sf" -> sfDir)
@@ -314,10 +328,10 @@ object Bench {
         val g0 = gcMillis
         stageLog.drain()
         try {
-          val wall = pass(spark, sfDir, fn)
+          val (wall, tag) = pass(spark, sfDir, fn)
           val (c1, m1) = compileSnapshot()
           Right(PassStat(wall, c1 - c0, math.max(0.0, m1 - m0), gcMillis - g0,
-            codeCacheUsedMb, stageLog.drain()))
+            codeCacheUsedMb, stageLog.drain(), tag))
         } catch { case e: Throwable => Left(e.toString.linesIterator.next().take(160)) }
       }
       def stats = runs.collect { case Right(p) => p }.toSeq
@@ -340,7 +354,8 @@ object Bench {
         passDetail(name) = ListMap(
           "t" -> stats.map(p => round(p.wall, 3)), "nc" -> stats.map(_.nc),
           "cms" -> stats.map(p => round(p.cms, 1)), "gc" -> stats.map(_.gcMs),
-          "cc" -> stats.map(p => round(p.ccMb, 1)), "er" -> sum(_.runMs),
+          "cc" -> stats.map(p => round(p.ccMb, 1)),
+          "bj" -> stats.map(p => stageLog.buildJobs(p.buildTag)), "er" -> sum(_.runMs),
           "fw" -> sum(_.fetchWaitMs), "sp" -> sum(_.spillB).map(b => round(b / 1e6, 1)),
           "sw" -> sum(_.writeB).map(b => round(b / 1e6, 1)))
         // compile-dominated: janino's (approximate) wall is at least
@@ -375,22 +390,31 @@ object Bench {
   }
 
   /** One successful pass: wall seconds, janino compiles and approximate
-    * compile ms, GC ms, code-cache MB at pass end, and its stages. */
+    * compile ms, GC ms, code-cache MB at pass end, its stages and its
+    * build tag. */
   private case class PassStat(wall: Double, nc: Long, cms: Double, gcMs: Long, ccMb: Double,
-                              stages: Seq[Stage])
+                              stages: Seq[Stage], buildTag: String)
 
   /** One completed stage's task metrics (bytes, milliseconds). */
   private[graft] case class Stage(id: Int, name: String, wallMs: Long, runMs: Long, cpuMs: Long,
                                   tasks: Int, inputB: Long, readB: Long, fetchWaitMs: Long,
                                   spillB: Long, writeB: Long)
 
-  /** Collects completed stages off the listener bus. The bus is async,
-    * so a pass's last stages can land after the pass returns: per-pass
-    * figures are approximate at pass boundaries. */
+  /** Collects completed stages off the listener bus, and counts the
+    * jobs each pass's build started. The bus is async, so a pass's last
+    * stages can land after the pass returns: per-pass stage figures are
+    * approximate at pass boundaries. Build jobs carry their pass's tag,
+    * so they never land on another pass. */
   private[graft] class StageLog extends SparkListener {
     private val done = mutable.ArrayBuffer.empty[Stage]
+    private val built = new ConcurrentHashMap[String, Integer]
     /** The stages completed since the last drain. */
     def drain(): Seq[Stage] = synchronized { val out = done.toSeq; done.clear(); out }
+    /** Jobs started by the build tagged `tag` (see [[pass]]). */
+    def buildJobs(tag: String): Int = built.getOrDefault(tag, 0)
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      Option(e.properties).flatMap(p => Option(p.getProperty(BuildProperty)))
+        .foreach(tag => built.merge(tag, 1, (a, b) => a + b))
     override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
       val i = e.stageInfo
       val m = i.taskMetrics

@@ -4,7 +4,8 @@ package graft
   * with a stage listener attached, then print every completed stage's
   * wall time, executor CPU/run time, task count and shuffle bytes —
   * the attribution step when a key's core-seconds need explaining
-  * operator-by-operator and the UI is off. The spill column is disk
+  * operator-by-operator and the UI is off; the header counts the jobs
+  * the key's build started. The spill column is disk
   * bytes spilled. Optional second
   * arg = number of passes (cache-build vs steady-state attribution).
   *
@@ -27,11 +28,12 @@ object StageProf {
 
     (1 to passes).foreach { p =>
       log.drain()
-      val wall = Bench.pass(spark, sfDir, fn)
+      val (wall, tag) = Bench.pass(spark, sfDir, fn)
       // listener bus is async; give it a moment to drain
       Thread.sleep(500)
       val stages = log.drain()
-      println(f"== $name pass $p: wall=$wall%.3f s, ${stages.size} stages ==")
+      println(f"== $name pass $p: wall=$wall%.3f s, ${stages.size} stages, " +
+        s"${log.buildJobs(tag)} build jobs ==")
       println(f"${"stage"}%6s ${"wall_ms"}%8s ${"run_ms"}%8s ${"cpu_ms"}%8s " +
         f"${"tasks"}%5s ${"in_MB"}%7s ${"sr_MB"}%7s ${"sw_MB"}%7s ${"spill"}%6s  name")
       stages.sortBy(_.id).foreach { s =>

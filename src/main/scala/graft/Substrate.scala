@@ -152,13 +152,15 @@ object Substrate {
   }
 
   /** Cheap corpus fingerprint: MD5 over the sorted (relative path,
-    * length, mtime) triples of ALL files under the corpus dir —
-    * recursive, so an in-place regeneration that only swaps leaf files
-    * deep inside a partitioned layout (dir/t.parquet/date=X/part-*)
-    * still changes the digest. No data bytes are read; on a remote FS
-    * this is one batched listFiles RPC per directory level.
+    * length, mtime) triples of ALL files under the corpus dir (or of
+    * the one file `dir` names) — recursive, so an in-place
+    * regeneration that only swaps leaf files deep inside a partitioned
+    * layout (dir/t.parquet/date=X/part-*) still changes the digest. No
+    * data bytes are read; on a remote FS this is one batched listFiles
+    * RPC per directory level. [[Tables.parquet]] keys its schema memo
+    * by it too.
     */
-  private def fingerprint(s: org.apache.spark.sql.SparkSession, dir: String): String = {
+  private[graft] def fingerprint(s: org.apache.spark.sql.SparkSession, dir: String): String = {
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
     val md = java.security.MessageDigest.getInstance("MD5")
@@ -204,7 +206,7 @@ object Substrate {
     * should stay bare.
     */
   def readFanout(s: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
-    val df = s.read.parquet(path)
+    val df = Tables.parquet(s, path)
     val target = s.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions < target) df.repartition(target) else df
   }

@@ -1,8 +1,10 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType, LongType, StringType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType, LongType, StringType, StructType, TimestampNTZType, TimestampType}
 
 /** Typed loaders for the driver-provided testdata star schema
   * (see TESTDATA.md). Every operator reads through these so column
@@ -12,15 +14,58 @@ import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType, LongType, 
   * Mirrors the reference's normalized relational model
   * (/root/reference/sql/01_schema.sql:9-59) — movies/actors/genres +
   * junctions — onto the TPC-H-ish tables per SURVEY.md §1.
+  *
+  * Every fixed-path parquet read of the operators, sources and views
+  * goes through [[parquet]], which infers a path's schema once per
+  * session.
+  * Spark's schema-less `read.parquet` runs a job to read the footer on
+  * every call; with the schema given, building the DataFrame runs
+  * none. The memo contract:
+  *
+  *  - Keying: an entry is served only while the path's file listing
+  *    fingerprint (name, length, mtime of every file under it; the one
+  *    [[Substrate]] keys leaves by) and the session's parquet
+  *    inference confs ([[InferenceConfs]]) are what they were when it
+  *    was inferred. A rewritten file or a changed conf is inferred
+  *    again. A failed inference is not remembered.
+  *  - Scope: one memo per `SparkSession`, held weakly, so a
+  *    `newSession()` infers on its own and a dropped session frees
+  *    its memo. No JVM-wide table.
+  *  - [[Caches.clear]] leaves it alone: entries cannot go stale, and
+  *    a schema holds no executor memory.
   */
 object Tables {
-  def region(s: SparkSession, dir: String): DataFrame   = s.read.parquet(s"$dir/region.parquet")
-  def nation(s: SparkSession, dir: String): DataFrame   = s.read.parquet(s"$dir/nation.parquet")
-  def customer(s: SparkSession, dir: String): DataFrame = s.read.parquet(s"$dir/customer.parquet")
-  def supplier(s: SparkSession, dir: String): DataFrame = s.read.parquet(s"$dir/supplier.parquet")
-  def part(s: SparkSession, dir: String): DataFrame     = s.read.parquet(s"$dir/part.parquet")
-  def orders(s: SparkSession, dir: String): DataFrame   = s.read.parquet(s"$dir/orders.parquet")
-  def lineitem(s: SparkSession, dir: String): DataFrame = s.read.parquet(s"$dir/lineitem.parquet")
+  /** Session confs that change what parquet inference returns. */
+  private val InferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong", "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp", "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema")
+
+  /** Per session: path -> (fingerprint and confs it was inferred under, schema). */
+  private val schemas =
+    new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[String, (String, StructType)]]
+
+  /** `s.read.parquet(path)` with the schema inferred once per session
+    * (see the memo contract above). */
+  def parquet(s: SparkSession, path: String): DataFrame = {
+    val stamp = (Substrate.fingerprint(s, path) +:
+      InferenceConfs.map(s.conf.getOption(_).getOrElse(""))).mkString("|")
+    val memo = schemas.synchronized(schemas.computeIfAbsent(s, _ => new ConcurrentHashMap))
+    val schema = Option(memo.get(path)).collect { case (`stamp`, known) => known }.getOrElse {
+      val inferred = s.read.parquet(path).schema
+      memo.put(path, (stamp, inferred))
+      inferred
+    }
+    s.read.schema(schema).parquet(path)
+  }
+
+  def region(s: SparkSession, dir: String): DataFrame   = parquet(s, s"$dir/region.parquet")
+  def nation(s: SparkSession, dir: String): DataFrame   = parquet(s, s"$dir/nation.parquet")
+  def customer(s: SparkSession, dir: String): DataFrame = parquet(s, s"$dir/customer.parquet")
+  def supplier(s: SparkSession, dir: String): DataFrame = parquet(s, s"$dir/supplier.parquet")
+  def part(s: SparkSession, dir: String): DataFrame     = parquet(s, s"$dir/part.parquet")
+  def orders(s: SparkSession, dir: String): DataFrame   = parquet(s, s"$dir/orders.parquet")
+  def lineitem(s: SparkSession, dir: String): DataFrame = parquet(s, s"$dir/lineitem.parquet")
   /** events loader, adaptive to how the driver generated `ts`:
     *
     *  - INT64 TIMESTAMP(NANOS): Spark's parquet reader rejects it outright
@@ -46,7 +91,7 @@ object Tables {
     */
   def events(s: SparkSession, dir: String): DataFrame = {
     val raw =
-      try s.read.parquet(s"$dir/events.parquet")
+      try parquet(s, s"$dir/events.parquet")
       catch {
         case e: org.apache.spark.sql.AnalysisException
             if Option(e.getMessage).exists(_.contains("NANOS")) =>
@@ -76,7 +121,7 @@ object Tables {
     * AnalysisExceptions (the round-10 events outage, generalized).
     */
   def documents(s: SparkSession, dir: String): DataFrame = {
-    val df = s.read.parquet(s"$dir/documents.parquet")
+    val df = parquet(s, s"$dir/documents.parquet")
     requireColumn(df, "documents", "doc_id") { case LongType | IntegerType => }
     requireColumn(df, "documents", "text") { case StringType => }
     // `lang` is consumed by a minority of operators (corpus_manifest,
@@ -89,7 +134,7 @@ object Tables {
     df
   }
   def embeddings(s: SparkSession, dir: String): DataFrame = {
-    val df = s.read.parquet(s"$dir/embeddings.parquet")
+    val df = parquet(s, s"$dir/embeddings.parquet")
     requireColumn(df, "embeddings", "vec_id") { case LongType | IntegerType => }
     // strictly array<float>: the codegen'd vector expressions (graft_cosine,
     // graft_pq_encode, …) are typed for FloatType elements

@@ -692,7 +692,7 @@ object Multimodal {
     val path = graft.Substrate.materialized(s, "mm_phash", realDir, Seq.empty) {
       phashPlan(s, dir)
     }
-    s.read.parquet(path).orderBy("doc_id")
+    Tables.parquet(s, path).orderBy("doc_id")
   }
 
   /** The substrate's defining plan (see [[mmImagePhash]], which

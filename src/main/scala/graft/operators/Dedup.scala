@@ -130,7 +130,7 @@ object Dedup {
     // 32-partition cache build is pure overhead. The fan-out pays off
     // only where the scan stage itself does heavy row-local work (the
     // mm codec family).
-    graft.Caches.cached(s.read.parquet(path))
+    graft.Caches.cached(Tables.parquet(s, path))
   }
 
   /** Candidate pairs (a < b) from an exploded (id, band_idx, band_hash)
@@ -589,7 +589,7 @@ object Dedup {
     val bloom = graft.Substrate.materialized(
         s, "dedup_base_bloom", realDir, Seq(deltaMod, numBits, numHashes)) {
       graft.plans.GraftFunctions.ensureRegistered(s)
-      s.read.parquet(hashes).agg(bloomSketch(col("h"), numBits, numHashes))
+      Tables.parquet(s, hashes).agg(bloomSketch(col("h"), numBits, numHashes))
     }
     (hashes, bloom)
   }
@@ -826,7 +826,7 @@ object Dedup {
                     nPerms: Int = 64, nBands: Int = 16,
                     shingleN: Int = 3, tauX1000: Long = 800): DataFrame = {
     val realDir = graft.Substrate.canonicalDir(s, dir)
-    s.read.parquet(graft.Substrate.materialized(
+    Tables.parquet(s, graft.Substrate.materialized(
       s, "dedup_clusters", realDir, Seq(nPerms, nBands, shingleN, tauX1000)) {
       val (ids, verified) = minhashVerifiedPairs(s, dir, nPerms, nBands, shingleN, tauX1000)
       connectedComponents(ids, verified, "doc_id")
@@ -1222,7 +1222,7 @@ object Dedup {
     // policy key (`dedup_semantic_clusters`, `semdedup_keep_central`)
     // and is a pure deterministic function of its inputs (longs+bool).
     val realDir = graft.Substrate.canonicalDir(s, dir)
-    s.read.parquet(graft.Substrate.materialized(
+    Tables.parquet(s, graft.Substrate.materialized(
       s, "semantic_clusters", realDir, Seq(nBands, bitsPerBand, tau)) {
       val (ids, verified) = embeddingVerifiedPairs(s, dir, nBands, bitsPerBand, tau)
       connectedComponents(ids, verified, "vec_id")

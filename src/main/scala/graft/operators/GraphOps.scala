@@ -246,7 +246,7 @@ object GraphOps {
   private[graft] def copurchasePairSupports(s: SparkSession, dir: String,
                                             minSupport: Int = 2): DataFrame = {
     val realDir = graft.Substrate.canonicalDir(s, dir)
-    s.read.parquet(graft.Substrate.materialized(
+    Tables.parquet(s, graft.Substrate.materialized(
       s, "copurchase", realDir, Seq(minSupport)) {
       pairSupportsPlan(s, dir, minSupport)
     })
@@ -301,7 +301,7 @@ object GraphOps {
         s, "communities", realDir, Seq(iters)) {
       labelPropagation(s, dir, iters).select(col("part_key"), col("community"))
     }
-    val comm = graft.Caches.cached(s.read.parquet(commPath)
+    val comm = graft.Caches.cached(Tables.parquet(s, commPath)
       .select(col("part_key").as("node"), col("community")))
     val sym = edges.select(explode(array(
         struct(col("a").as("node")), struct(col("b").as("node")))).as("e"))

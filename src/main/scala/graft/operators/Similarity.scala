@@ -777,7 +777,7 @@ object Similarity {
             .otherwise(transform(col("embedding"), _ => lit(0).cast("byte")))
             .as("codes"))
     }
-    val codes = s.read.parquet(codesPath)
+    val codes = Tables.parquet(s, codesPath)
     val scored = codes
       .join(broadcast(probes(emb)), col("vec_id") =!= col("probe_id"))
       .select(col("probe_id"), col("vec_id").as("neighbor_id"),
@@ -1335,16 +1335,21 @@ object Similarity {
     * the driver, and xm = xq − mu with the mean riding the plan as a
     * literal. The one centering of [[embeddingTopPc]] and
     * [[embeddingWhiten]], so the eigensolver and the whitening it
-    * feeds center identically.
+    * feeds center identically. The mean is model state
+    * ([[graft.Caches.model]], keyed by corpus dir like `top_pc_vec`):
+    * collected once, then shared by both operators and every warm
+    * build.
     */
   private def centeredMicro(s: SparkSession, dir: String): (DataFrame, Array[Long]) = {
     val xq = Tables.embeddings(s, dir).select(col("vec_id"),
       expr("transform(embedding, e -> CAST(FLOOR(e * CAST(1000000 AS DOUBLE)) AS BIGINT))")
         .as("xq"))
-    val mu = xq.select(posexplode(col("xq")).as(Seq("pos", "x")))
-      .groupBy("pos").agg(sum("x").as("sx"), count(lit(1)).as("n"))
-      .select(col("pos"), expr("sx div n").as("mu"))
-      .orderBy("pos").collect().map(_.getLong(1))
+    val mu: Array[Long] = graft.Caches.model("centered_micro_mean", dir) {
+      xq.select(posexplode(col("xq")).as(Seq("pos", "x")))
+        .groupBy("pos").agg(sum("x").as("sx"), count(lit(1)).as("n"))
+        .select(col("pos"), expr("sx div n").as("mu"))
+        .orderBy("pos").collect().map(_.getLong(1))
+    }
     (xq.select(col("vec_id"), zip_with(col("xq"), lit(mu), (a, b) => a - b).as("xm")), mu)
   }
 
@@ -1418,8 +1423,9 @@ object Similarity {
     *
     * Scale shape: v is KB-scale model state ([[graft.Caches.model]] —
     * the eigensolver runs once per (corpus, iters)); the mean is a
-    * 64-row driver sync; whitening itself is ONE row-local pass (the
-    * vector and mean ride the plan as literals — no join anywhere,
+    * 64-row driver sync, memoized the same way; whitening itself is
+    * ONE row-local pass (the vector and mean ride the plan as
+    * literals — no join anywhere,
     * pinned in PlanQualitySpec), emitted in the family's per-dim row
     * convention. Residual near-orthogonality |Σ wᵢ·vᵢ| < Σ|vᵢ| (per-
     * position truncation < 1) is spec-pinned in SimilaritySpec along

@@ -158,7 +158,7 @@ object TrainingOps {
       val isDir = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
         .getFileStatus(hp).isDirectory
       val reader = s.readStream
-        .schema(s.read.parquet(docPath).schema)
+        .schema(Tables.parquet(s, docPath).schema)
         .option("maxFilesPerTrigger", "1000000")
       val src = (if (isDir) reader.parquet(docPath)
                  else reader.option("pathGlobFilter", "documents.parquet").parquet(dir))
@@ -837,7 +837,7 @@ object TrainingOps {
       bpeRounds(s, dir, nMerges)._2
         .select(col("word"), size(col("syms")).cast("long").as("n_syms"))
     }
-    val encoded = s.read.parquet(vocabPath)
+    val encoded = Tables.parquet(s, vocabPath)
     Tables.documents(s, dir)
       .select(col("doc_id"), explode(tokens(col("text"))).as("word"))
       .filter(col("word") =!= "")

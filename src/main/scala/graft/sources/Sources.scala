@@ -29,7 +29,7 @@ object Sources {
     df.write.mode(mode).partitionBy(partitionCols: _*).parquet(path)
 
   def readParquet(s: SparkSession, path: String): DataFrame =
-    s.read.parquet(path)
+    graft.Tables.parquet(s, path)
 
   /** Read a parquet dataset written across SCHEMA VERSIONS: batches
     * that added columns over time union into one frame
@@ -157,7 +157,7 @@ object Sources {
                      targetFileBytes: Long = 128L * 1024 * 1024,
                      sortCol: Option[String] = None): Int = {
     require(targetFileBytes > 0, "targetFileBytes must be positive")
-    val df = s.read.parquet(inPath)
+    val df = graft.Tables.parquet(s, inPath)
     val totalBytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
     // clamp BEFORE toInt: a petabyte-scale ratio would wrap modulo 2^32
     // into a zero/negative partition count otherwise

@@ -38,7 +38,7 @@ object GraftViews {
   def registerAll(s: SparkSession, dir: String): Unit = {
     Seq("region", "nation", "customer", "supplier", "part", "orders",
         "lineitem", "documents", "embeddings")
-      .foreach(t => s.read.parquet(s"$dir/$t.parquet").createOrReplaceTempView(t))
+      .foreach(t => Tables.parquet(s, s"$dir/$t.parquet").createOrReplaceTempView(t))
     Tables.events(s, dir).createOrReplaceTempView("events")
 
     s.sql(s"""CREATE OR REPLACE TEMPORARY VIEW v_top_actors AS

@@ -231,8 +231,8 @@ object EventStreams {
                                 bloomPath: String): DataFrame = {
     val s = delta.sparkSession
     graft.plans.GraftFunctions.ensureRegistered(s)
-    val sketch = s.read.parquet(bloomPath)
-    val baseHashes = s.read.parquet(hashesPath).select("content_hash")
+    val sketch = graft.Tables.parquet(s, bloomPath)
+    val baseHashes = graft.Tables.parquet(s, hashesPath).select("content_hash")
     screenThenVerify(delta, sketch, baseHashes)
   }
 
@@ -290,7 +290,7 @@ object EventStreams {
     val s = batch.sparkSession
     graft.plans.GraftFunctions.ensureRegistered(s)
     Dedup.minhashNearDup(graft.Caches.cached(Dedup.shingleHashes(batch, shingleN)),
-      s.read.parquet(bandsPath), s.read.parquet(shinglesPath), nPerms, nBands, tauX1000)
+      graft.Tables.parquet(s, bandsPath), graft.Tables.parquet(s, shinglesPath), nPerms, nBands, tauX1000)
   }
 
   /** A token-counted doc headed into the packer. */
@@ -434,7 +434,7 @@ object EventStreams {
     val s = batch.sparkSession
     graft.plans.GraftFunctions.ensureRegistered(s)
     graft.operators.Similarity.ivfSearch(batch.select(col("probe_id"), col("probe_emb")),
-      s.read.parquet(centroidsPath), s.read.parquet(cellsPath), k, nProbeCells)
+      graft.Tables.parquet(s, centroidsPath), graft.Tables.parquet(s, cellsPath), k, nProbeCells)
   }
 
   /** Stream-stream event-time interval join: each purchase joins the

@@ -302,6 +302,15 @@ class SimilaritySpec extends AnyFunSuite with SparkFixture {
       s"whitened residual not near-orthogonal: $worstResid >= $bound")
   }
 
+  test("a warm embedding_whiten build launches no job and serves the same rows") {
+    // cold: fits the top component and the centering mean once each
+    val cold = Similarity.embeddingWhiten(spark, sf).collect().toSeq
+    val (warm, jobs) = Jobs.count(spark)(Similarity.embeddingWhiten(spark, sf))
+    assert(jobs == 0, s"warm build launched $jobs jobs")
+    assert(warm.collect().toSeq == cold)
+    graft.Caches.clear()
+  }
+
   test("diversity_kcenter equals a single-node greedy maxmin; selection distances non-increasing") {
     val k = 8
     val out = Similarity.diversityKcenter(spark, sf, k).collect()

@@ -10,7 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * surfaces as LongType under `nanosAsLong=true`) and plain µs
   * TIMESTAMP — asserting byte-identical `(ts_ns, ts)` from each. A
   * future silent testdata regeneration then downgrades from a 50-query
-  * outage (round 10) to a no-op.
+  * outage (round 10) to a no-op. Also pins the schema memo behind
+  * every loader (`Tables.parquet`).
   */
 class TablesSpec extends AnyFunSuite with SparkFixture {
 
@@ -135,6 +136,94 @@ class TablesSpec extends AnyFunSuite with SparkFixture {
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val e3 = intercept[IllegalArgumentException](Tables.documents(spark, dir))
     assert(e3.getMessage.contains("`lang`") && e3.getMessage.contains("unsupported type"))
+  }
+
+  /** events.parquet with `ts` as a real INT64 TIMESTAMP(NANOS), the
+    * encoding Spark itself cannot write. */
+  private def writeTimestampNanos(dir: String): Unit = {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val schema = MessageTypeParser.parseMessageType(
+      """message events {
+        |  required int64 event_id;
+        |  required int64 ts (TIMESTAMP(NANOS,true));
+        |  required int64 user_id;
+        |  required binary event_type (STRING);
+        |}""".stripMargin)
+    val writer = ExampleParquetWriter.builder(new org.apache.hadoop.fs.Path(s"$dir/events.parquet"))
+      .withType(schema).withConf(spark.sparkContext.hadoopConfiguration).build()
+    val rows = new SimpleGroupFactory(schema)
+    try micros.foreach { case (id, us, u, t) =>
+      writer.write(rows.newGroup().append("event_id", id).append("ts", us * 1000L)
+        .append("user_id", u).append("event_type", t))
+    } finally writer.close()
+  }
+
+  test("a second Tables.documents on one session launches no job") {
+    import spark.implicits._
+    val dir = tmp("memo_jobs")
+    Seq((1L, "a b"), (2L, "c")).toDF("doc_id", "text")
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val (_, first) = Jobs.count(spark)(Tables.documents(spark, dir))
+    assert(first >= 1, "the first read infers the schema with a job")
+    val (again, second) = Jobs.count(spark)(Tables.documents(spark, dir))
+    assert(second == 0, s"the memoized read launched $second jobs")
+    assert(again.count() == 2)
+  }
+
+  test("a rewritten file is inferred again: a new column is seen by the next read") {
+    import spark.implicits._
+    val dir = tmp("memo_rewrite")
+    Seq((1L, "a b")).toDF("doc_id", "text")
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    assert(Tables.documents(spark, dir).columns.toSeq == Seq("doc_id", "text"))
+    Seq((1L, "a b", "en")).toDF("doc_id", "text", "lang")
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val df = Tables.documents(spark, dir)
+    assert(df.columns.toSeq == Seq("doc_id", "text", "lang"))
+    assert(df.select("lang").as[String].collect().toSeq == Seq("en"))
+  }
+
+  test("the memo is per session and per inference conf: TIMESTAMP(NANOS) under both nanosAsLong values") {
+    val dir = tmp("memo_nanos")
+    writeTimestampNanos(dir)
+    val expected = micros.map { case (id, us, _, _) => (id, us * 1000L) }
+    def ns(s: org.apache.spark.sql.SparkSession) =
+      Tables.events(s, dir).select("event_id", "ts_ns").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSeq.sortBy(_._1)
+    assert(ns(spark) == expected, "nanosAsLong=true reads the exact nanos")
+    // a sibling session infers on its own: with the conf off, the same
+    // file is rejected with the loader's NANOS message, not served the
+    // first session's schema
+    val strict = spark.newSession()
+    strict.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
+    val e = intercept[IllegalArgumentException](Tables.events(strict, dir))
+    assert(e.getMessage.contains("INT64 TIMESTAMP(NANOS)") && e.getMessage.contains("nanosAsLong"))
+    // a failed inference is not remembered: turning the conf on serves
+    // the file, and the first session's memo still answers without a job
+    strict.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    assert(ns(strict) == expected)
+    val (_, jobs) = Jobs.count(spark)(Tables.events(spark, dir))
+    assert(jobs == 0)
+  }
+
+  test("a leaf read through Tables.parquet has the schema and rows of a plain read") {
+    import spark.implicits._
+    // a Spark-written directory of parts, the shape of a substrate leaf
+    val leaf = s"${tmp("memo_leaf")}/leaf"
+    Seq((1L, "x", 1.5, Seq(1, 2)), (2L, null, -0.5, Seq.empty[Int]))
+      .toDF("id", "s", "d", "arr").repartition(2).write.parquet(leaf)
+    val parted = s"${tmp("memo_parted")}/t.parquet"
+    Seq((1L, "a", 10), (2L, "b", 20), (3L, "c", 10)).toDF("id", "v", "p")
+      .write.partitionBy("p").parquet(parted)
+    for (path <- Seq(leaf, parted)) {
+      val memo = Tables.parquet(spark, path)
+      val plain = spark.read.parquet(path)
+      assert(memo.schema == plain.schema, path)
+      assert(memo.collect().map(_.toString).sorted.toSeq ==
+        plain.collect().map(_.toString).sorted.toSeq, path)
+    }
   }
 
   test("driver testdata loads through the guarded loaders") {
