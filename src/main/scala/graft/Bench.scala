@@ -285,9 +285,10 @@ object Bench {
         "compile_dominated" -> compileDominated,
         "cms_note" -> ("cms = janino count x decaying-reservoir mean delta: approximate once " +
           "the reservoir saturates (exact in count nc)"),
-        "er_note" -> ("per-pass er/fw/sp/sw snapshot the async listener bus without a " +
+        "er_note" -> ("per-pass er/cpu/fw/sp/sw snapshot the async listener bus without a " +
           "pass-boundary flush: a pass tail's stage metrics can be attributed to the next " +
-          "pass - per-pass values are approximate, per-key totals exact"),
+          "pass - per-pass values are approximate, per-key totals exact; cpu = executor " +
+          "CPU ms per pass, summed over the pass's stages, next to er's executor run ms"),
         "bj_note" -> ("bj = jobs started while the key's function built its DataFrame " +
           "(before execution), counted per pass by a local property on each job"),
         "queries" -> timings, "pass_detail" -> passDetail, "errors" -> errors,
@@ -348,14 +349,16 @@ object Bench {
         }
       timings(name) = stats.map(_.wall).minOption.getOrElse(-1.0)
       if (stats.nonEmpty) {
-        // er/fw in ms, sp/sw in MB: wall vs er/cores says lost
-        // parallelism, fw says shuffle-read stall, sp says spill.
+        // er/cpu/fw in ms, sp/sw in MB: wall vs er/cores says lost
+        // parallelism, er vs cpu says waiting on locks or I/O, fw says
+        // shuffle-read stall, sp says spill.
         def sum(f: Stage => Long) = stats.map(_.stages.map(f).sum)
         passDetail(name) = ListMap(
           "t" -> stats.map(p => round(p.wall, 3)), "nc" -> stats.map(_.nc),
           "cms" -> stats.map(p => round(p.cms, 1)), "gc" -> stats.map(_.gcMs),
           "cc" -> stats.map(p => round(p.ccMb, 1)),
           "bj" -> stats.map(p => stageLog.buildJobs(p.buildTag)), "er" -> sum(_.runMs),
+          "cpu" -> sum(_.cpuMs),
           "fw" -> sum(_.fetchWaitMs), "sp" -> sum(_.spillB).map(b => round(b / 1e6, 1)),
           "sw" -> sum(_.writeB).map(b => round(b / 1e6, 1)))
         // compile-dominated: janino's (approximate) wall is at least

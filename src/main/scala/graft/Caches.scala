@@ -8,9 +8,11 @@ import org.apache.spark.sql.DataFrame
   *
   *  - [[cached]]: a `cache()`d shared scan (hashed shingles, simhash
   *    signatures, symmetric edge lists), unpersisted at [[clear]].
-  *  - [[roundCheckpoint]]: one round of an iterative fixpoint loop.
-  *    Loops free each predecessor early with [[unpersistRound]]; the
-  *    final round backs the returned plan and is freed at [[clear]].
+  *  - [[rounds]]: the round driver of every iterative fixpoint loop
+  *    (PageRank, BFS, label propagation, k-core, connected components,
+  *    BPE training). It checkpoints each round, frees each round's
+  *    predecessor once the round exists, and leaves the final round
+  *    backing the returned plan until [[clear]].
   *  - [[scratchDir]]: a per-query temp dir (an extract landing dir, a
   *    streaming sink and checkpoint), deleted at [[clear]].
   *
@@ -28,41 +30,92 @@ object Caches {
   private def register(key: AnyRef)(release: => Unit): Unit =
     synchronized { releases(key) = () => release }
 
-  /** Round materialization for iterative operators (connected
-    * components, PageRank): eager local checkpoint by default —
-    * truncates lineage so the analyzer re-walks a constant-depth plan
-    * per round — or reliable `checkpoint()` when `reliable` (requires
-    * the session's checkpoint dir; survives executor loss on a real
-    * cluster, where local checkpoint blocks die with their executor).
-    * The round's blocks are released by [[unpersistRound]] or, at the
-    * latest, by [[clear]].
+  /** The checkpoints one round of a [[rounds]] loop makes: its
+    * generation. A round may make more than one (BFS checkpoints its
+    * fresh frontier and the merged settled set).
+    *
+    * @param index 0 for the init round, then 1, 2, … per step
     */
-  def roundCheckpoint(df: DataFrame, reliable: Boolean): DataFrame = {
+  private[graft] final class Round private[Caches] (val index: Int, reliable: Boolean) {
+    private[Caches] val made = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+
+    /** Checkpoint `df` eagerly as part of this round's generation. */
+    def checkpoint(df: DataFrame): DataFrame = {
+      val cp = roundCheckpoint(df, reliable)
+      made += cp
+      cp
+    }
+  }
+
+  /** Drive an iterative fixpoint loop, one checkpointed round at a
+    * time. `init` builds round 0's state; `step` builds each next
+    * round's state from the last accepted one, for at most `maxRounds`
+    * steps. A step that returns `Some` is accepted and the previous
+    * generation is freed (its successor is materialized by then); a
+    * step that returns `None` ends the loop, and whatever it
+    * checkpointed is freed. A loop that converges on an accepted round
+    * carries that in its state and returns `None` from the next step.
+    * The last accepted generation backs the returned state and stays
+    * registered until [[clear]].
+    *
+    * `staticInit` and `staticSteps` run round 0 and the steps under
+    * [[staticRounds]]; its scaladoc has the reasons and the A/Bs, and
+    * each loop's scaladoc says why it does or does not use it.
+    */
+  private[graft] def rounds[S](s: org.apache.spark.sql.SparkSession, maxRounds: Int,
+                               reliable: Boolean, staticInit: Boolean = false,
+                               staticSteps: Boolean = false)
+                              (init: Round => S)(step: (Round, S) => Option[S]): S = {
+    def scoped[T](static: Boolean)(body: => T): T = if (static) staticRounds(s)(body) else body
+    @annotation.tailrec
+    def loop(gen: Round, state: S): S =
+      if (gen.index >= maxRounds) state
+      else {
+        val next = new Round(gen.index + 1, reliable)
+        scoped(staticSteps)(step(next, state)) match {
+          case Some(st) => gen.made.foreach(unpersistRound); loop(next, st)
+          case None => next.made.foreach(unpersistRound); state
+        }
+      }
+    val first = new Round(0, reliable)
+    loop(first, scoped(staticInit)(init(first)))
+  }
+
+  /** Eager local checkpoint by default — truncates lineage so the
+    * analyzer re-walks a constant-depth plan per round — or reliable
+    * `checkpoint()` when `reliable` (requires the session's checkpoint
+    * dir; survives executor loss on a real cluster, where local
+    * checkpoint blocks die with their executor). The round's blocks
+    * are released by [[unpersistRound]] once [[rounds]] has its
+    * successor or, at the latest, by [[clear]].
+    */
+  private[graft] def roundCheckpoint(df: DataFrame, reliable: Boolean): DataFrame = {
     val round = if (reliable) df.checkpoint(true) else df.localCheckpoint(true)
     roundRdd(round).foreach(rdd => register(rdd)(rdd.unpersist(false)))
     round
   }
 
-  /** Run an iterative fixpoint loop (PageRank, label propagation,
-    * connected components, BFS, k-core peel) with adaptive execution
-    * and auto-broadcast OFF, restoring the session's previous values
-    * after. The loops' per-round plans are hand-co-partitioned and
-    * shape-pinned (one corpus-scale Exchange per round riding cached
-    * hash partitionings + checkpoint-carried partitionings — see
-    * PlanQualitySpec): there is nothing left for AQE to discover, and
-    * what it does instead is pure overhead ×iters — it re-plans every
-    * round's checkpoint action, converts the node-scale side to a
-    * fresh per-round broadcast (driver collect + rebuild each round;
-    * at corpus scale that side GROWS with the graph, so the static
-    * no-broadcast SMJ is also the only shape that survives 100 TB),
-    * and its partition coalescing re-keys the carried partitionings
-    * so later rounds pay a re-Exchange the static plan never has.
+  /** Run `body` (the static phases of a [[rounds]] loop: PageRank,
+    * BFS and k-core throughout, label propagation's init and its
+    * non-delta rounds) with adaptive execution and auto-broadcast OFF,
+    * restoring the session's previous values after. The loops'
+    * per-round plans are hand-co-partitioned and shape-pinned (one
+    * corpus-scale Exchange per round riding cached hash partitionings
+    * + checkpoint-carried partitionings — see PlanQualitySpec): there
+    * is nothing left for AQE to discover, and what it does instead is
+    * pure overhead ×iters — it re-plans every round's checkpoint
+    * action, converts the node-scale side to a fresh per-round
+    * broadcast (driver collect + rebuild each round; at corpus scale
+    * that side GROWS with the graph, so the static no-broadcast SMJ is
+    * also the only shape that survives 100 TB), and its partition
+    * coalescing re-keys the carried partitionings so later rounds pay
+    * a re-Exchange the static plan never has.
     * Measured on graph_pagerank at sf0.1/32 cores: min-of-3 9.8-11.2 s
     * with AQE on vs 7.7-7.9 s static (r22 ledger). Conf-scoped and
     * restored — every non-loop plan keeps AQE exactly as the session
     * set it.
     */
-  def staticRounds[T](s: org.apache.spark.sql.SparkSession)(body: => T): T = {
+  private[graft] def staticRounds[T](s: org.apache.spark.sql.SparkSession)(body: => T): T = {
     val aqeKey = "spark.sql.adaptive.enabled"
     val bcKey  = "spark.sql.autoBroadcastJoinThreshold"
     val aqePrev = s.conf.get(aqeKey)
@@ -81,7 +134,7 @@ object Caches {
     * reliable-checkpoint RDD holds no block-manager blocks, so this
     * is a harmless no-op there.
     */
-  def unpersistRound(df: DataFrame): Unit = roundRdd(df).foreach { rdd =>
+  private def unpersistRound(df: DataFrame): Unit = roundRdd(df).foreach { rdd =>
     rdd.unpersist(false)
     synchronized { releases -= rdd }
   }

@@ -354,7 +354,8 @@ object Dedup {
     *    two hops of the old pointer graph, cutting the number of
     *    rounds (≈ fixed per-round scheduling + checkpoint cost, the
     *    dominant term) for chain-heavy components.
-    *  - Each round ends in an EAGER checkpoint, which both materializes
+    *  - Rounds run on the round driver ([[graft.Caches.rounds]]), so
+    *    each round ends in an EAGER checkpoint, which both materializes
     *    the round and TRUNCATES logical lineage. Truncation is not
     *    optional: a round references the previous frame four times
     *    (neighbor side, join spine, two pointer-jump sides), so the
@@ -365,9 +366,10 @@ object Dedup {
     *    frame is the touched-vertex set — two longs per row — so the
     *    RDD materialization that bypasses AQE is irrelevant here,
     *    unlike the corpus-wide iteration this replaced.
-    *  - The previous round's checkpoint is unpersisted as soon as the
-    *    next one is materialized, so exactly one round is ever pinned
-    *    (not maxIters+1 accumulating in the block manager per call).
+    *  - The driver frees the previous round's checkpoint as soon as
+    *    the next one is materialized, so exactly one round is ever
+    *    pinned (not maxIters+1 accumulating in the block manager per
+    *    call).
     * The convergence signal is a `changed` column folded into the
     * round's frame and read with one cheap aggregate over the already-
     * materialized checkpoint (the old limit-1 `isEmpty` left the
@@ -421,40 +423,36 @@ object Dedup {
     // sides are LogicalRDDs the static planner cannot size, so AQE's
     // runtime broadcast of the node-scale sides is load-bearing here
     // (r22 A/B at sf0.1/32: 4.0 s adaptive vs 12.4 s static).
-    var kept = graft.Caches.roundCheckpoint(sym.groupBy(col("a").as(id))
-      .agg(min(col("b")).as("nbr0"))
-      .select(col(id), least(col(id), col("nbr0")).as(repCol)), reliable)
-    var cur = kept
-    var i = 0
-    var changed = true
-    while (i < maxIters && changed) {
-      val lbl  = cur.select(col(id).as("l_id"), col(repCol).as("l_rep"))
-      val par  = cur.select(col(id).as("p_id"), col(repCol).as("p_rep"))
-      val par2 = cur.select(col(id).as("q_id"), col(repCol).as("q_rep"))
-      val nbrMin = sym.join(lbl, col("b") === col("l_id"))
-        .groupBy(col("a")).agg(min("l_rep").as("nbr_rep"))
-      val next = graft.Caches.roundCheckpoint(
-        cur.join(nbrMin, col(id) === col("a"), "left")
-          .select(col(id), col(repCol).as("old_rep"),
-                  least(col(repCol), coalesce(col("nbr_rep"), col(repCol))).as("rep1"))
-          .join(par, col("rep1") === col("p_id"), "left")
-          .select(col(id), col("old_rep"),
-                  least(col("rep1"), coalesce(col("p_rep"), col("rep1"))).as("rep2"))
-          .join(par2, col("rep2") === col("q_id"), "left")
-          .select(col(id), col("old_rep"),
-                  least(col("rep2"), coalesce(col("q_rep"), col("rep2"))).as(repCol))
-          .select(col(id), col(repCol), (col(repCol) =!= col("old_rep")).as("changed")),
-        reliable)
-      // Cheap aggregate over the materialized checkpoint.
-      changed = next.agg(coalesce(max(col("changed")), lit(false))).head().getBoolean(0)
-      graft.Caches.unpersistRound(kept)
-      kept = next
-      cur = next.select(col(id), col(repCol))
-      i += 1
+    // State: the (id, rep) labels and whether the last round changed
+    // any; a round that changes none is the fixpoint.
+    val (labels, _) = graft.Caches.rounds(sym.sparkSession, maxIters, reliable) { round =>
+      (round.checkpoint(sym.groupBy(col("a").as(id))
+        .agg(min(col("b")).as("nbr0"))
+        .select(col(id), least(col(id), col("nbr0")).as(repCol))), true)
+    } {
+      case (_, (_, false)) => None
+      case (round, (cur, _)) =>
+        val lbl  = cur.select(col(id).as("l_id"), col(repCol).as("l_rep"))
+        val par  = cur.select(col(id).as("p_id"), col(repCol).as("p_rep"))
+        val par2 = cur.select(col(id).as("q_id"), col(repCol).as("q_rep"))
+        val nbrMin = sym.join(lbl, col("b") === col("l_id"))
+          .groupBy(col("a")).agg(min("l_rep").as("nbr_rep"))
+        val next = round.checkpoint(
+          cur.join(nbrMin, col(id) === col("a"), "left")
+            .select(col(id), col(repCol).as("old_rep"),
+                    least(col(repCol), coalesce(col("nbr_rep"), col(repCol))).as("rep1"))
+            .join(par, col("rep1") === col("p_id"), "left")
+            .select(col(id), col("old_rep"),
+                    least(col("rep1"), coalesce(col("p_rep"), col("rep1"))).as("rep2"))
+            .join(par2, col("rep2") === col("q_id"), "left")
+            .select(col(id), col("old_rep"),
+                    least(col("rep2"), coalesce(col("q_rep"), col("rep2"))).as(repCol))
+            .select(col(id), col(repCol), (col(repCol) =!= col("old_rep")).as("changed")))
+        // Cheap aggregate over the materialized checkpoint.
+        val changed = next.agg(coalesce(max(col("changed")), lit(false))).head().getBoolean(0)
+        Some((next.select(col(id), col(repCol)), changed))
     }
-    // The final round stays registered: it backs the returned plan
-    // until the caller's clear().
-    ids.join(cur, Seq(id), "left")
+    ids.join(labels, Seq(id), "left")
       .select(col(id), coalesce(col(repCol), col(id)).as(repCol))
       .withColumn("is_dup", col(repCol) =!= col(id))
       .orderBy(id)

@@ -6,10 +6,12 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 
 /** Iterative graph analytics over the star schema's implicit graphs.
-  * Companion family to the connected-components iterator in
-  * [[Dedup.connectedComponents]] — same per-round discipline (eager
-  * checkpoint to truncate lineage, previous round unpersisted once its
-  * successor exists, final round handed to the Caches lifecycle).
+  * Every fixpoint loop here, like the connected-components iterator in
+  * [[Dedup.connectedComponents]], runs through the one round driver,
+  * [[graft.Caches.rounds]] (eager checkpoint per round to truncate
+  * lineage, previous round freed once its successor exists, final round
+  * released at `clear()`); each loop gives it only its round plan, its
+  * stop rule and its conf scope.
   *
   * Generalizes the reference's junction-table analytics
   * (/root/reference/sql/03_views.sql:4-33 ranks entities by junction
@@ -81,18 +83,10 @@ object GraphOps {
     // the pinned one-Exchange-per-round SMJ shape actually runs —
     // r22 A/B: 9.8-11.2 s (AQE re-plans + re-broadcasts each round)
     // vs 7.7-7.9 s static, min-of-3 at sf0.1/32.
-    val lastRound = graft.Caches.staticRounds(s) {
-      var ranks = graft.Caches.roundCheckpoint(
-        nodes.select(col("node"), lit(initRank).as("rank")), reliable)
-      (1 to iters).foreach { _ =>
-        val next = graft.Caches.roundCheckpoint(
-          pageRankRound(edgesDeg, nodes, ranks, base), reliable)
-        graft.Caches.unpersistRound(ranks)
-        ranks = next
-      }
-      ranks
-    }
-    lastRound.orderBy("node")
+    graft.Caches.rounds(s, iters, reliable, staticInit = true, staticSteps = true)(
+      _.checkpoint(nodes.select(col("node"), lit(initRank).as("rank"))))(
+      (round, ranks) => Some(round.checkpoint(pageRankRound(edgesDeg, nodes, ranks, base))))
+      .orderBy("node")
   }
 
   /** The cached (nodes, edgesDeg) pair behind [[pageRank]]: nodes
@@ -427,10 +421,10 @@ object GraphOps {
     * the smallest part key reachable through any chain of co-purchase
     * links, plus its family's size. Reuses the shared pointer-doubling
     * min-label iterator ([[Dedup.connectedComponents]] — one cached
-    * symmetrized edge list, O(log diameter) rounds, per-round
-    * checkpoint lifecycle), so graph CC and dedup-cluster CC cannot
-    * drift. Family sizes come from one component-keyed partial
-    * aggregate joined back through the size-guarded broadcast.
+    * symmetrized edge list, O(log diameter) rounds on the round
+    * driver), so graph CC and dedup-cluster CC cannot drift. Family
+    * sizes come from one component-keyed partial aggregate joined
+    * back through the size-guarded broadcast.
     * Scale story = the iterator's: everything shuffles on node keys,
     * nothing is corpus-broadcast, and the support floor keeps the
     * edge set sparse as orders grow.
@@ -457,15 +451,13 @@ object GraphOps {
     * dimension predicate (all graph nodes of one brand — broadcast,
     * deterministic); unreached-within-`maxHops` parts carry null.
     *
-    * Classic frontier BFS, the iterator lifecycle shared with
-    * [[pageRank]]/[[Dedup.connectedComponents]]: per round ONE
-    * frontier⋈edges shuffle on the node key + an anti-join against
-    * the settled set, eager per-round checkpoint, predecessor
-    * unpersisted once its successor exists, early exit on an empty
-    * frontier (closure reached). State is (node, hops) — two longs
-    * per reached node; the frontier shrinks to the unreached
-    * boundary each round, so rounds get CHEAPER as the wave
-    * advances. At 100 TB nothing broadcasts but the seed predicate.
+    * Classic frontier BFS on the round driver
+    * ([[graft.Caches.rounds]]): per round ONE frontier⋈edges shuffle
+    * on the node key + an anti-join against the settled set, early
+    * exit on an empty frontier (closure reached). State is
+    * (node, hops) — two longs per reached node; the frontier shrinks
+    * to the unreached boundary each round, so rounds get CHEAPER as
+    * the wave advances. At 100 TB nothing broadcasts but the seed predicate.
     *
     * Oracled by a recursive CTE whose depth guard mirrors `maxHops`
     * exactly; MIN(hops) over the deduplicated (node, hops) closure is
@@ -508,39 +500,25 @@ object GraphOps {
     // discipline — idle-host min-of-3 at sf0.1 measured 4.28 s lazy
     // vs 3.76 s merged, and the driver's contended full-sweep run saw
     // the lazy variant at 3.1× the merged record.
-    var dist: DataFrame = null
-    var frontier: DataFrame = null
     // Static round plans — same rationale and A/B evidence as
-    // [[pageRank]] (Caches.staticRounds scaladoc).
-    graft.Caches.staticRounds(nodes.sparkSession) {
-      dist = graft.Caches.roundCheckpoint(
+    // [[pageRank]] (Caches.staticRounds scaladoc). State: the merged
+    // settled set and the last frontier (one checkpoint in round 0).
+    // An empty fresh frontier is the closure: the step rejects it and
+    // the driver frees it.
+    val (dist, _) = graft.Caches.rounds(nodes.sparkSession, maxHops, reliable,
+        staticInit = true, staticSteps = true) { round =>
+      val seeded = round.checkpoint(
         nodes.join(Hints.maybeBroadcast(seeds), Seq("part_key"), "left_semi")
-          .select(col("part_key").as("node"), lit(0L).as("hops")),
-        reliable)
-      frontier = dist
-      var h = 0L
-      var grew = true
-      while (h < maxHops && grew) {
-        h += 1
-        val nbrs = frontier.join(sym, col("node") === col("src"))
-          .select(col("dst").as("node")).distinct()
-        val fresh = graft.Caches.roundCheckpoint(
-          nbrs.join(dist, Seq("node"), "left_anti")
-            .select(col("node"), lit(h).as("hops")),
-          reliable)
-        grew = !fresh.isEmpty
-        if (grew) {
-          val merged = graft.Caches.roundCheckpoint(dist.unionAll(fresh), reliable)
-          graft.Caches.unpersistRound(dist)
-          if (h > 1) graft.Caches.unpersistRound(frontier)
-          dist = merged
-          frontier = fresh
-        } else graft.Caches.unpersistRound(fresh)
-      }
+          .select(col("part_key").as("node"), lit(0L).as("hops")))
+      (seeded, seeded)
+    } { case (round, (dist, frontier)) =>
+      val nbrs = frontier.join(sym, col("node") === col("src"))
+        .select(col("dst").as("node")).distinct()
+      val fresh = round.checkpoint(
+        nbrs.join(dist, Seq("node"), "left_anti")
+          .select(col("node"), lit(round.index.toLong).as("hops")))
+      Option.when(!fresh.isEmpty)((round.checkpoint(dist.unionAll(fresh)), fresh))
     }
-    // The final merged settled set (and the last frontier, a distinct
-    // checkpoint when the loop exited with growth) back the RETURNED
-    // plan, so they stay registered for the caller's clear().
     nodes.join(dist, nodes("part_key") === dist("node"), "left")
       .select(col("part_key"), col("hops"))
       .orderBy("part_key")
@@ -597,33 +575,15 @@ object GraphOps {
     * [[pageRank]]: `sym` is cached hash(src), `nodes` hash(node), and
     * the checkpointed labels CARRY hash(node) through the LogicalRDD,
     * so sym⋈labels (src==node) and nodes⋈votes (node==node) plan
-    * zero-exchange joins. Eager per-round checkpoint with predecessor
-    * unpersist — the iterator lifecycle shared with [[pageRank]] and
-    * the CC closures. At 100 TB each round shuffles (node, label)
-    * pairs only, once.
+    * zero-exchange joins. Rounds run on the round driver
+    * ([[graft.Caches.rounds]]). At 100 TB each round shuffles
+    * (node, label) pairs only, once.
     */
   def labelPropagation(s: SparkSession, dir: String, iters: Int = 5,
                        deltaDiv: Int = 0): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(deltaDiv >= 0, s"deltaDiv must be >= 0, got $deltaDiv")
     val (sym, nodes) = labelPropInputs(s, dir)
-    // Round 0 checkpoints the SINGLE-column node frame and projects
-    // the self-label view above the LogicalRDD, rather than
-    // checkpointing (node, node AS label) directly: a projection that
-    // aliases the partition key reports a partitioning COLLECTION
-    // (hash(label) or hash(node)), and the checkpoint's partitioning
-    // preservation flattens a collection to its FIRST member — which
-    // lands on the label side and forces every round-1 join to
-    // re-exchange. The single-column checkpoint carries an unambiguous
-    // hash(node); the projection above it keeps both views available
-    // to the round (pinned in PlanQualitySpec).
-    // Static from round 0: the init checkpoint also materializes the
-    // input caches, whose partition layout every later round rides.
-    val labelsInit = graft.Caches.staticRounds(s) {
-      graft.Caches.roundCheckpoint(nodes, reliable = false)
-    }
-    var labels: DataFrame =
-      labelsInit.select(col("node"), col("node").as("label"))
     // DELTA-FRONTIER rounds (r19): synchronous LP's update for node v
     // reads only N(v)'s previous labels, so if NO neighbor of v
     // changed in round t-1, round t reproduces v's label bit-for-bit
@@ -657,43 +617,50 @@ object GraphOps {
     // frame is a lazy filter over the same blocks. No second
     // checkpoint, no per-round bookkeeping shuffle.
     val track = deltaDiv > 0
-    var curCp: Option[DataFrame] = None
-    // Static round plans — same rationale and A/B evidence as
-    // [[pageRank]] (Caches.staticRounds scaladoc) — but ONLY for the
-    // plain synchronous path: the delta-tracking path's per-round
-    // bookkeeping (prev-label join, frontier semi-joins on sides the
-    // static planner cannot size) leans on AQE's runtime broadcasts
-    // the same way connectedComponents' pointer jumps do (r22 A/B:
-    // label_prop 4.25→3.56 s static, label_prop_delta 5.84→8.17 s —
-    // so delta keeps AQE).
-    def inRoundConf[T](body: => T): T =
-      if (track) body else graft.Caches.staticRounds(s)(body)
-    inRoundConf {
-      var changed: Option[DataFrame] = None
-      var changedCnt = Long.MaxValue
-      val nNodes = if (track) nodes.count() else 0L
-      var round = 0
-      while (round < iters && changedCnt > 0L) {
-        round += 1
-        val useDelta = track && changed.isDefined && changedCnt * deltaDiv.toLong <= nNodes
-        val plan =
-          if (useDelta) labelPropRoundDelta(sym, labels, changed.get)
-          else labelPropRound(sym, nodes, labels)
-        val next = graft.Caches.roundCheckpoint(
-          if (track)
+    // Counted on the first tracked step, after round 0 has materialized
+    // the input caches.
+    lazy val nNodes = nodes.count()
+    // Round 0 checkpoints the SINGLE-column node frame and projects
+    // the self-label view above the LogicalRDD, rather than
+    // checkpointing (node, node AS label) directly: a projection that
+    // aliases the partition key reports a partitioning COLLECTION
+    // (hash(label) or hash(node)), and the checkpoint's partitioning
+    // preservation flattens a collection to its FIRST member — which
+    // lands on the label side and forces every round-1 join to
+    // re-exchange. The single-column checkpoint carries an unambiguous
+    // hash(node); the projection above it keeps both views available
+    // to the round (pinned in PlanQualitySpec).
+    // Round 0 is static in both modes: its checkpoint also
+    // materializes the input caches, whose partition layout every
+    // later round rides. The steps are static — same rationale and A/B
+    // evidence as [[pageRank]] (Caches.staticRounds scaladoc) — ONLY
+    // on the plain synchronous path: the delta-tracking path's
+    // per-round bookkeeping (prev-label join, frontier semi-joins on
+    // sides the static planner cannot size) leans on AQE's runtime
+    // broadcasts the same way connectedComponents' pointer jumps do
+    // (r22 A/B: label_prop 4.25→3.56 s static, label_prop_delta
+    // 5.84→8.17 s — so delta keeps AQE).
+    val (labels, _, _) = graft.Caches.rounds(s, iters, reliable = false,
+        staticInit = true, staticSteps = !track) { round =>
+      (round.checkpoint(nodes).select(col("node"), col("node").as("label")),
+       Option.empty[DataFrame], Long.MaxValue)
+    } {
+      case (_, (_, _, 0L)) => None
+      case (round, (labels, changed, changedCnt)) =>
+        val n = if (track) nNodes else 0L
+        val plan = changed match {
+          case Some(c) if changedCnt * deltaDiv.toLong <= n =>
+            labelPropRoundDelta(sym, labels, c)
+          case _ => labelPropRound(sym, nodes, labels)
+        }
+        if (track) {
+          val next = round.checkpoint(
             plan.join(labels.select(col("node"), col("label").as("prev_label")), Seq("node"))
               .select(col("node"), col("label"),
-                      (col("label") =!= col("prev_label")).as("changed"))
-          else plan,
-          reliable = false)
-        if (track) {
-          changedCnt = next.filter(col("changed")).count()
-          changed = Some(next.filter(col("changed")).select("node"))
-        }
-        curCp.foreach(graft.Caches.unpersistRound)
-        curCp = Some(next)
-        labels = if (track) next.select("node", "label") else next
-      }
+                      (col("label") =!= col("prev_label")).as("changed")))
+          val changedNow = next.filter(col("changed"))
+          Some((next.select("node", "label"), Some(changedNow.select("node")), changedNow.count()))
+        } else Some((round.checkpoint(plan), None, Long.MaxValue))
     }
     val sizes = labels.groupBy("label").agg(count(lit(1)).as("community_size"))
     labels.join(Hints.maybeBroadcast(sizes), "label")
@@ -844,14 +811,14 @@ object GraphOps {
     * order, which is what makes the synchronous distributed peel
     * correct.
     *
-    * Round lifecycle shared with the other iterators: per round, two
-    * semi-joins restrict the cached symmetric edge list to surviving
-    * endpoints + one degree partial agg, eager checkpoint of the
-    * survivor set, predecessor unpersisted, early exit at fixpoint
-    * (the bounded per-round driver sync is one count, the bpe-argmax
-    * contract). Peel depth is data-bounded, not corpus-bounded —
-    * each round removes EVERY sub-k node at once — with a loud
-    * 200-round guard rather than a silent cap. State: (node, deg)
+    * Rounds run on the round driver ([[graft.Caches.rounds]]): per
+    * round, two semi-joins restrict the cached symmetric edge list to
+    * surviving endpoints + one degree partial agg, the survivor set is
+    * checkpointed, and the loop exits at fixpoint (the bounded
+    * per-round driver sync is one count, the bpe-argmax contract).
+    * Peel depth is data-bounded, not corpus-bounded — each round
+    * removes EVERY sub-k node at once — with a loud 200-round guard
+    * rather than a silent cap. State: (node, deg)
     * per survivor; nothing broadcasts.
     */
   def graphKcore(s: SparkSession, dir: String, k: Int = 3,
@@ -882,28 +849,26 @@ object GraphOps {
         // ordering [dst] survives the cache, so each peel round's
         // dst-side survivor semi-join elides its corpus-scale Sort
         .repartition(col("dst")).sortWithinPartitions("dst"))
-    var alive: DataFrame = null
     // Static round plans — same rationale and A/B evidence as
-    // [[pageRank]] (Caches.staticRounds scaladoc).
-    graft.Caches.staticRounds(edges.sparkSession) {
-      alive = graft.Caches.roundCheckpoint(
+    // [[pageRank]] (Caches.staticRounds scaladoc). State: the survivor
+    // set, its size, and whether the last peel removed anyone (a peel
+    // that removes no one, or everyone, is the fixpoint).
+    val (alive, _, _) = graft.Caches.rounds(edges.sparkSession, Int.MaxValue, reliable,
+        staticInit = true, staticSteps = true) { round =>
+      val alive = round.checkpoint(
         sym.groupBy(col("src").as("node")).agg(count(lit(1)).as("core_degree"))
-          .filter(col("core_degree") >= k), reliable)
-      var nAlive = alive.count()
-      var changed = nAlive > 0
-      var rounds = 0
-      while (changed) {
-        rounds += 1
-        require(rounds <= 200,
+          .filter(col("core_degree") >= k))
+      val nAlive = alive.count()
+      (alive, nAlive, nAlive > 0)
+    } {
+      case (_, (_, _, false)) => None
+      case (round, (alive, nAlive, _)) =>
+        require(round.index <= 200,
           s"k-core peel did not converge in 200 rounds (|alive|=$nAlive) — " +
             "pathological peel chain; raise the guard deliberately, not silently")
-        val next = graft.Caches.roundCheckpoint(kcoreRound(sym, alive, k), reliable)
+        val next = round.checkpoint(kcoreRound(sym, alive, k))
         val nNext = next.count()
-        changed = nNext < nAlive && nNext > 0
-        graft.Caches.unpersistRound(alive)
-        alive = next
-        nAlive = nNext
-      }
+        Some((next, nNext, nNext < nAlive && nNext > 0))
     }
     alive.select(col("node").as("part_key"), col("core_degree"))
       .orderBy("part_key")

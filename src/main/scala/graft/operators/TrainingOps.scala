@@ -424,7 +424,8 @@ object TrainingOps {
     * (`aggregate` HOF) rewriting each word's symbol array. Ties break
     * by (count desc, left, right), so the merge list is a pure
     * function of the corpus — reproducible across runs, engines and
-    * partitionings; each round ends in an eager checkpoint so the
+    * partitionings; each round runs on the round driver
+    * ([[graft.Caches.rounds]]) and ends in an eager checkpoint so the
     * analyzer never re-walks `nMerges` nested lambda plans.
     *
     * Max pair count is non-increasing across rounds (a merge only
@@ -462,42 +463,38 @@ object TrainingOps {
       .groupBy("word").agg(count(lit(1)).as("cnt"))
       .select(col("word"), expr("filter(split(word, ''), ch -> ch <> '')").as("syms"),
               col("cnt"))
-    var words = graft.Caches.roundCheckpoint(words0, reliable = false)
-    val merges = scala.collection.mutable.ArrayBuffer[(Long, String, String, Long)]()
-    var rank = 1
-    var exhausted = false
-    while (rank <= nMerges && !exhausted) {
-      val top = words.filter(size(col("syms")) >= 2)
-        .select(col("cnt"), explode(zip_with(
-          slice(col("syms"), lit(1), size(col("syms")) - 1),
-          slice(col("syms"), lit(2), size(col("syms")) - 1),
-          (l, r) => struct(l.as("l"), r.as("r")))).as("p"))
-        .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-        .agg(sum("cnt").as("pc"))
-        .orderBy(desc("pc"), col("l"), col("r"))
-        .limit(1).collect()
-      if (top.isEmpty) exhausted = true
-      else {
-        val (l, r, pc) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-        merges += ((rank.toLong, l, r, pc))
-        val merged = l + r
-        // Greedy left-to-right non-overlapping rewrite: append, unless
-        // the running tail is exactly (l) and the element is (r) — then
-        // the tail becomes the merged symbol. "aaa" + (a,a) -> [aa, a].
-        val next = graft.Caches.roundCheckpoint(
-          words.select(col("word"),
-            aggregate(col("syms"), array().cast("array<string>"),
-              (acc, x) => when(
-                  size(acc) > 0 && element_at(acc, -1) === lit(l) && x === lit(r),
-                  concat(slice(acc, lit(1), size(acc) - 1), array(lit(merged))))
-                .otherwise(concat(acc, array(x)))).as("syms"),
-            col("cnt")), reliable = false)
-        graft.Caches.unpersistRound(words)
-        words = next
-        rank += 1
-      }
+    // State: the rewritten words and the merges so far. Once no word
+    // has two symbols left there is no pair to merge, and the loop ends.
+    val (words, merges) = graft.Caches.rounds(s, nMerges, reliable = false)(
+      round => (round.checkpoint(words0), Vector.empty[(Long, String, String, Long)])) {
+      case (round, (words, merges)) =>
+        val top = words.filter(size(col("syms")) >= 2)
+          .select(col("cnt"), explode(zip_with(
+            slice(col("syms"), lit(1), size(col("syms")) - 1),
+            slice(col("syms"), lit(2), size(col("syms")) - 1),
+            (l, r) => struct(l.as("l"), r.as("r")))).as("p"))
+          .groupBy(col("p.l").as("l"), col("p.r").as("r"))
+          .agg(sum("cnt").as("pc"))
+          .orderBy(desc("pc"), col("l"), col("r"))
+          .limit(1).collect()
+        top.headOption.map { t =>
+          val (l, r, pc) = (t.getString(0), t.getString(1), t.getLong(2))
+          val merged = l + r
+          // Greedy left-to-right non-overlapping rewrite: append, unless
+          // the running tail is exactly (l) and the element is (r) — then
+          // the tail becomes the merged symbol. "aaa" + (a,a) -> [aa, a].
+          (round.checkpoint(
+            words.select(col("word"),
+              aggregate(col("syms"), array().cast("array<string>"),
+                (acc, x) => when(
+                    size(acc) > 0 && element_at(acc, -1) === lit(l) && x === lit(r),
+                    concat(slice(acc, lit(1), size(acc) - 1), array(lit(merged))))
+                  .otherwise(concat(acc, array(x)))).as("syms"),
+              col("cnt"))),
+           merges :+ ((round.index.toLong, l, r, pc)))
+        }
     }
-    (merges.toSeq, words)
+    (merges, words)
   }
 
   /** Deterministic global training-order shuffle — the "shuffle the

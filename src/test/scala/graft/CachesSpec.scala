@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.GraphOps
+import graft.operators.{GraphOps, TrainingOps}
 
 /** Lifecycle semantics of the per-query release list (what [[Caches.clear]]
   * frees, and that one failing release never stops the rest) and of the
@@ -42,6 +42,31 @@ class CachesSpec extends AnyFunSuite with SparkFixture {
     assert(pinned.exists(!_.isCheckpointed), "the cached edge list was not pinned")
     assert(left.isEmpty, s"clear() left RDDs $left pinned")
   }
+
+  // The other Caches.rounds loops: whether each caches its inputs, and
+  // the most checkpointed RDDs its final round may leave pinned — one,
+  // except BFS's merged settled set plus its last fresh frontier.
+  private val loops = Seq[(String, Boolean, Int, () => Unit)](
+    ("graphBfsHops", true, 2, () => GraphOps.graphBfsHops(spark, sf)),
+    ("graphKcore", true, 1, () => GraphOps.graphKcore(spark, sf)),
+    ("labelPropagation deltaDiv=0", true, 1,
+      () => GraphOps.labelPropagation(spark, sf, deltaDiv = 0)),
+    ("labelPropagation deltaDiv=1", true, 1,
+      () => GraphOps.labelPropagation(spark, sf, deltaDiv = 1)),
+    ("bpeTrain", false, 1, () => TrainingOps.bpeTrain(spark, sf)))
+
+  for ((name, cachesInputs, maxRounds, op) <- loops)
+    test(s"$name pins its cached inputs plus its final round until clear(), nothing after") {
+      val (pinned, left) = pinnedAround(op())
+      val rounds = pinned.count(_.isCheckpointed)
+      val detail = pinned.map(r => r.id -> r.isCheckpointed)
+      if (maxRounds == 1) assert(rounds == 1, s"expected the final round only, got $detail")
+      else assert(rounds >= 1 && rounds <= maxRounds,
+        s"expected 1 to $maxRounds final-round checkpoints, got $detail")
+      assert(pinned.exists(!_.isCheckpointed) == cachesInputs,
+        s"cached inputs pinned: expected $cachesInputs, got $detail")
+      assert(left.isEmpty, s"clear() left RDDs $left pinned")
+    }
 
   test("scratchDir exists until clear() and is gone after") {
     val dir = Caches.scratchDir("caches-spec")

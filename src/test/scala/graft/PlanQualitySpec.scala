@@ -747,15 +747,10 @@ class PlanQualitySpec extends AnyFunSuite with SparkFixture {
   test("pagerank round: exactly ONE corpus-scale Exchange (the groupBy(dst)) under the no-broadcast regime") {
     import org.apache.spark.sql.execution.exchange.{ShuffleExchangeExec, BroadcastExchangeExec}
     import graft.operators.GraphOps
-    val conf = spark.conf
-    val prevAuto = conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val prevAqe = conf.get("spark.sql.adaptive.enabled")
     // Corpus-scale regime: at 100 TB neither ranks nor edges broadcast,
     // and AQE's local-read rewrites (a small-scale artifact) would hide
     // the partitioning the round is designed to carry.
-    conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    try Caches.staticRounds(spark) {
       val (nodes, edgesDeg) = GraphOps.pageRankInputs(spark, sf)
       val ranks0 = Caches.roundCheckpoint(
         nodes.select(col("node"), lit(1000000000000L).as("rank")), reliable = false)
@@ -778,22 +773,14 @@ class PlanQualitySpec extends AnyFunSuite with SparkFixture {
         s"the round's one shuffle must be the groupBy(dst): ${shuffles.head.outputPartitioning}")
       val bcasts = exec.collect { case b: BroadcastExchangeExec => b }
       assert(bcasts.isEmpty, s"nothing may broadcast at corpus scale:\n$exec")
-    } finally {
-      conf.set("spark.sql.autoBroadcastJoinThreshold", prevAuto)
-      conf.set("spark.sql.adaptive.enabled", prevAqe)
-      Caches.clear()
-    }
+    } finally Caches.clear()
   }
 
   test("label-prop and kcore rounds: exactly ONE corpus-scale Exchange each under the no-broadcast regime") {
     import org.apache.spark.sql.execution.exchange.{ShuffleExchangeExec, BroadcastExchangeExec}
     import graft.operators.GraphOps
     val conf = spark.conf
-    val prevAuto = conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val prevAqe = conf.get("spark.sql.adaptive.enabled")
-    conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    try Caches.staticRounds(spark) {
       def shape(df: DataFrame, want: String, label: String): Unit = {
         val exec = df.queryExecution.executedPlan
         val shuffles = exec.collect { case e: ShuffleExchangeExec => e }
@@ -846,11 +833,7 @@ class PlanQualitySpec extends AnyFunSuite with SparkFixture {
         ksym.groupBy(col("src").as("node")).agg(count(lit(1)).as("core_degree"))
           .filter(col("core_degree") >= 3), reliable = false)
       shape(GraphOps.kcoreRound(ksym, alive0, 3), "src", "kcore")
-    } finally {
-      conf.set("spark.sql.autoBroadcastJoinThreshold", prevAuto)
-      conf.set("spark.sql.adaptive.enabled", prevAqe)
-      Caches.clear()
-    }
+    } finally Caches.clear()
   }
 
   test("attribution: ONE fused Window; denominator rides the cached rollup, not a second events pass") {
