@@ -185,6 +185,10 @@ object Bench {
     ((System.nanoTime() - t0) / 1e9, tag)
   }
 
+  /** Local cores of a tool main's session (Bench, Verify, StageProf):
+    * `SPARK_GRAFT_CPUS`, default 4. */
+  private[graft] def cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+
   def main(args: Array[String]): Unit = {
     // Canonicalize (toRealPath) so the SAME dataset addressed via a
     // relative path / trailing slash / symlink writes and compares one
@@ -194,7 +198,6 @@ object Bench {
         sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
       (if (Files.exists(p)) p.toRealPath() else p.toAbsolutePath.normalize).toString
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "2").toInt
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)

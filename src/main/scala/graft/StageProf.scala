@@ -19,8 +19,7 @@ object StageProf {
     val fn = SparkEntry.queries.getOrElse(name,
       sys.error(s"unknown query key: $name"))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = GraftSession.local(cpus, appName = "graft-stageprof")
+    val spark = GraftSession.local(Bench.cpus, appName = "graft-stageprof")
     spark.sparkContext.setLogLevel("ERROR")
 
     val log = new Bench.StageLog

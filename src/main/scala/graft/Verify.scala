@@ -12,8 +12,7 @@ object Verify {
     // Optional third arg: comma-separated query names (dev iteration
     // aid; the driver always runs the full set with two args).
     val only: Option[Set[String]] = args.lift(2).map(_.split(',').toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val spark = GraftSession.local(cpus, appName = "graft-verify")
+    val spark = GraftSession.local(Bench.cpus, appName = "graft-verify")
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

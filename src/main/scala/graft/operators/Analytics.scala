@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.Tables
 import graft.functions.OracleSafe._
+import graft.streaming.EventStreams
 
 /** Relational/analytic engine surface: scan→filter→agg pipelines,
   * grouping sets, pivot, running windows, sessionization, percentiles.
@@ -496,7 +497,10 @@ object Analytics {
 
   /** Gap-based sessionization (30-min inactivity): lag → new-session
     * flag → running count = session id → per-session rollup. Two window
-    * passes over one (user_id, ts) sort — a single exchange.
+    * passes over one (user_id, ts) sort — a single exchange. Written
+    * apart from [[EventStreams.sessionize]], whose typed per-user state
+    * has no batch plan; the session ids here come from a per-event lag
+    * spine.
     */
   def sessionizeEvents(s: SparkSession, dir: String): DataFrame = {
     val byUser = Window.partitionBy("user_id").orderBy(col("ts_ns"), col("event_id"))
@@ -1304,103 +1308,72 @@ object Analytics {
       .orderBy("event_type")
   }
 
-  /** Batch-equivalent of the streaming tumbling-window count (see
-    * graft.streaming.EventStreams.windowedCounts — same plan shape,
-    * bounded source).
+  /** Batch twin of [[EventStreams.windowedCounts]]: the stream's own
+    * plan over the bounded events table (the analyzer drops its
+    * watermark on a batch source), window start in epoch seconds.
     */
-  def streamWindowedCounts(s: SparkSession, dir: String): DataFrame = {
-    Tables.events(s, dir)
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"), sum2(col("value")).as("sum_value"))
-      .select(
-        epochS(col("window.start")).as("window_start_s"),
-        col("event_type"), col("n_events"), col("sum_value"))
+  def streamWindowedCounts(s: SparkSession, dir: String): DataFrame =
+    EventStreams.windowedCounts(Tables.events(s, dir))
+      .select(epochS(col("window_start")).as("window_start_s"),
+              col("event_type"), col("n_events"), col("sum_value"))
       .orderBy("window_start_s", "event_type")
-  }
 
   /** Batch twin of the streaming quarantine front door
-    * ([[graft.streaming.EventStreams.quarantineCounts]] — same plan,
-    * bounded source, minus the watermark node): per day window ×
-    * type, row/ok/quarantined counts under the document-level
-    * PERMISSIVE corrupt-record verdict and the deterministic
-    * every-7th-event mangle (see [[EtlOps.ingestQuarantine]], whose
-    * lifetime totals this series decomposes by day).
+    * ([[EventStreams.quarantineCounts]], run over the bounded events
+    * table): per day window × type, row/ok/quarantined counts under
+    * [[EventStreams.quarantineOk]], the verdict whose lifetime totals
+    * [[EtlOps.ingestQuarantine]] reports per type.
     */
-  def streamQuarantine(s: SparkSession, dir: String): DataFrame = {
-    val mangled = when(col("event_id") % 7 === 0,
-        expr("substring(props, 1, length(props) - 1)"))
-      .otherwise(col("props"))
-    val parsed = from_json(mangled,
-      org.apache.spark.sql.types.StructType.fromDDL("k INT, _corrupt STRING"),
-      Map("mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> "_corrupt"))
-    Tables.events(s, dir)
-      .select(col("ts"), col("event_type"),
-              (mangled.isNotNull && parsed.getField("_corrupt").isNull).as("ok"))
-      .groupBy(window(col("ts"), "1 day"), col("event_type"))
-      .agg(count(lit(1)).as("n_rows"),
-           sum(when(col("ok"), 1L).otherwise(0L)).as("n_ok"),
-           sum(when(col("ok"), 0L).otherwise(1L)).as("n_quarantined"))
-      .select(epochS(col("window.start")).as("window_start_s"),
+  def streamQuarantine(s: SparkSession, dir: String): DataFrame =
+    EventStreams.quarantineCounts(Tables.events(s, dir))
+      .select(epochS(col("window_start")).as("window_start_s"),
               col("event_type"), col("n_rows"), col("n_ok"), col("n_quarantined"))
       .orderBy("window_start_s", "event_type")
-  }
 
   /** Batch twin of the streaming windowed heavy-hitters sketch
-    * ([[graft.streaming.EventStreams.windowHeavyHitters]] — same
-    * plan, bounded source). Oracle-exact per window because k=64
-    * exceeds the event-type cardinality (see [[topkHeavyHitters]]).
+    * ([[EventStreams.windowHeavyHitters]], run over the bounded events
+    * table). Oracle-exact per window because k=64 exceeds the
+    * event-type cardinality (see [[topkHeavyHitters]]).
     */
-  def streamHeavyHitters(s: SparkSession, dir: String, k: Int = 64): DataFrame = {
-    graft.plans.GraftFunctions.ensureRegistered(s)
-    Tables.events(s, dir)
-      .groupBy(window(col("ts"), "1 hour"))
-      .agg(call_function("graft_freq_sketch", col("event_type"), lit(k)).as("sketch"))
-      .select(epochS(col("window.start")).as("window_start_s"),
-              explode(col("sketch")).as(Seq("item", "est_count")))
+  def streamHeavyHitters(s: SparkSession, dir: String, k: Int = 64): DataFrame =
+    EventStreams.windowHeavyHitters(Tables.events(s, dir), k)
+      .select(epochS(col("window_start")).as("window_start_s"),
+              col("item"), col("est_count"))
       .orderBy("window_start_s", "item")
-  }
 
-  /** Sliding-window counts (1-hour windows every 15 minutes): each
-    * event belongs to exactly width/slide = 4 overlapping windows, so
-    * the aggregate's input replicates 4× BEFORE the shuffle — that
-    * multiplier is the sliding window's intrinsic cost and the reason
-    * production dashboards prefer tumbling + rollup when freshness
-    * allows; when they don't, this is the shape, and the partial
-    * aggregation still combines map-side so only (window, type)
-    * partials cross the wire. Windows are epoch-aligned, matching the
-    * oracle's slide-floor arithmetic exactly. Streaming twin:
-    * [[graft.streaming.EventStreams.slidingCounts]].
+  /** Sliding-window counts (1-hour windows every 15 minutes), the batch
+    * twin of [[EventStreams.slidingCounts]] run over the bounded events
+    * table: each event belongs to exactly width/slide = 4 overlapping
+    * windows, so the aggregate's input replicates 4× BEFORE the
+    * shuffle — that multiplier is the sliding window's intrinsic cost
+    * and the reason production dashboards prefer tumbling + rollup
+    * when freshness allows; when they don't, this is the shape, and
+    * the partial aggregation still combines map-side so only (window,
+    * type) partials cross the wire. Windows are epoch-aligned,
+    * matching the oracle's slide-floor arithmetic exactly.
     */
-  def streamSlidingCounts(s: SparkSession, dir: String): DataFrame = {
-    Tables.events(s, dir)
-      .groupBy(window(col("ts"), "1 hour", "15 minutes"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"), sum2(col("value")).as("sum_value"))
-      .select(
-        epochS(col("window.start")).as("window_start_s"),
-        col("event_type"), col("n_events"), col("sum_value"))
+  def streamSlidingCounts(s: SparkSession, dir: String): DataFrame =
+    EventStreams.slidingCounts(Tables.events(s, dir))
+      .select(epochS(col("window_start")).as("window_start_s"),
+              col("event_type"), col("n_events"), col("sum_value"))
       .orderBy("window_start_s", "event_type")
-  }
 
   /** Batch twin of the native session_window aggregation
-    * (graft.streaming.EventStreams.sessionWindowCounts — same plan on
-    * the bounded source minus the watermark node): one session-merging
-    * aggregate per user, session end = last event + 30 min gap,
-    * end-exclusive (events exactly a gap apart split). Complements
-    * [[sessionizeEvents]], which keeps PER-EVENT rows via the manual
-    * lag+cumsum spine — this form is the per-SESSION rollup, and at
-    * 100 TB it is one partial-merging shuffle on the user key with
-    * constant state per open session.
+    * ([[EventStreams.sessionWindowCounts]], run over the bounded events
+    * table): one session-merging aggregate per user, session end =
+    * last event + 30 min gap, end-exclusive (events exactly a gap
+    * apart split). Complements [[sessionizeEvents]], which keeps
+    * PER-EVENT rows via the manual lag+cumsum spine — this form is the
+    * per-SESSION rollup, and at 100 TB it is one partial-merging
+    * shuffle on the user key with constant state per open session.
     */
-  def streamSessionWindows(s: SparkSession, dir: String): DataFrame = {
-    Tables.events(s, dir)
-      .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
-      .agg(count(lit(1)).as("n_events"), sum2(col("value")).as("session_value"))
+  def streamSessionWindows(s: SparkSession, dir: String): DataFrame =
+    EventStreams.sessionWindowCounts(Tables.events(s, dir))
       .select(col("user_id"),
-              epochS(col("session_window.start")).as("session_start_s"),
-              epochS(col("session_window.end")).as("session_end_s"),
+              epochS(col("session_start")).as("session_start_s"),
+              epochS(col("session_end")).as("session_end_s"),
               col("n_events"), col("session_value"))
       .orderBy("user_id", "session_start_s")
-  }
 
   /** Batch-equivalent of the stream-static enrichment
     * (graft.streaming.EventStreams.enrich — identical join, bounded
@@ -1410,7 +1383,7 @@ object Analytics {
   def streamEnrich(s: SparkSession, dir: String): DataFrame = {
     val e = Tables.events(s, dir)
     val c = Tables.customer(s, dir)
-    graft.streaming.EventStreams.enrich(e, c)
+    EventStreams.enrich(e, c)
       .select(col("event_id"), col("user_id"), col("segment"), col("value"))
       .orderBy("event_id")
   }
@@ -1418,8 +1391,9 @@ object Analytics {
   /** Batch-equivalent of the stream-stream event-time interval join
     * (graft.streaming.EventStreams.intervalJoin — purchases matched to
     * each signup within (0, horizon]): equi-join on the user key with
-    * the time bound as a post-filter, at full ns precision (the
-    * streaming twin compares at Spark's µs timestamp grain). One
+    * the time bound as a post-filter, at full ns precision — written
+    * apart from the streaming twin, which compares at Spark's µs
+    * timestamp grain. One
     * key-partitioned shuffle per side; the per-user pair expansion is
     * the interval join's intrinsic output, bounded by each user's own
     * signup×purchase counts — never a time-range cross join across
@@ -1452,7 +1426,9 @@ object Analytics {
     * WindowGroupLimit pruning (rn=1); value in exact cents for the
     * hash oracle. Where [[graft.operators.EtlOps.cdcApply]] merges
     * the collapsed log onto a base snapshot, this key is the collapse
-    * itself — the state the stream twin holds per key.
+    * itself — the state the stream twin holds per key. Written apart
+    * from [[EventStreams.cdcState]], a typed per-key register that a
+    * batch source has no plan for.
     */
   def streamCdcApply(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy("user_id")
@@ -1471,7 +1447,9 @@ object Analytics {
   }
 
   /** Batch-equivalent of streaming dropDuplicates: first occurrence per
-    * (user_id, event_type) by event time.
+    * (user_id, event_type) by event time. Written apart from
+    * [[EventStreams.dedupIds]], which keeps the first ARRIVAL (the same
+    * row only for an in-order replay).
     */
   def streamDedupIds(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy("user_id", "event_type")
@@ -1658,25 +1636,20 @@ object Analytics {
       .orderBy("user_id", "event_id")
   }
 
-  /** Batch twin of the trending-topics pattern
-    * (graft.streaming.EventStreams.trendingCounts + rankTrending —
-    * the RANKING stage is the SAME function object, so stream and
-    * batch cannot drift): hourly tumbling counts per event type,
-    * top-k per window by (count desc, type). One windowed partial
-    * agg + one rank window whose key space is hours×types, map-side
-    * WindowGroupLimit pruning before the exchange.
+  /** Batch twin of the trending-topics pattern: the stream's counts
+    * step ([[EventStreams.trendingCounts]]) and its per-snapshot
+    * ranking ([[EventStreams.rankTrending]]) run over the bounded
+    * events table, so stream and batch cannot drift: hourly tumbling
+    * counts per event type, top-k per window by (count desc, type).
+    * One windowed partial agg + one rank window whose key space is
+    * hours×types, map-side WindowGroupLimit pruning before the
+    * exchange.
     */
-  def streamTopkTrending(s: SparkSession, dir: String, k: Int = 3): DataFrame = {
-    val counts = Tables.events(s, dir)
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("window.start").as("window_start"),
-              col("event_type"), col("n_events"))
-    graft.streaming.EventStreams.rankTrending(counts, k)
+  def streamTopkTrending(s: SparkSession, dir: String, k: Int = 3): DataFrame =
+    EventStreams.rankTrending(EventStreams.trendingCounts(Tables.events(s, dir)), k)
       .select(epochS(col("window_start")).as("window_start_s"),
               col("rank"), col("event_type"), col("n_events"))
       .orderBy("window_start_s", "rank")
-  }
 
   /** RFM customer segmentation (recency / frequency / monetary — the
     * classic warehouse marketing cut) over orders: metrics are ONE
@@ -1884,13 +1857,23 @@ object Analytics {
     */
   def attributionLastTouch(s: SparkSession, dir: String,
                            lookbackDays: Int = 7): DataFrame = {
+    val (events, lookbackNs) = attributionInput(s, dir, lookbackDays)
+    attributionOver(events, lookbackNs)
+  }
+
+  /** The attribution input both [[attributionLastTouch]] and
+    * [[streamAttribution]] read: touch and purchase events (user_id,
+    * event_id, ts_ns, event_type, cents in exact floor(100·value)
+    * longs), and the lookback in ns.
+    */
+  private def attributionInput(s: SparkSession, dir: String,
+                               lookbackDays: Int): (DataFrame, Long) = {
     require(lookbackDays > 0, s"lookbackDays $lookbackDays must be positive")
-    attributionOver(
-      Tables.events(s, dir)
-        .filter(col("event_type").isin("view", "click", "purchase"))
-        .select(col("user_id"), col("event_id"), col("ts_ns"), col("event_type"),
-                floor(col("value") * 100).cast("long").as("cents")),
-      lookbackDays * 86400L * 1000000000L)
+    (Tables.events(s, dir)
+       .filter(col("event_type").isin("view", "click", "purchase"))
+       .select(col("user_id"), col("event_id"), col("ts_ns"), col("event_type"),
+               floor(col("value") * 100).cast("long").as("cents")),
+     lookbackDays * 86400L * 1000000000L)
   }
 
   /** [[attributionLastTouch]]'s body over an explicit event frame
@@ -1960,13 +1943,8 @@ object Analytics {
     */
   def streamAttribution(s: SparkSession, dir: String,
                         lookbackDays: Int = 7): DataFrame = {
-    require(lookbackDays > 0, s"lookbackDays $lookbackDays must be positive")
-    attributionCreditsOver(
-      Tables.events(s, dir)
-        .filter(col("event_type").isin("view", "click", "purchase"))
-        .select(col("user_id"), col("event_id"), col("ts_ns"), col("event_type"),
-                floor(col("value") * 100).cast("long").as("cents")),
-      lookbackDays * 86400L * 1000000000L)
+    val (events, lookbackNs) = attributionInput(s, dir, lookbackDays)
+    attributionCreditsOver(events, lookbackNs)
       .select(col("user_id"), col("event_id"),
               expr("ts_ns div 1000").as("ts_us"), col("channel"), col("cents"))
       .orderBy("user_id", "event_id")

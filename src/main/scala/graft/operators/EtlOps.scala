@@ -357,35 +357,20 @@ object EtlOps {
     * pipeline trusts its API not to need (02_etl.py parses responses
     * unguarded): parse the raw JSON payload, route unparseable rows to
     * a counted quarantine instead of failing the batch or silently
-    * nulling fields. The payload column is deterministically mangled
-    * for every 7th event (trailing brace dropped — unambiguously
-    * invalid JSON to any parser) so the corrupt path runs at every
-    * scale factor against the read-only testdata; a real feed skips
-    * the mangle and parses `props` as-is.
+    * nulling fields. The verdict, including the every-7th-event mangle
+    * that makes the corrupt path run against the read-only testdata,
+    * is [[graft.streaming.EventStreams.quarantineOk]], shared with the
+    * streaming quarantine series.
     *
     * Emits the per-type audit: row/ok/quarantined counts plus the
     * quarantined id range as the reprocessing pointer. One row-local
     * parse projection + one bounded-key partial agg — the parse never
-    * shuffles, the report is type-cardinality-sized. Parse verdict is
-    * DOCUMENT-level: PERMISSIVE `from_json` routes any unparseable
-    * payload into a corrupt-record column, so ok = "parsed as a JSON
-    * document" exactly like the oracle's json_valid — a valid payload
-    * with a missing/null field is OK, not quarantined (the field-proxy
-    * gate this replaces depended on every intact payload carrying a
-    * non-null `k`). A NULL payload quarantines (json_valid(NULL) is
-    * not true), guarded explicitly because from_json maps NULL input
-    * to a null struct, not a corrupt record.
+    * shuffles, the report is type-cardinality-sized.
     */
-  def ingestQuarantine(s: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(s, dir)
-    val mangled = when(col("event_id") % 7 === 0,
-        expr("substring(props, 1, length(props) - 1)"))
-      .otherwise(col("props"))
-    val parsed = from_json(mangled,
-      org.apache.spark.sql.types.StructType.fromDDL("k INT, _corrupt STRING"),
-      Map("mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> "_corrupt"))
-    ev.select(col("event_type"), col("event_id"),
-        (mangled.isNotNull && parsed.getField("_corrupt").isNull).as("ok"))
+  def ingestQuarantine(s: SparkSession, dir: String): DataFrame =
+    Tables.events(s, dir)
+      .select(col("event_type"), col("event_id"),
+              graft.streaming.EventStreams.quarantineOk.as("ok"))
       .groupBy("event_type")
       .agg(count(lit(1)).as("n_rows"),
            sum(when(col("ok"), 1L).otherwise(0L)).as("n_ok"),
@@ -393,7 +378,6 @@ object EtlOps {
            min(when(!col("ok"), col("event_id"))).as("first_quarantined_id"),
            max(when(!col("ok"), col("event_id"))).as("last_quarantined_id"))
       .orderBy("event_type")
-  }
 
   /** Targeted one-column backfill — the reference's enrich-later
     * pattern (02_etl.py:66-69 loads `runtime_minutes` as NULL at

@@ -54,22 +54,18 @@ object Sources {
 
   /** Idempotent partition BACKFILL: overwrite ONLY the partitions
     * present in this batch, leave every other partition untouched —
-    * `partitionOverwriteMode=dynamic` scoped to this one write (the
-    * session conf is restored after). This is the write mode every
-    * incremental daily job needs: re-running yesterday's batch
+    * `partitionOverwriteMode=dynamic` as an option of this one write
+    * (the shared session's conf is never written, so a concurrent
+    * write on the same session keeps its own mode). This is the write
+    * mode every incremental daily job needs: re-running yesterday's batch
     * replaces yesterday's directories exactly; a plain Overwrite
     * would TRUNCATE THE WHOLE DATASET first, and Append would
     * duplicate the rerun. At 100 TB this is also the only sane
     * recovery story — reprocess a day, not a corpus.
     */
-  def overwritePartitions(df: DataFrame, path: String, partitionCols: Seq[String]): Unit = {
-    val conf = df.sparkSession.conf
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val prev = conf.get(key, "STATIC")
-    conf.set(key, "dynamic")
-    try df.write.mode(SaveMode.Overwrite).partitionBy(partitionCols: _*).parquet(path)
-    finally conf.set(key, prev)
-  }
+  def overwritePartitions(df: DataFrame, path: String, partitionCols: Seq[String]): Unit =
+    df.write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partitionCols: _*).parquet(path)
 
   /** ORC twin of the parquet sinks — same columnar/pushdown story,
     * for stacks standardized on ORC. Round-trip + pushdown exercised

@@ -1,18 +1,31 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.types.StructType
 import graft.functions.OracleSafe.sum2
 import graft.operators.Dedup
 
 /** Structured Streaming pipelines over the event stream (SURVEY.md §2
-  * "Streaming"). Each transform takes the source DataFrame/Dataset as
-  * input — bounded (batch) and unbounded (readStream / MemoryStream)
-  * sources run the SAME logical plan, which is how the batch
-  * equivalents registered in `SparkEntry.queries` stay provably in sync
-  * with the streaming path (see StreamingSpec: MemoryStream results ==
-  * batch results on the same rows).
+  * "Streaming"). Each transform takes its source DataFrame/Dataset as
+  * input, so one query runs as a batch or incrementally (the
+  * Structured Streaming model, Armbrust et al., SIGMOD 2018). The
+  * batch twins registered in `SparkEntry.queries` CALL their
+  * transform on the bounded events table rather than re-typing it:
+  * `Analytics.streamWindowedCounts` runs [[windowedCounts]],
+  * `streamQuarantine` [[quarantineCounts]], `streamHeavyHitters`
+  * [[windowHeavyHitters]], `streamSlidingCounts` [[slidingCounts]],
+  * `streamSessionWindows` [[sessionWindowCounts]],
+  * `streamTopkTrending` [[trendingCounts]] + [[rankTrending]] and
+  * `streamEnrich` [[enrich]]; the dedup, ANN-probe and packing twins
+  * call their stream functions too. On a bounded source the analyzer drops the
+  * `withWatermark` node (EliminateEventTimeWatermark), so a twin's
+  * plan is the plain batch aggregate; StreamingSpec pins that per
+  * twin and proves MemoryStream results == twin results on the same
+  * rows. Four twins are written apart because their batch semantics
+  * differ, and each says why: `streamDedupIds`, `streamCdcApply`,
+  * `streamIntervalJoin` and `sessionizeEvents`.
   *
   * This is the streaming analogue of the reference's incremental
   * ingest loop (/root/reference/02_etl.py:50-62 pages through the API
@@ -44,41 +57,52 @@ object EventStreams {
   case class RawEv(event_id: Long, event_type: String,
                    ts: java.sql.Timestamp, props: String)
 
-  /** Streaming malformed-record quarantine — the CONTINUOUS form of
-    * [[graft.operators.EtlOps.ingestQuarantine]]: the same
-    * document-level PERMISSIVE corrupt-record verdict (and the same
-    * deterministic every-7th-event mangle so the corrupt path runs
-    * against the read-only testdata), aggregated per day window ×
-    * type so the quarantine RATE is a live dashboard series instead
-    * of a batch postmortem — a feed that starts shipping garbage
-    * moves this line within one micro-batch. Parse is row-local
-    * (stateless, before the shuffle); state is one count row per
-    * (day, type) key, watermark-evicted. Batch twin:
-    * Analytics.streamQuarantine (same plan on a bounded source;
-    * StreamingSpec proves stream == batch).
+  /** The ingest quarantine verdict, one row-local column over
+    * (event_id, props): true when the payload parses as a JSON
+    * document. Every 7th event's payload is deterministically mangled
+    * (trailing brace dropped, unambiguously invalid JSON to any
+    * parser) so the corrupt path runs at every scale factor against
+    * the read-only testdata; a real feed skips the mangle. The parse
+    * is PERMISSIVE `from_json` routing any unparseable payload into a
+    * `_corrupt` record column, so ok = "parsed as a JSON document"
+    * exactly like the oracle's json_valid: a valid payload with a
+    * missing/null field is OK. A NULL payload is not
+    * (json_valid(NULL) is not true), guarded explicitly because
+    * from_json maps NULL input to a null struct, not a corrupt record.
+    * [[quarantineCounts]] and [[graft.operators.EtlOps.ingestQuarantine]]
+    * both aggregate it.
     */
-  def quarantineCounts(events: DataFrame): DataFrame = {
+  private[graft] def quarantineOk: Column = {
     val mangled = when(col("event_id") % 7 === 0,
         expr("substring(props, 1, length(props) - 1)"))
       .otherwise(col("props"))
-    val parsed = from_json(mangled,
-      org.apache.spark.sql.types.StructType.fromDDL("k INT, _corrupt STRING"),
+    val parsed = from_json(mangled, StructType.fromDDL("k INT, _corrupt STRING"),
       Map("mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> "_corrupt"))
+    mangled.isNotNull && parsed.getField("_corrupt").isNull
+  }
+
+  /** Streaming malformed-record quarantine — the CONTINUOUS form of
+    * [[graft.operators.EtlOps.ingestQuarantine]]: the same
+    * [[quarantineOk]] verdict, aggregated per day window × type so the
+    * quarantine RATE is a live dashboard series instead of a batch
+    * postmortem — a feed that starts shipping garbage moves this line
+    * within one micro-batch. Parse is row-local (stateless, before the
+    * shuffle); state is one count row per (day, type) key,
+    * watermark-evicted. Run as a batch by Analytics.streamQuarantine.
+    */
+  def quarantineCounts(events: DataFrame): DataFrame =
     events
       .withWatermark("ts", "2 hours")
-      .select(col("ts"), col("event_type"),
-              (mangled.isNotNull && parsed.getField("_corrupt").isNull).as("ok"))
+      .select(col("ts"), col("event_type"), quarantineOk.as("ok"))
       .groupBy(window(col("ts"), "1 day"), col("event_type"))
       .agg(count(lit(1)).as("n_rows"),
            sum(when(col("ok"), 1L).otherwise(0L)).as("n_ok"),
            sum(when(col("ok"), 0L).otherwise(1L)).as("n_quarantined"))
       .select(col("window.start").as("window_start"), col("event_type"),
               col("n_rows"), col("n_ok"), col("n_quarantined"))
-  }
 
   /** Tumbling 1-hour counts + sums per event type, 2h watermark.
-    * Mirrors Analytics.streamWindowedCounts (same plan on a bounded
-    * source minus the watermark node).
+    * Run as a batch by Analytics.streamWindowedCounts.
     */
   def windowedCounts(events: DataFrame): DataFrame =
     events
@@ -97,9 +121,8 @@ object EventStreams {
     * closes the window. The "what dominates this stream right now"
     * dashboard question answered with BOUNDED state on an unbounded
     * stream — an exact windowed groupBy(item) would grow state with
-    * item cardinality instead. Batch twin:
-    * Analytics.streamHeavyHitters (same plan, bounded source;
-    * StreamingSpec proves stream == batch).
+    * item cardinality instead. Run as a batch by
+    * Analytics.streamHeavyHitters.
     */
   def windowHeavyHitters(events: DataFrame, k: Int = 64): DataFrame = {
     graft.plans.GraftFunctions.ensureRegistered(events.sparkSession)
@@ -115,7 +138,7 @@ object EventStreams {
     * store holds width/slide = 4 open windows per (window, type) key
     * group and the watermark closes them in slide-sized steps —
     * overlapping freshness the tumbling form can't give, for 4× the
-    * state and pre-shuffle row replication. Mirrors
+    * state and pre-shuffle row replication. Run as a batch by
     * Analytics.streamSlidingCounts.
     */
   def slidingCounts(events: DataFrame): DataFrame =
@@ -137,7 +160,7 @@ object EventStreams {
     * Use this form when per-session output is start/end/aggregates;
     * drop to [[sessionize]] only when the per-event custom state
     * (running payloads, early emission) genuinely can't be expressed
-    * as an aggregate. Mirrors Analytics.streamSessionWindows.
+    * as an aggregate. Run as a batch by Analytics.streamSessionWindows.
     */
   def sessionWindowCounts(events: DataFrame): DataFrame =
     events
@@ -156,9 +179,9 @@ object EventStreams {
     * keys would keep state forever). A duplicate arriving within the
     * 2h horizon of the first occurrence is dropped; beyond it the key
     * re-emits — the bounded-state trade every infinite-stream dedup
-    * makes. Mirrors Analytics.streamDedupIds (batch picks the earliest
-    * by event time; streaming keeps the first *arrival*, which for an
-    * in-order replay is the same row).
+    * makes. Batch twin: Analytics.streamDedupIds, written apart because
+    * it picks the earliest by event time where the stream keeps the
+    * first *arrival* (the same row for an in-order replay).
     */
   def dedupIds(events: DataFrame): DataFrame =
     events
@@ -445,7 +468,10 @@ object EventStreams {
     * inside the watermark horizon per key: Spark derives the eviction
     * bound from the interval condition (a signup can be dropped once
     * the purchase-side watermark passes signup ts + horizon), which
-    * is what keeps a 100 TB/day stream's join state finite.
+    * is what keeps a 100 TB/day stream's join state finite. Batch
+    * twin: Analytics.streamIntervalJoin, written apart because it
+    * compares event times at ns precision where this join compares
+    * Spark timestamps at µs grain.
     */
   def intervalJoin(signups: DataFrame, purchases: DataFrame,
                    horizonSec: Long = 3600): DataFrame = {
@@ -473,8 +499,8 @@ object EventStreams {
     * dim → per-batch broadcast hash join, no state store, no
     * watermark; a dim too big to broadcast degrades to a shuffled
     * join rather than a driver OOM. LEFT join: an event with no dim
-    * row must flow (null attributes), never silently drop. Mirrors
-    * Analytics.streamEnrich (stream == batch proven in StreamingSpec).
+    * row must flow (null attributes), never silently drop. Run as a
+    * batch by Analytics.streamEnrich.
     */
   def enrich(events: DataFrame, dim: DataFrame,
              eventKey: String = "user_id", dimKey: String = "c_custkey"): DataFrame =
@@ -529,7 +555,9 @@ object EventStreams {
     * one `SessionState` per user in the state store, extended on each
     * event, closed + emitted either by an in-batch gap or by an
     * event-time timeout once the watermark passes the gap horizon.
-    * Mirrors Analytics.sessionizeEvents.
+    * Batch twin: Analytics.sessionizeEvents, written apart because its
+    * session ids come from a per-event lag spine (a window pass), not
+    * from typed per-user state.
     */
   def sessionize(events: Dataset[Ev], gapSec: Long = 1800): Dataset[SessionOut] = {
     import events.sparkSession.implicits._
@@ -614,7 +642,10 @@ object EventStreams {
     * [[cdcStateEvicting]] is exactly that variant; this operator
     * keeps NoTimeout because its contract is exact convergence under
     * arbitrary replay (StreamingSpec shuffles and replays batches
-    * and asserts state equals the batch collapse).
+    * and asserts state equals the batch collapse). Batch twin:
+    * Analytics.streamCdcApply, written apart because this register
+    * is typed per-key state, which a batch source has no plan for;
+    * the twin computes the same collapse as a window rank.
     */
   def cdcState(changes: Dataset[Ev]): Dataset[CdcOut] = {
     import changes.sparkSession.implicits._
@@ -623,19 +654,31 @@ object EventStreams {
       .flatMapGroupsWithState[CdcLatest, CdcOut](
         OutputMode.Update, GroupStateTimeout.NoTimeout) {
         (uid: Long, evs: Iterator[Ev], state: GroupState[CdcLatest]) =>
-          val incoming = evs.map { e =>
-            CdcLatest(epochMicros(e.ts), e.event_id,
-              if (e.event_type == "error") "D" else "U", e.value)
-          }
-          val latest = (state.getOption.iterator ++ incoming)
-            .maxBy(c => (c.ts_us, c.event_id))
-          val moved = !state.getOption.contains(latest)
-          if (moved) {
-            state.update(latest)
-            Iterator(CdcOut(uid, latest.event_id, latest.ts_us, latest.op,
-              latest.op != "D", latest.value))
-          } else Iterator.empty
+          cdcStep(uid, evs, state)._2
       }
+  }
+
+  /** The CDC register step [[cdcState]] and [[cdcStateEvicting]]
+    * share: fold the key's incoming changes (`error` events are 'D'
+    * tombstones, everything else 'U') into its latest-wins register by
+    * (ts_us, event_id). When the register moved, it is stored and its
+    * new current row is the output; otherwise the output is empty.
+    * Returns the register with that output.
+    */
+  private def cdcStep(uid: Long, evs: Iterator[Ev],
+                      state: GroupState[CdcLatest]): (CdcLatest, Iterator[CdcOut]) = {
+    val incoming = evs.map { e =>
+      CdcLatest(epochMicros(e.ts), e.event_id,
+        if (e.event_type == "error") "D" else "U", e.value)
+    }
+    val latest = (state.getOption.iterator ++ incoming)
+      .maxBy(c => (c.ts_us, c.event_id))
+    if (state.getOption.contains(latest)) (latest, Iterator.empty)
+    else {
+      state.update(latest)
+      (latest, Iterator(CdcOut(uid, latest.event_id, latest.ts_us, latest.op,
+        latest.op != "D", latest.value)))
+    }
   }
 
   /** Far-future timeout pin (9999-12-31T23:59:59.999Z): a live CDC
@@ -684,23 +727,13 @@ object EventStreams {
             state.remove()
             Iterator.empty
           } else {
-            val incoming = evs.map { e =>
-              CdcLatest(epochMicros(e.ts), e.event_id,
-                if (e.event_type == "error") "D" else "U", e.value)
-            }
-            val latest = (state.getOption.iterator ++ incoming)
-              .maxBy(c => (c.ts_us, c.event_id))
-            val moved = !state.getOption.contains(latest)
-            if (moved) state.update(latest)
+            val (latest, out) = cdcStep(uid, evs, state)
             val wm = state.getCurrentWatermarkMs()
             state.setTimeoutTimestamp(
               if (latest.op == "D")
                 math.max(latest.ts_us / 1000L + horizonSec * 1000L, wm + 1L)
               else NeverMs)
-            if (moved)
-              Iterator(CdcOut(uid, latest.event_id, latest.ts_us, latest.op,
-                latest.op != "D", latest.value))
-            else Iterator.empty
+            out
           }
       }
   }
@@ -819,7 +852,8 @@ object EventStreams {
     * has no incremental form), so the stream emits counts and
     * [[rankTrending]] runs per micro-batch via `foreachBatch` — the
     * standard split: incremental state in the engine, per-snapshot
-    * ranking on each batch's (small, window×type-sized) output.
+    * ranking on each batch's (small, window×type-sized) output. Run
+    * as a batch, with [[rankTrending]], by Analytics.streamTopkTrending.
     */
   def trendingCounts(events: DataFrame): DataFrame =
     events
@@ -831,8 +865,8 @@ object EventStreams {
 
   /** Per-window top-k rank over a counts snapshot — shared verbatim by
     * the `foreachBatch` sink and the batch twin
-    * (Analytics.streamTopkTrending), so stream and batch ranking
-    * cannot drift. Input: (window_start, event_type, n_events).
+    * (Analytics.streamTopkTrending, which also runs [[trendingCounts]]),
+    * so stream and batch ranking cannot drift. Input: (window_start, event_type, n_events).
     */
   def rankTrending(counts: DataFrame, k: Int = 3): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window

@@ -137,6 +137,24 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     } finally q.stop()
   }
 
+  test("batch twins that run their stream transform plan without a watermark node") {
+    import org.apache.spark.sql.catalyst.plans.logical.{EventTimeWatermark, LogicalPlan}
+    import spark.implicits._
+    implicit val ctx = spark.sqlContext
+    def watermarks(p: LogicalPlan) = p.collect { case w: EventTimeWatermark => w }
+    // the transform keeps its watermark on an unbounded source...
+    assert(watermarks(EventStreams.windowedCounts(MemoryStream[Ev].toDF())
+      .queryExecution.analyzed).nonEmpty)
+    // ...and the analyzer drops it on the bounded events table, so each
+    // twin's plan is the plain batch aggregate
+    Seq("stream_windowed_counts", "stream_quarantine", "stream_heavy_hitters",
+        "stream_sliding_counts", "stream_session_window", "stream_topk_trending")
+      .foreach { key =>
+        val analyzed = SparkEntry.queries(key)(spark, sf).queryExecution.analyzed
+        assert(watermarks(analyzed).isEmpty, s"$key keeps an EventTimeWatermark node")
+      }
+  }
+
   test("dedupIds keeps exactly one row per (user, type) within the watermark") {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
