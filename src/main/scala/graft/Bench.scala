@@ -1,7 +1,7 @@
 package graft
 
 import java.lang.management.ManagementFactory
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 import java.nio.file.StandardCopyOption.{ATOMIC_MOVE, REPLACE_EXISTING}
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
@@ -11,30 +11,30 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import scala.util.Try
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main: times every registered query at the given scale
-  * factor and prints exactly ONE machine-parseable JSON line on stdout
-  * (the final line), also mirrored to a record file. A query whose
-  * EVERY pass fails is recorded as -1 in "queries" plus a message in
-  * "errors" (counted in n_failed) — a regression can never masquerade
-  * as a timing. A query that fails some passes but times at least one
-  * is reported under "flaky" instead, so a valid min never coexists
-  * with a failure count.
+  * factor. A query whose EVERY pass fails is recorded as -1 in
+  * "queries" plus a message in "errors" (counted in n_failed) — a
+  * regression can never masquerade as a timing. A query that fails some
+  * passes but times at least one is reported under "flaky" instead, so a
+  * valid min never coexists with a failure count.
   *
-  * The record is rewritten after EVERY query (atomic temp+rename),
+  * Stdout gets the full record, then a compact summary as the FINAL
+  * line. With SPARK_GRAFT_BENCH_RECORD=<file> the record is also written
+  * to that file, rewritten after EVERY query (atomic temp+rename) and
   * carrying "partial":true until the run completes: a harness timeout
   * that kills the JVM mid-run still leaves a parseable file with every
-  * timing measured so far.
+  * timing measured so far. Without it the run writes no file.
   *
   * Knobs: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS,
   * SPARK_GRAFT_BENCH_PASSES (default 2), SPARK_GRAFT_BENCH_ONLY=k1,k2
   * (time a subset; every pass lands in pass_detail.t),
   * SPARK_GRAFT_BENCH_SUBSTRATE=cold|warm and
-  * SPARK_GRAFT_BENCH_RECORD=<file> (see [[route]]).
+  * SPARK_GRAFT_BENCH_RECORD=<file>.
   */
 object Bench {
   /** 1-minute loadavg above which a run is stamped degraded: it then
@@ -42,123 +42,45 @@ object Bench {
   private val CleanLoad = 1.5
   /** Longest wait for the host to go idle before the ambient sample. */
   private val IdleWaitSec = 240
-  /** Extra passes for a key whose min is over 2x its baseline. */
+  /** Extra passes for a key whose min is over 2x its reference bar. */
   private val RemeasurePasses = 2
-  /** The one override record name that is re-recorded in place. */
-  private val DriverShape = "BENCH_LOCAL_DRIVERSHAPE.json"
-  /** The override name the refusal message offers as an example. */
-  private[graft] val OverrideExample = "BENCH_MYRUN.json"
+  /** The reference sweep, in Bench's record shape: per-key bars at one
+    * SF (see records/README.md for how it is folded). */
+  private[graft] val ReferenceFile = Paths.get("records/reference/reference.json")
 
   private val json = new ObjectMapper().registerModule(DefaultScalaModule)
 
-  /** What routing and scoring read off a record file. */
-  private[graft] case class Record(file: String, sf: String, degraded: Boolean,
-                                   queries: Map[String, Double])
-
-  /** Where a run writes its record, and which record holds its per-key
-    * baseline. */
-  private[graft] case class Route(record: String, baseline: Option[String])
-
-  /** Decide where this run's record goes, or refuse the run.
-    *
-    *  - A clean full run claims BENCH_LOCAL.json; a filtered run
-    *    (SPARK_GRAFT_BENCH_ONLY) claims BENCH_LOCAL_FILTERED.json, so a
-    *    subset never replaces the full-sweep record.
-    *  - A degraded run never overwrites a clean record: it takes the
-    *    `_DEGRADED` file instead.
-    *  - A file holds one SF: a run at another SF takes the
-    *    `_<sfTag>` sibling, and is refused when that sibling holds yet
-    *    another SF (same leaf name, other parent directory).
-    *  - An override names its file verbatim, bypassing the guards
-    *    above, so it may not name a BENCH_LOCAL* file, a committed
-    *    ledger file or any existing file. The exception is
-    *    BENCH_LOCAL_DRIVERSHAPE.json, re-recorded in place by clean
-    *    runs; a degraded run takes its `_DEGRADED` sibling, append-new.
-    *  - The baseline is the same-SF canonical record; a filtered run
-    *    gets none (its timings are not comparable to in-sweep ones).
-    *
-    * `onDisk` reads the record at a path, None when there is no file.
+  /** The per-key bars a run at `sfDir` is graded against: the `queries`
+    * of the record at `file`. A missing or unreadable file, a record of
+    * another SF (compared by the SF dir's leaf name) or of no SF, and a
+    * filtered run all get none: cross-SF ratios are meaningless, and a
+    * subset's timings are not comparable to in-sweep ones.
     */
-  private[graft] def route(sfDir: String, filtered: Boolean, degraded: Boolean,
-                           recordOverride: Option[String],
-                           onDisk: String => Option[Record]): Either[String, Route] = {
-    val sfTag = Paths.get(sfDir).getFileName.toString.replaceAll("[^A-Za-z0-9._-]", "_")
-    def sibling(name: String) = name.stripSuffix(".json") + s"_$sfTag.json"
-    def degradedName(name: String) = name.stripSuffix(".json") + "_DEGRADED.json"
-    def free(name: String) = onDisk(name).forall(_.sf == sfDir)
-    def bySf(name: String): Either[String, String] =
-      if (free(name)) Right(name)
-      else if (free(sibling(name))) Right(sibling(name))
-      else Left(s"${sibling(name)} holds ${onDisk(sibling(name)).get.sf}; move it aside.")
-    def guarded(clean: String): Either[String, String] = bySf(clean).flatMap { p =>
-      if (degraded && onDisk(p).exists(!_.degraded)) bySf(degradedName(clean)) else Right(p)
-    }
-    def overridden(raw: String): Either[String, String] = {
-      val leaf = Paths.get(raw).getFileName.toString
-      val ledger = Seq("BASELINE", "SCALING", "PROGRESS", "CORRECTNESS_", "PERF_", "VERIFY_")
-        .exists(leaf.startsWith) || leaf.matches("BENCH_[rR]\\d.*")
-      val inPlace = leaf == DriverShape && !degraded
-      val path =
-        if (leaf == DriverShape && degraded)
-          Paths.get(raw).resolveSibling(degradedName(DriverShape)).toString
-        else raw
-      if (leaf.startsWith("BENCH_LOCAL") && leaf != DriverShape)
-        Left(s"$raw is a routed BENCH_LOCAL* record; pick another name (e.g. $OverrideExample).")
-      else if (ledger) Left(s"$raw is a committed ledger file; pick a purpose-named file.")
-      else if (!inPlace && onDisk(path).isDefined)
-        Left(s"$path exists and override records are append-new; pick a fresh name.")
-      else Right(path)
-    }
-    val canonical = "BENCH_LOCAL.json"
-    val baseline =
-      if (filtered) None
-      else Seq(canonical, sibling(canonical)).find(onDisk(_).exists(_.sf == sfDir))
-    recordOverride.map(overridden)
-      .getOrElse(guarded(if (filtered) "BENCH_LOCAL_FILTERED.json" else canonical))
-      .map(Route(_, baseline))
+  private[graft] def referenceBars(file: Path, sfDir: String,
+                                   filtered: Boolean): Map[String, Double] = {
+    def leaf(sf: String) = sf.split('/').lastOption.getOrElse("")
+    val ref = Try(json.readTree(file.toFile)).getOrElse(json.missingNode())
+    if (filtered || leaf(ref.path("sf").asText("")) != leaf(sfDir)) Map.empty
+    else ref.path("queries").properties.asScala
+      .collect { case e if e.getValue.isNumber => e.getKey -> e.getValue.asDouble }.toMap
   }
 
-  /** The run's self-grade against the ratified per-key bars
-    * (BASELINE.json `ratified`) and the same-SF baseline record.
-    *
-    * The ratified block counts only when its `sf` stamp names this
-    * run's SF leaf: cross-SF ratios are meaningless, and a block with
-    * no stamp disables the comparison rather than permitting it. A
-    * ratio distribution over fewer than 20 keys is null. A degraded
-    * run embeds the clean baseline record's own ratified scorecard as
-    * `canonical_ref`, so host-noise outliers never headline.
+  /** The run's self-grade against the reference bars: the per-key
+    * time/bar ratio distribution (null over fewer than 20 keys) and the
+    * five worst keys. Failed and unreferenced keys are skipped.
     */
-  private[graft] def scorecard(timings: Iterable[(String, Double)], ratified: JsonNode,
-                               sfDir: String, baseline: Option[Record],
-                               degraded: Boolean): ListMap[String, Any] = {
-    val bars =
-      if (ratified.path("sf").asText("") == Paths.get(sfDir).getFileName.toString)
-        queriesOf(ratified)
-      else Map.empty[String, Double]
-    def ratios(ts: Iterable[(String, Double)], by: Map[String, Double]) =
-      ts.collect { case (k, v) if v > 0 && by.get(k).exists(_ > 0) => k -> v / by(k) }.toSeq
-    def dist(rs: Seq[(String, Double)], fields: (String, Double)*): Option[ListMap[String, Any]] =
-      Option.when(rs.size >= 20) {
-        val sorted = rs.map(_._2).sorted
-        def q(p: Double) = round(sorted(math.round(p * (sorted.size - 1)).toInt), 3)
-        ListMap[String, Any]("n" -> sorted.size) ++ fields.map { case (f, p) => f -> q(p) }
-      }
-    def worst5(rs: Seq[(String, Double)]) =
-      ListMap(rs.sortBy(-_._2).take(5).map { case (k, r) => k -> round(r, 2) }: _*)
-    def vsRatified(ts: Iterable[(String, Double)]) = {
-      val rs = ratios(ts, bars)
-      ListMap("ratified_ratio" ->
-          dist(rs, "median" -> 0.5, "p90" -> 0.9).map(_ + ("n_over2x" -> rs.count(_._2 > 2.0))),
-        "worst5_vs_ratified" -> worst5(rs))
+  private[graft] def scorecard(timings: Iterable[(String, Double)],
+                               bars: Map[String, Double]): ListMap[String, Any] = {
+    val rs = timings.collect { case (k, v) if v > 0 && bars.get(k).exists(_ > 0) => k -> v / bars(k) }
+      .toSeq
+    val ratio = Option.when(rs.size >= 20) {
+      val sorted = rs.map(_._2).sorted
+      def q(p: Double) = round(sorted(math.round(p * (sorted.size - 1)).toInt), 3)
+      ListMap("n" -> sorted.size, "median" -> q(0.5), "p90" -> q(0.9),
+        "n_over2x" -> rs.count(_._2 > 2.0))
     }
-    val vsBase = ratios(timings, baseline.map(_.queries).getOrElse(Map.empty))
-    val canonicalRef = baseline.filter(b => degraded && !b.degraded && b.queries.nonEmpty)
-      .map(b => ListMap("file" -> b.file, "total" -> round(b.queries.values.filter(_ >= 0).sum, 1))
-        ++ vsRatified(b.queries))
-    vsRatified(timings) ++ ListMap(
-      "baseline_ratio" -> dist(vsBase, "p10" -> 0.1, "median" -> 0.5, "p90" -> 0.9),
-      "worst5_vs_baseline" -> worst5(vsBase),
-      "canonical_ref" -> canonicalRef)
+    ListMap("ratified_ratio" -> ratio,
+      "worst5_vs_ratified" -> ListMap(rs.sortBy(-_._2).take(5).map { case (k, r) => k -> round(r, 2) }: _*))
   }
 
   /** Local property set while a pass builds its frame. Its value names
@@ -222,13 +144,8 @@ object Bench {
     }
     val loadAmbient = loadavg
     val degraded = loadAmbient > CleanLoad
-    val Route(target, baselineFile) =
-      route(sfDir, only.isDefined, degraded, sys.env.get("SPARK_GRAFT_BENCH_RECORD"), read)
-        .fold(msg => { System.err.println(s"[bench] $msg"); sys.exit(2) }, identity)
-    // Read before the first flush can replace it.
-    val baseline = baselineFile.flatMap(read)
-    val ratified = Try(json.readTree(Paths.get("BASELINE.json").toFile).path("ratified"))
-      .getOrElse(json.missingNode())
+    val target = sys.env.get("SPARK_GRAFT_BENCH_RECORD").map(Paths.get(_).toAbsolutePath)
+    val bars = referenceBars(ReferenceFile, sfDir, only.isDefined)
 
     val spark = GraftSession.local(cpus, appName = "graft-bench")
     spark.sparkContext.setLogLevel("ERROR")
@@ -268,20 +185,19 @@ object Bench {
     val errors, flaky, remeasured = mutable.LinkedHashMap.empty[String, String]
     val passDetail = mutable.LinkedHashMap.empty[String, ListMap[String, Any]]
     // Substrate ledger: keys that READ a leaf (their serving ratio is
-    // not like-for-like with a baseline that built inline), and keys
+    // not like-for-like with a reference that built inline), and keys
     // that PAID a build this run, with its cost.
     val compileDominated, substrateKeys = mutable.LinkedHashSet.empty[String]
     val substrateBuilt = mutable.LinkedHashMap.empty[String, Double]
 
-    def record(partial: Boolean): ListMap[String, Any] = {
-      val card = scorecard(timings, ratified, sfDir, baseline, degraded)
+    def record(partial: Boolean): ListMap[String, Any] =
       ListMap(
         "metric" -> "total", "value" -> timings.values.filter(_ >= 0).sum, "unit" -> "sec",
         "action" -> "noop-write-materialize", "passes" -> passes, "timing" -> "min-of-passes",
         "partial" -> partial, "jvm" -> jvm, "n_timed" -> timings.size,
         "loadavg_ambient" -> loadAmbient, "waited_s" -> waitedSec, "degraded" -> degraded,
         "loadavg_start" -> loadStart, "loadavg_end" -> loadavg) ++
-      (card - "worst5_vs_baseline") ++ ListMap(
+      scorecard(timings, bars) ++ ListMap(
         "substrate_mode" -> substrateMode,
         "substrate_build_sec" -> round(Substrate.buildSeconds, 3),
         "substrate_built" -> substrateBuilt, "substrate_keys" -> substrateKeys,
@@ -297,14 +213,12 @@ object Bench {
         "queries" -> timings, "pass_detail" -> passDetail, "errors" -> errors,
         "flaky" -> flaky, "remeasured" -> remeasured, "n_failed" -> errors.size,
         "filtered" -> only.isDefined, "sf" -> sfDir)
-    }
     // Temp file in the target's own directory, so the rename is atomic:
     // a reader sees the previous snapshot or the new one, never a torn
     // line. Dot-prefixed and deleted on failure, so a crash leaves no
     // visible orphans.
-    def flush(rec: ListMap[String, Any]): Unit = {
-      val out = Paths.get(target).toAbsolutePath
-      val tmp = Files.createTempFile(out.getParent, ".BENCH_LOCAL", ".tmp")
+    def flush(rec: ListMap[String, Any]): Unit = target.foreach { out =>
+      val tmp = Files.createTempFile(out.getParent, ".bench", ".tmp")
       try {
         Files.writeString(tmp, json.writeValueAsString(rec))
         Files.move(tmp, out, REPLACE_EXISTING, ATOMIC_MOVE)
@@ -312,10 +226,6 @@ object Bench {
         Files.deleteIfExists(tmp); throw e
       }
     }
-    // One generation of history: a bad run claiming the canonical file
-    // still leaves the record it replaced.
-    if (target == "BENCH_LOCAL.json" && Files.exists(Paths.get(target)))
-      Files.copy(Paths.get(target), Paths.get("BENCH_LOCAL_PREV.json"), REPLACE_EXISTING)
 
     // Per-query min of N passes: the min of independent passes is the
     // contention-filtered estimate of what the plan costs. Memoized
@@ -340,15 +250,16 @@ object Bench {
       }
       def stats = runs.collect { case Right(p) => p }.toSeq
       runs ++= Seq.fill(passes)(timedPass())
-      // Over 2x the baseline: re-measure before recording, and annotate
-      // first/final so host steal (final back near baseline) reads
-      // apart from a real regression (elevated through the re-measure).
+      // Over 2x the reference bar: re-measure before recording, and
+      // annotate first/final so host steal (final back near the bar)
+      // reads apart from a real regression (elevated through the
+      // re-measure).
       val first = stats.map(_.wall).minOption
-      baseline.flatMap(_.queries.get(name)).filter(b => b > 0 && first.exists(_ > 2 * b))
-        .foreach { base =>
+      bars.get(name).filter(b => b > 0 && first.exists(_ > 2 * b))
+        .foreach { bar =>
           runs ++= Seq.fill(RemeasurePasses)(timedPass())
           remeasured(name) = f"first=${first.get}%.3f final=${stats.map(_.wall).min}%.3f " +
-            f"baseline=$base%.3f extra_passes=$RemeasurePasses"
+            f"reference=$bar%.3f extra_passes=$RemeasurePasses"
         }
       timings(name) = stats.map(_.wall).minOption.getOrElse(-1.0)
       if (stats.nonEmpty) {
@@ -384,11 +295,11 @@ object Bench {
     // line: a reader that keeps only a stdout tail parses the last line,
     // and a full 226-key record would be cut mid-line.
     println(json.writeValueAsString(full))
-    val summary = full ++ scorecard(timings, ratified, sfDir, baseline, degraded) -- Seq(
+    val summary = full -- Seq(
       "action", "timing", "partial", "loadavg_start", "loadavg_end", "substrate_built",
       "substrate_keys", "cms_note", "er_note", "queries", "pass_detail", "errors", "flaky",
       "remeasured")
-    println(json.writeValueAsString(summary + ("full_record" -> target)))
+    println(json.writeValueAsString(summary + ("full_record" -> target.map(_.toString))))
     System.out.flush()
     // rc reflects run health, so tooling keying on rc never reads a
     // broken run as green; the timings are already flushed and printed.
@@ -453,19 +364,6 @@ object Bench {
               col("vec_id"))
       .withColumn("rn", row_number().over(w)).filter(col("rn") <= 3).count()
   } catch { case _: Throwable => () }
-
-  /** The record at `file`, None when there is no file. A file that does
-    * not parse reads as a record of no SF: it never matches a run's SF
-    * and still blocks an append-new override. */
-  private def read(file: String): Option[Record] =
-    Option.when(Files.exists(Paths.get(file))) {
-      val n = Try(json.readTree(Paths.get(file).toFile)).getOrElse(json.missingNode())
-      Record(file, n.path("sf").asText(""), n.path("degraded").asBoolean(false), queriesOf(n))
-    }
-
-  private def queriesOf(n: JsonNode): Map[String, Double] =
-    n.path("queries").properties.asScala
-      .collect { case e if e.getValue.isNumber => e.getKey -> e.getValue.asDouble }.toMap
 
   private def round(x: Double, digits: Int): Double = {
     val k = math.pow(10, digits)

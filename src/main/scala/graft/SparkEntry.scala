@@ -4968,8 +4968,9 @@ object SparkEntry {
     * the bias-corrected branch interpolating Spark's published
     * RAW_ESTIMATE/BIAS tables (k=6 nearest, embedded as literals read
     * from the public `HyperLogLogPlusPlusHelper` statics at generation
-    * time), the linear-counting branch m·ln(m/V) under the p=9
-    * threshold (400). The last-ulp caveat is documented in SURVEY §5:
+    * time), the linear-counting branch m·ln(m/V) when V > 0 and either
+    * it is under the p=9 threshold (400) or the raw estimate is at most
+    * 2.5·m, as Spark's `HyperLogLogPlusPlusHelper.query` decides. The last-ulp caveat is documented in SURVEY §5:
     * Java sums zInverse sequentially and DuckDB's ln/AVG may differ in
     * the final ulp — measure-zero for this corpus (verified at sf0.01
     * and sf0.1); a future corpus landing exactly on a rounding
@@ -5026,11 +5027,11 @@ object SparkEntry {
           SELECT est.event_type,
                  CASE WHEN est.e <= ${5.0 * m} THEN est.e - eb.bias6 ELSE est.e END AS ebc,
                  CASE WHEN est.v > 0 THEN $m * ln($m / CAST(est.v AS DOUBLE)) END AS h,
-                 est.v
+                 est.v, est.e
           FROM est JOIN eb USING (event_type)),
         cnt AS (SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_events FROM events GROUP BY event_type)
         SELECT f.event_type,
-               CAST(FLOOR(CASE WHEN f.v > 0 AND f.h <= $threshold THEN f.h ELSE f.ebc END + 0.5) AS BIGINT) AS approx_users,
+               CAST(FLOOR(CASE WHEN f.v > 0 AND (f.h <= $threshold OR f.e <= ${2.5 * m}) THEN f.h ELSE f.ebc END + 0.5) AS BIGINT) AS approx_users,
                c.n_events
         FROM fin f JOIN cnt c USING (event_type)
         ORDER BY f.event_type"""
@@ -5130,10 +5131,10 @@ object SparkEntry {
         ${n}_fin AS (
           SELECT CASE WHEN est.e <= ${5.0 * m} THEN est.e - eb.bias6 ELSE est.e END AS ebc,
                  CASE WHEN est.v > 0 THEN $m * ln($m / CAST(est.v AS DOUBLE)) END AS h,
-                 est.v AS v
+                 est.v AS v, est.e AS e
           FROM ${n}_est est CROSS JOIN ${n}_eb eb),
         ${n}_out AS (
-          SELECT CAST(FLOOR(CASE WHEN v > 0 AND h <= $threshold THEN h ELSE ebc END + 0.5) AS BIGINT) AS nd
+          SELECT CAST(FLOOR(CASE WHEN v > 0 AND (h <= $threshold OR e <= ${2.5 * m}) THEN h ELSE ebc END + 0.5) AS BIGINT) AS nd
           FROM ${n}_fin)"""
     // one column's register pipeline: distinct hash-input mapping + hashLong + estimator
     def hllCol(n: String, uvExpr: String, where: String): String = {

@@ -608,7 +608,7 @@ object GraphOps {
     // ~+0.8 s on this key (2.61× vs ratified with tracking vs the
     // r18 2.01× without). Callers with CONVERGING graphs — where LP
     // settles and late rounds shrink — opt in with deltaDiv ≥ 1
-    // (ledger: BASELINE.json adjudication_r19).
+    // (ledger: records/history/BASELINE.json, block adjudication_r19).
     // Bookkeeping rides the round checkpoint itself: each round
     // materializes (node, label, changed) in ONE checkpoint — the
     // changed flag is a zero-exchange prev-label join folded into the

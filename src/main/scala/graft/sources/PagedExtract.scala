@@ -3,7 +3,9 @@ package graft.sources
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
+import scala.annotation.tailrec
 import scala.jdk.CollectionConverters._
+import scala.util.{Failure, Success, Try}
 
 /** Paginated extract stage — the engine's analogue of the reference's
   * paged, rate-limited API pull (/root/reference/02_etl.py:22-27
@@ -68,9 +70,16 @@ object PagedExtract {
       if (Files.exists(pageFile(dir, page))) {
         page += 1 // landed by an earlier run — never re-fetch
       } else {
-        fetchWithRetry(fetchPage, page, maxRetries, backoffMs, sleep) match {
-          case None => done = true
-          case Some(records) =>
+        retrying(maxRetries, backoffMs, sleep)(fetchPage(page)) match {
+          case Left(e: HttpTransport.PermanentFetchError) =>
+            throw new RuntimeException(
+              s"page $page failed permanently (no retry: upstream answered) — " +
+              "landed prefix is intact", e)
+          case Left(e) =>
+            throw new RuntimeException(
+              s"page $page failed after $maxRetries retries (landed prefix is intact)", e)
+          case Right(None) => done = true
+          case Right(Some(records)) =>
             val tmp = dir.resolve(f".tmp_page_$page%05d.jsonl")
             Files.write(tmp, records.asJava)
             Files.move(tmp, pageFile(dir, page),
@@ -83,35 +92,35 @@ object PagedExtract {
     landed
   }
 
-  private def fetchWithRetry(fetchPage: Int => Option[Seq[String]], page: Int,
-                             maxRetries: Int, backoffMs: Long,
-                             sleep: Long => Unit): Option[Seq[String]] = {
-    var attempt = 0
-    while (true) {
-      try return fetchPage(page)
-      catch {
-        // same fail-fast classification as the distributed commit
-        // loop: a permanent upstream answer aborts without retries
-        // (the landed prefix is intact either way)
-        case e: HttpTransport.PermanentFetchError =>
-          throw new RuntimeException(
-            s"page $page failed permanently (no retry: upstream answered) — " +
-            "landed prefix is intact", e)
-        case e: Exception =>
-          attempt += 1
-          if (attempt > maxRetries)
-            throw new RuntimeException(
-              s"page $page failed after $maxRetries retries (landed prefix is intact)", e)
-          // a server-named Retry-After (already capped by the
-          // transport) floors the exponential backoff for THIS wait
-          val retryAfter = e match {
-            case t: HttpTransport.TransientFetchError => t.retryAfterMs.getOrElse(0L)
-            case _ => 0L
-          }
-          sleep(math.max(backoffMs << (attempt - 1), retryAfter)) // 1x, 2x, 4x, ...
-      }
+  /** Run `attempt` until it succeeds: the one retry step of [[extract]]
+    * and [[commitLoop]], so the two cannot drift. Left is the failure
+    * that ended the retries.
+    *  - A transport-classified PERMANENT answer (HTTP 4xx, see
+    *    HttpTransport) fails fast: retrying re-asks a question the
+    *    upstream already answered.
+    *  - A NonFatal error is retried up to `maxRetries` times, after
+    *    `sleep(backoffMs << n)` (1x, 2x, 4x, ...), floored by the
+    *    Retry-After that failure carried (transport-capped): the server
+    *    names the wait once, we take it once.
+    *  - Anything else propagates: an interrupted or cancelled fetch must
+    *    STOP, not count as one more transient upstream error.
+    */
+  private def retrying[T](maxRetries: Int, backoffMs: Long, sleep: Long => Unit)(
+      attempt: => T): Either[Throwable, T] = {
+    @tailrec
+    def go(failures: Int): Either[Throwable, T] = Try(attempt) match {
+      case Success(v) => Right(v)
+      case Failure(e: HttpTransport.PermanentFetchError) => Left(e)
+      case Failure(e) if failures >= maxRetries => Left(e)
+      case Failure(e) =>
+        val retryAfter = e match {
+          case t: HttpTransport.TransientFetchError => t.retryAfterMs.getOrElse(0L)
+          case _ => 0L
+        }
+        sleep(math.max(backoffMs << failures, retryAfter))
+        go(failures + 1)
     }
-    None // unreachable
+    go(0)
   }
 
   /** Distributed read of the landed pages — explicit schema, per the
@@ -247,53 +256,23 @@ object PagedExtract {
     fs.mkdirs(new HPath(dir, "_tmp"))
     var lastFetch = 0L
     units.foreach { unit =>
-      var attempt = 0
-      var done = false
-      var lastErr: Throwable = null
-      // a Retry-After the LAST failure carried (transport-capped)
-      // floors the next attempt's exponential backoff, then resets —
-      // the server names the wait once, we take it once
-      var retryAfterMs = 0L
-      while (!done && attempt <= maxRetries) {
-        if (attempt > 0) Thread.sleep(math.max(backoffMs << (attempt - 1), retryAfterMs))
-        retryAfterMs = 0L
+      retrying(maxRetries, backoffMs, Thread.sleep) {
         if (minFetchIntervalMs > 0) {
           val wait = lastFetch + minFetchIntervalMs - System.currentTimeMillis()
           if (wait > 0) Thread.sleep(wait)
         }
-        try {
-          lastFetch = System.currentTimeMillis()
-          val records = fetch(unit)
-          val tmp = new HPath(dir, s"_tmp/${java.util.UUID.randomUUID()}")
-          val out = fs.create(tmp, true)
-          try records.foreach { r => out.write(r.getBytes("UTF-8")); out.write('\n') }
-          finally out.close()
-          // The commit point: first rename wins; a losing duplicate
-          // (or an exception-path orphan) cleans up its temp.
-          if (!fs.rename(tmp, new HPath(dir, fileName(unit))))
-            fs.delete(tmp, false)
-          done = true
-        } catch {
-          // A transport-classified PERMANENT answer (HTTP 4xx — see
-          // HttpTransport) fails the unit fast: retrying re-asks a
-          // question the upstream already answered, burning backoff
-          // budget against an endpoint that said no.
-          case e: HttpTransport.PermanentFetchError =>
-            lastErr = e; attempt = maxRetries + 1
-          // NonFatal excludes InterruptedException: a killed or
-          // cancelled task must STOP fetching, not treat the
-          // interrupt as one more transient upstream error.
-          case scala.util.control.NonFatal(e) =>
-            lastErr = e; attempt += 1
-            e match {
-              case t: HttpTransport.TransientFetchError =>
-                retryAfterMs = t.retryAfterMs.getOrElse(0L)
-              case _ => ()
-            }
-        }
-      }
-      if (!done)
-        failedAcc.add((unitId(unit), s"${lastErr.getClass.getSimpleName}: ${lastErr.getMessage}"))
+        lastFetch = System.currentTimeMillis()
+        val records = fetch(unit)
+        val tmp = new HPath(dir, s"_tmp/${java.util.UUID.randomUUID()}")
+        val out = fs.create(tmp, true)
+        try records.foreach { r => out.write(r.getBytes("UTF-8")); out.write('\n') }
+        finally out.close()
+        // The commit point: first rename wins; a losing duplicate
+        // (or an exception-path orphan) cleans up its temp.
+        if (!fs.rename(tmp, new HPath(dir, fileName(unit))))
+          fs.delete(tmp, false)
+      }.left.foreach(e =>
+        failedAcc.add((unitId(unit), s"${e.getClass.getSimpleName}: ${e.getMessage}")))
     }
   }
 

@@ -533,4 +533,17 @@ class PagedExtractSpec extends AnyFunSuite with SparkFixture {
     // the landed prefix survives the abort
     assert(PagedExtract.landedPages(spark, dir) == Set(1, 2))
   }
+
+  test("serial extract: an interrupt stops the run — rethrown, zero backoff sleeps") {
+    val sleeps = scala.collection.mutable.ArrayBuffer.empty[Long]
+    val dir = newDir()
+    intercept[InterruptedException] {
+      PagedExtract.extract(
+        page => if (page <= 2) Some(Seq(s"""{"p":$page}"""))
+                else throw new InterruptedException("cancelled"),
+        dir, maxRetries = 5, sleep = sleeps += _)
+    }
+    assert(sleeps.isEmpty)
+    assert(PagedExtract.landedPages(spark, dir) == Set(1, 2))
+  }
 }

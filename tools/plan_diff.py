@@ -9,10 +9,13 @@ Each side is the `<outDir>/<key>_<tag>.txt` files one Plans run wrote
 changes from run to run or with code layout but not with the plan itself:
 expression ids (`#123L`), exchange `plan_id`s, RDD ids, fresh lambda
 variable names (`x_39`), JVM lambda class names, identity hashes
-(`[J@14f8ca45`), `File.scala:NN` call-site positions and the random
-suffix of per-call temp dirs (`/tmp/graft_extract<digits>`). Substrate leaf
-names stay: they are content-addressed, so a changed leaf is a real
-difference.
+(`[J@14f8ca45`), `File.scala:NN` call-site positions, the random
+suffix of per-call temp dirs (`/tmp/graft_extract<digits>`) and a
+stage's `Statistics(sizeInBytes=32.2 MiB, ...)`: a broadcast stage's
+size includes a memory page whose size follows the driver heap, so the
+same plan reads 16.2 MiB under a 4g heap and 32.2 MiB under 8g. The
+`rowCount` stays. Substrate leaf names stay: they are content-addressed,
+so a changed leaf is a real difference.
 
 A distinct-aggregate Expand (one with a `gid` column) is also put in a
 canonical order. Spark orders its distinct groups by a hash of their
@@ -36,6 +39,7 @@ RULES = [
     (re.compile(r"@[0-9a-f]{1,8}\b"), "@H"),                 # identity hashes
     (re.compile(r"(\w+\.scala):\d+"), r"\1:N"),              # call-site positions
     (re.compile(r"(/graft_[A-Za-z_]+)\d+"), r"\1N"),          # per-call temp dirs
+    (re.compile(r"sizeInBytes=[\d.E+]+ [KMGTPE]?i?B"), "sizeInBytes=N"),  # heap-sized stats
 ]
 
 
