@@ -3630,7 +3630,8 @@ object SparkEntry {
     * level — the same shape as the PageRank unroll. Flips can drive
     * intermediate x/y negative; `&` on two's-complement BIGINT agrees
     * between DuckDB and the JVM, so the per-level bit tests match the
-    * engine exactly.
+    * engine exactly. Each level's weight s² is cast to BIGINT: DuckDB
+    * types the literal 2^30 as INTEGER, and 2^30 · 2 overflows it.
     */
   private lazy val hilbertOracle: String = {
     val bits = 21
@@ -3639,7 +3640,7 @@ object SparkEntry {
       val s = 1L << lvl
       s"""l${j + 1} AS (
          SELECT event_id, user_id,
-                d + ${s * s} * (CASE WHEN (x & $s) <> 0
+                d + CAST(${s * s} AS BIGINT) * (CASE WHEN (x & $s) <> 0
                                      THEN 3 - (CASE WHEN (y & $s) <> 0 THEN 1 ELSE 0 END)
                                      ELSE (CASE WHEN (y & $s) <> 0 THEN 1 ELSE 0 END) END) AS d,
                 CASE WHEN (y & $s) = 0
@@ -4856,8 +4857,8 @@ object SparkEntry {
     * whole sub-stripe tail as conditional rounds, with an error()
     * witness at 32 where the stripe path begins), the seed-42
     * universal-hash mixers embedded as the (a·h + b) permutation
-    * table (the same java.util.Random(42) draw the engine publishes
-    * in [[graft.functions.MinHashBands]]), signed per-perm mins, and
+    * table ([[graft.functions.MinHashSig.mixers]], the draw the
+    * engine uses), signed per-perm mins, and
     * the per-band XXH64.hashLong fold ([[SqlU64.xxh64Long]] chained
     * rowsPerBand deep). Buckets, the 2..1024 cap, sample-touching
     * pairs, hits, and the micro-unit recall/efficiency then follow
@@ -4867,9 +4868,7 @@ object SparkEntry {
     import SqlU64._
     val nPerms = 258; val nBands = 86
     val sampleMod = 20; val maxBucket = 1024
-    val rnd = new java.util.Random(42L)
-    val as = Array.fill(nPerms)(rnd.nextLong() | 1L)
-    val bs = Array.fill(nPerms)(rnd.nextLong())
+    val (as, bs) = graft.functions.MinHashSig.mixers(nPerms, 42L)
     def u(x: Long): BigInt = { val b = BigInt(x); if (b < 0) b + M else b }
     val permRows = (0 until nPerms).map(p =>
       s"($p, CAST(${u(as(p))} AS HUGEINT), CAST(${u(bs(p))} AS HUGEINT))")

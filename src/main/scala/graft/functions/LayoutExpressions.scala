@@ -6,14 +6,29 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.types._
 
 object InterleaveBits {
-  /** Raised (interpreted and codegen paths) when an operand falls
-    * outside [0, 2^bits): silently masking high bits would map distant
-    * keys onto nearby z-values — locality corruption with no signal.
+  /** Raised when an operand falls outside [0, 2^bits): silently
+    * masking high bits would map distant keys onto nearby z-values —
+    * locality corruption with no signal.
     */
   def rangeError(v: Long, bits: Int): RuntimeException =
     new IllegalArgumentException(
       s"graft_zorder2: value $v outside [0, 2^$bits); widen `bits` " +
         "(up to 31 per dimension) instead of truncating")
+
+  /** Bit i of `x` at z-bit 2i, bit i of `y` at 2i+1, i < `bits`. */
+  def zorder(x: Long, y: Long, bits: Int): Long = {
+    val lim = 1L << bits
+    if (x < 0 || x >= lim) throw rangeError(x, bits)
+    if (y < 0 || y >= lim) throw rangeError(y, bits)
+    var z = 0L
+    var i = 0
+    while (i < bits) {
+      z |= ((x >> i) & 1L) << (2 * i)
+      z |= ((y >> i) & 1L) << (2 * i + 1)
+      i += 1
+    }
+    z
+  }
 }
 
 /** z-order (Morton) key of two long columns: bit i of `left` lands at
@@ -39,42 +54,12 @@ case class InterleaveBits(left: Expression, right: Expression, bits: Int)
   override def dataType: DataType = LongType
   override def prettyName: String = "graft_zorder2"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[Long]
-    val y = b.asInstanceOf[Long]
-    val lim = 1L << bits
-    if (x < 0 || x >= lim) throw InterleaveBits.rangeError(x, bits)
-    if (y < 0 || y >= lim) throw InterleaveBits.rangeError(y, bits)
-    var z = 0L
-    var i = 0
-    while (i < bits) {
-      z |= ((x >> i) & 1L) << (2 * i)
-      z |= ((y >> i) & 1L) << (2 * i + 1)
-      i += 1
-    }
-    z
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    InterleaveBits.zorder(a.asInstanceOf[Long], b.asInstanceOf[Long], bits)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val z = ctx.freshName("z"); val i = ctx.freshName("i")
-      val lim = ctx.freshName("lim")
-      s"""
-        long $lim = 1L << $bits;
-        if ($a < 0 || $a >= $lim) {
-          throw graft.functions.InterleaveBits.rangeError($a, $bits);
-        }
-        if ($b < 0 || $b >= $lim) {
-          throw graft.functions.InterleaveBits.rangeError($b, $bits);
-        }
-        long $z = 0L;
-        for (int $i = 0; $i < $bits; $i++) {
-          $z |= (($a >> $i) & 1L) << (2 * $i);
-          $z |= (($b >> $i) & 1L) << (2 * $i + 1);
-        }
-        ${ev.value} = $z;
-      """
-    })
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.value} = graft.functions.InterleaveBits.zorder($a, $b, $bits);")
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): InterleaveBits =
     copy(left = l, right = r)
@@ -89,6 +74,28 @@ object HilbertIndex {
     new IllegalArgumentException(
       s"graft_hilbert2: value $v outside [0, 2^$bits); widen `bits` " +
         "(up to 31 per dimension) instead of truncating")
+
+  /** xy2d: position of cell (x, y) on the order-`bits` Hilbert curve. */
+  def hilbert(x0: Long, y0: Long, bits: Int): Long = {
+    var x = x0
+    var y = y0
+    val lim = 1L << bits
+    if (x < 0 || x >= lim) throw rangeError(x, bits)
+    if (y < 0 || y >= lim) throw rangeError(y, bits)
+    var d = 0L
+    var s = lim >> 1
+    while (s > 0) {
+      val rx = if ((x & s) != 0) 1L else 0L
+      val ry = if ((y & s) != 0) 1L else 0L
+      d += s * s * ((3 * rx) ^ ry)
+      if (ry == 0) { // reflect (rx=1) then transpose the sub-square
+        if (rx == 1) { x = s - 1 - x; y = s - 1 - y }
+        val t = x; x = y; y = t
+      }
+      s >>= 1
+    }
+    d
+  }
 }
 
 /** Hilbert-curve index of two long columns (the standard xy2d
@@ -116,55 +123,12 @@ case class HilbertIndex(left: Expression, right: Expression, bits: Int)
   override def dataType: DataType = LongType
   override def prettyName: String = "graft_hilbert2"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    var x = a.asInstanceOf[Long]
-    var y = b.asInstanceOf[Long]
-    val lim = 1L << bits
-    if (x < 0 || x >= lim) throw HilbertIndex.rangeError(x, bits)
-    if (y < 0 || y >= lim) throw HilbertIndex.rangeError(y, bits)
-    var d = 0L
-    var s = lim >> 1
-    while (s > 0) {
-      val rx = if ((x & s) != 0) 1L else 0L
-      val ry = if ((y & s) != 0) 1L else 0L
-      d += s * s * ((3 * rx) ^ ry)
-      if (ry == 0) { // reflect (rx=1) then transpose the sub-square
-        if (rx == 1) { x = s - 1 - x; y = s - 1 - y }
-        val t = x; x = y; y = t
-      }
-      s >>= 1
-    }
-    d
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    HilbertIndex.hilbert(a.asInstanceOf[Long], b.asInstanceOf[Long], bits)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val x = ctx.freshName("x"); val y = ctx.freshName("y")
-      val d = ctx.freshName("d"); val s = ctx.freshName("s")
-      val rx = ctx.freshName("rx"); val ry = ctx.freshName("ry")
-      val t = ctx.freshName("t"); val lim = ctx.freshName("lim")
-      s"""
-        long $lim = 1L << $bits;
-        long $x = $a; long $y = $b;
-        if ($x < 0 || $x >= $lim) {
-          throw graft.functions.HilbertIndex.rangeError($x, $bits);
-        }
-        if ($y < 0 || $y >= $lim) {
-          throw graft.functions.HilbertIndex.rangeError($y, $bits);
-        }
-        long $d = 0L;
-        for (long $s = $lim >> 1; $s > 0; $s >>= 1) {
-          long $rx = (($x & $s) != 0) ? 1L : 0L;
-          long $ry = (($y & $s) != 0) ? 1L : 0L;
-          $d += $s * $s * ((3L * $rx) ^ $ry);
-          if ($ry == 0) {
-            if ($rx == 1) { $x = $s - 1 - $x; $y = $s - 1 - $y; }
-            long $t = $x; $x = $y; $y = $t;
-          }
-        }
-        ${ev.value} = $d;
-      """
-    })
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.value} = graft.functions.HilbertIndex.hilbert($a, $b, $bits);")
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): HilbertIndex =
     copy(left = l, right = r)

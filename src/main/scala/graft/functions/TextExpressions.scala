@@ -7,14 +7,14 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expression for the MinHash hot path. The HOF
-  * formulation ([[graft.operators.Dedup.minhashSignature]]) evaluates
-  * `nPerms` interpreted array traversals per row, re-hashing every
-  * shingle once per permutation; this computes ONE xxhash64 per
-  * shingle and derives all permutations with 64-bit universal-hash
-  * mixing (a_p·h + b_p, a_p odd) — the standard single-hash MinHash
-  * construction (Broder 1997) — inside whole-stage codegen. Same
-  * collision statistics, ~nPerms× fewer hash evaluations.
+/** Native Catalyst expression for the MinHash hot path
+  * ([[graft.operators.Dedup.minhashSignature]] wraps it). It computes
+  * ONE xxhash64 per shingle and derives all `nPerms` permutations with
+  * 64-bit universal-hash mixing (a_p·h + b_p, a_p odd) — the standard
+  * single-hash MinHash construction (Broder 1997) — instead of
+  * re-hashing every shingle once per permutation. The companion holds
+  * the mixer derivation, the per-permutation mins and the band fold
+  * that [[MinHashBands]] and [[OphMinHashBands]] share.
   */
 case class MinHashSig(child: Expression, nPerms: Int, seed: Long = 42L)
     extends UnaryExpression {
@@ -29,67 +29,94 @@ case class MinHashSig(child: Expression, nPerms: Int, seed: Long = 42L)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "graft_minhash"
 
+  @transient private lazy val mixers: (Array[Long], Array[Long]) =
+    MinHashSig.mixers(nPerms, seed)
+
+  override def nullSafeEval(input: Any): Any =
+    MinHashSig.minhash(input.asInstanceOf[ArrayData], mixers._1, mixers._2, seed)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val aRef = ctx.addReferenceObj("minhashA", mixers._1, "long[]")
+    val bRef = ctx.addReferenceObj("minhashB", mixers._2, "long[]")
+    nullSafeCodeGen(ctx, ev, arr =>
+      s"${ev.value} = graft.functions.MinHashSig.minhash($arr, $aRef, $bRef, ${seed}L);")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): MinHashSig =
+    copy(child = newChild)
+}
+
+object MinHashSig {
   /** Odd multipliers + offsets for the per-permutation mixers,
     * deterministic from the seed (same on every executor, no state).
     */
-  @transient private lazy val mixers: (Array[Long], Array[Long]) = {
+  def mixers(nPerms: Int, seed: Long): (Array[Long], Array[Long]) = {
     val rnd = new java.util.Random(seed)
     val a = Array.fill(nPerms)(rnd.nextLong() | 1L)
     val b = Array.fill(nPerms)(rnd.nextLong())
     (a, b)
   }
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val (as, bs) = mixers
-    val mins = Array.fill(nPerms)(Long.MaxValue)
+  /** The seeded xxhash64 of element i: the long itself when the
+    * shingles come pre-hashed, else the hash of the string's bytes.
+    */
+  private[functions] def elementHash(arr: ArrayData, i: Int, prehashed: Boolean,
+                                     seed: Long): Long =
+    if (prehashed) arr.getLong(i)
+    else {
+      val s = arr.getUTF8String(i)
+      XXH64.hashUnsafeBytes(s.getBaseObject, s.getBaseOffset, s.numBytes, seed)
+    }
+
+  /** Per-permutation min of a·h + b over the non-null elements
+    * (Long.MaxValue where there are none).
+    */
+  private def mins(arr: ArrayData, a: Array[Long], b: Array[Long], seed: Long,
+                   prehashed: Boolean): Array[Long] = {
+    val mins = Array.fill(a.length)(Long.MaxValue)
     var i = 0
     val n = arr.numElements()
     while (i < n) {
       if (!arr.isNullAt(i)) { // null shingles contribute nothing to the signature
-        val s = arr.getUTF8String(i)
-        val h = XXH64.hashUnsafeBytes(s.getBaseObject, s.getBaseOffset, s.numBytes, seed)
+        val h = elementHash(arr, i, prehashed, seed)
         var p = 0
-        while (p < nPerms) {
-          val v = as(p) * h + bs(p)
+        while (p < a.length) {
+          val v = a(p) * h + b(p)
           if (v < mins(p)) mins(p) = v
           p += 1
         }
       }
       i += 1
     }
-    new GenericArrayData(mins)
+    mins
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val aRef = ctx.addReferenceObj("minhashA", mixers._1, "long[]")
-    val bRef = ctx.addReferenceObj("minhashB", mixers._2, "long[]")
-    nullSafeCodeGen(ctx, ev, arr => {
-      val mins = ctx.freshName("mins"); val i = ctx.freshName("i")
-      val n = ctx.freshName("n"); val s = ctx.freshName("s")
-      val h = ctx.freshName("h"); val p = ctx.freshName("p")
-      val v = ctx.freshName("v")
-      s"""
-        long[] $mins = new long[$nPerms];
-        java.util.Arrays.fill($mins, Long.MAX_VALUE);
-        int $n = $arr.numElements();
-        for (int $i = 0; $i < $n; $i++) {
-          if ($arr.isNullAt($i)) continue;
-          ${classOf[UTF8String].getName} $s = $arr.getUTF8String($i);
-          long $h = org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
-            $s.getBaseObject(), $s.getBaseOffset(), $s.numBytes(), ${seed}L);
-          for (int $p = 0; $p < $nPerms; $p++) {
-            long $v = $aRef[$p] * $h + $bRef[$p];
-            if ($v < $mins[$p]) $mins[$p] = $v;
-          }
-        }
-        ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($mins);
-      """
-    })
+  /** `nBands` hashes of consecutive runs of `values`: a seeded
+    * xxhash64 chain over each run's longs (the construction of Spark's
+    * multi-column `xxhash64`).
+    */
+  private[functions] def bandFold(values: Array[Long], nBands: Int, seed: Long): ArrayData = {
+    val rowsPerBand = values.length / nBands
+    val bands = new Array[Long](nBands)
+    var b = 0
+    while (b < nBands) {
+      var h = seed
+      var r = 0
+      while (r < rowsPerBand) { h = XXH64.hashLong(values(b * rowsPerBand + r), h); r += 1 }
+      bands(b) = h
+      b += 1
+    }
+    new GenericArrayData(bands)
   }
 
-  override protected def withNewChildInternal(newChild: Expression): MinHashSig =
-    copy(child = newChild)
+  /** The MinHash signature of a string array. */
+  def minhash(arr: ArrayData, a: Array[Long], b: Array[Long], seed: Long): ArrayData =
+    new GenericArrayData(mins(arr, a, b, seed, prehashed = false))
+
+  /** The MinHash signature folded into `nBands` band hashes. */
+  def minhashBands(arr: ArrayData, a: Array[Long], b: Array[Long], nBands: Int,
+                   seed: Long, prehashed: Boolean): ArrayData =
+    bandFold(mins(arr, a, b, seed, prehashed), nBands, seed)
 }
 
 /** MinHash + LSH banding fused into ONE pass: the `nPerms` signature
@@ -114,7 +141,6 @@ case class MinHashBands(child: Expression, nPerms: Int, nBands: Int,
   require(nPerms >= 1 && nPerms <= 512, s"nPerms must be in [1,512], got $nPerms")
   require(nBands >= 1 && nPerms % nBands == 0,
     s"nPerms ($nPerms) must be divisible by nBands ($nBands)")
-  private val rowsPerBand = nPerms / nBands
 
   /** Accepts raw shingle strings OR pre-hashed shingles (array<long>,
     * e.g. `transform(sh, x -> xxhash64(x))`). The pre-hashed form lets
@@ -134,88 +160,18 @@ case class MinHashBands(child: Expression, nPerms: Int, nBands: Int,
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "graft_minhash_bands"
 
-  @transient private lazy val mixers: (Array[Long], Array[Long]) = {
-    val rnd = new java.util.Random(seed)
-    val a = Array.fill(nPerms)(rnd.nextLong() | 1L)
-    val b = Array.fill(nPerms)(rnd.nextLong())
-    (a, b)
-  }
+  @transient private lazy val mixers: (Array[Long], Array[Long]) =
+    MinHashSig.mixers(nPerms, seed)
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val (as, bs) = mixers
-    val mins = Array.fill(nPerms)(Long.MaxValue)
-    val isLong = prehashed
-    var i = 0
-    val n = arr.numElements()
-    while (i < n) {
-      if (!arr.isNullAt(i)) {
-        val h =
-          if (isLong) arr.getLong(i)
-          else {
-            val s = arr.getUTF8String(i)
-            XXH64.hashUnsafeBytes(s.getBaseObject, s.getBaseOffset, s.numBytes, seed)
-          }
-        var p = 0
-        while (p < nPerms) {
-          val v = as(p) * h + bs(p)
-          if (v < mins(p)) mins(p) = v
-          p += 1
-        }
-      }
-      i += 1
-    }
-    val bands = new Array[Long](nBands)
-    var b = 0
-    while (b < nBands) {
-      var h = seed
-      var r = 0
-      while (r < rowsPerBand) { h = XXH64.hashLong(mins(b * rowsPerBand + r), h); r += 1 }
-      bands(b) = h
-      b += 1
-    }
-    new GenericArrayData(bands)
-  }
+  override def nullSafeEval(input: Any): Any =
+    MinHashSig.minhashBands(input.asInstanceOf[ArrayData], mixers._1, mixers._2, nBands,
+      seed, prehashed)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val aRef = ctx.addReferenceObj("minhashA", mixers._1, "long[]")
     val bRef = ctx.addReferenceObj("minhashB", mixers._2, "long[]")
-    nullSafeCodeGen(ctx, ev, arr => {
-      val mins = ctx.freshName("mins"); val i = ctx.freshName("i")
-      val n = ctx.freshName("n"); val s = ctx.freshName("s")
-      val h = ctx.freshName("h"); val p = ctx.freshName("p")
-      val v = ctx.freshName("v"); val bands = ctx.freshName("bands")
-      val b = ctx.freshName("b"); val r = ctx.freshName("r")
-      val bh = ctx.freshName("bh")
-      val hashElem =
-        if (prehashed) s"long $h = $arr.getLong($i);"
-        else s"""${classOf[UTF8String].getName} $s = $arr.getUTF8String($i);
-          long $h = org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
-            $s.getBaseObject(), $s.getBaseOffset(), $s.numBytes(), ${seed}L);"""
-      s"""
-        long[] $mins = new long[$nPerms];
-        java.util.Arrays.fill($mins, Long.MAX_VALUE);
-        int $n = $arr.numElements();
-        for (int $i = 0; $i < $n; $i++) {
-          if ($arr.isNullAt($i)) continue;
-          $hashElem
-          for (int $p = 0; $p < $nPerms; $p++) {
-            long $v = $aRef[$p] * $h + $bRef[$p];
-            if ($v < $mins[$p]) $mins[$p] = $v;
-          }
-        }
-        long[] $bands = new long[$nBands];
-        for (int $b = 0; $b < $nBands; $b++) {
-          long $bh = ${seed}L;
-          for (int $r = 0; $r < $rowsPerBand; $r++) {
-            $bh = org.apache.spark.sql.catalyst.expressions.XXH64.hashLong(
-              $mins[$b * $rowsPerBand + $r], $bh);
-          }
-          $bands[$b] = $bh;
-        }
-        ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($bands);
-      """
-    })
+    nullSafeCodeGen(ctx, ev, arr => s"${ev.value} = graft.functions.MinHashSig.minhashBands(" +
+      s"$arr, $aRef, $bRef, $nBands, ${seed}L, $prehashed);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): MinHashBands =
@@ -259,9 +215,6 @@ case class OphMinHashBands(child: Expression, nPerms: Int, nBands: Int,
   require(nPerms >= 1 && nPerms <= 4096, s"nPerms must be in [1,4096], got $nPerms")
   require(nBands >= 1 && nPerms % nBands == 0,
     s"nPerms ($nPerms) must be divisible by nBands ($nBands)")
-  private val rowsPerBand = nPerms / nBands
-  // odd golden-ratio constant: distance salt for densified bins
-  private val DistSalt = 0x9E3779B97F4A7C15L
 
   override def checkInputDataTypes(): TypeCheckResult =
     child.dataType match {
@@ -275,21 +228,32 @@ case class OphMinHashBands(child: Expression, nPerms: Int, nBands: Int,
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "graft_minhash_oph"
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  override def nullSafeEval(input: Any): Any =
+    OphMinHashBands.ophBands(input.asInstanceOf[ArrayData], nPerms, nBands, seed, prehashed)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, arr => s"${ev.value} = graft.functions.OphMinHashBands.ophBands(" +
+      s"$arr, $nPerms, $nBands, ${seed}L, $prehashed);")
+
+  override protected def withNewChildInternal(newChild: Expression): OphMinHashBands =
+    copy(child = newChild)
+}
+
+object OphMinHashBands {
+  // odd golden-ratio constant: distance salt for densified bins
+  private val DistSalt = 0x9E3779B97F4A7C15L
+
+  /** One-permutation bins of the non-null elements, densified, then
+    * folded into `nBands` band hashes.
+    */
+  def ophBands(arr: ArrayData, nPerms: Int, nBands: Int, seed: Long,
+               prehashed: Boolean): ArrayData = {
     val bins = Array.fill(nPerms)(Long.MaxValue)
-    val isLong = prehashed
     var i = 0
     val n = arr.numElements()
     while (i < n) {
       if (!arr.isNullAt(i)) {
-        val h0 =
-          if (isLong) arr.getLong(i)
-          else {
-            val s = arr.getUTF8String(i)
-            XXH64.hashUnsafeBytes(s.getBaseObject, s.getBaseOffset, s.numBytes, seed)
-          }
-        val u = XXH64.hashLong(h0, seed)
+        val u = XXH64.hashLong(MinHashSig.elementHash(arr, i, prehashed, seed), seed)
         val bin = java.lang.Math.floorMod(u, nPerms.toLong).toInt
         if (u < bins(bin)) bins(bin) = u
       }
@@ -310,69 +274,8 @@ case class OphMinHashBands(child: Expression, nPerms: Int, nBands: Int,
         t += 1
       }
     }
-    val bands = new Array[Long](nBands)
-    var b = 0
-    while (b < nBands) {
-      var h = seed
-      var r = 0
-      while (r < rowsPerBand) { h = XXH64.hashLong(bins(b * rowsPerBand + r), h); r += 1 }
-      bands(b) = h
-      b += 1
-    }
-    new GenericArrayData(bands)
+    MinHashSig.bandFold(bins, nBands, seed)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, arr => {
-      val bins = ctx.freshName("bins"); val i = ctx.freshName("i")
-      val n = ctx.freshName("n"); val s = ctx.freshName("s")
-      val h = ctx.freshName("h"); val u = ctx.freshName("u")
-      val bin = ctx.freshName("bin"); val start = ctx.freshName("start")
-      val cur = ctx.freshName("cur"); val dist = ctx.freshName("dist")
-      val t = ctx.freshName("t"); val j = ctx.freshName("j")
-      val bands = ctx.freshName("bands"); val b = ctx.freshName("b")
-      val r = ctx.freshName("r"); val bh = ctx.freshName("bh")
-      val hashElem =
-        if (prehashed) s"long $h = $arr.getLong($i);"
-        else s"""${classOf[UTF8String].getName} $s = $arr.getUTF8String($i);
-          long $h = org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
-            $s.getBaseObject(), $s.getBaseOffset(), $s.numBytes(), ${seed}L);"""
-      s"""
-        long[] $bins = new long[$nPerms];
-        java.util.Arrays.fill($bins, Long.MAX_VALUE);
-        int $n = $arr.numElements();
-        for (int $i = 0; $i < $n; $i++) {
-          if ($arr.isNullAt($i)) continue;
-          $hashElem
-          long $u = org.apache.spark.sql.catalyst.expressions.XXH64.hashLong($h, ${seed}L);
-          int $bin = (int) java.lang.Math.floorMod($u, ${nPerms}L);
-          if ($u < $bins[$bin]) $bins[$bin] = $u;
-        }
-        int $start = 0;
-        while ($start < $nPerms && $bins[$start] == Long.MAX_VALUE) $start++;
-        if ($start < $nPerms) {
-          long $cur = 0L; int $dist = 0;
-          for (int $t = 0; $t < $nPerms; $t++) {
-            int $j = ($start + $t) % $nPerms;
-            if ($bins[$j] != Long.MAX_VALUE) { $cur = $bins[$j]; $dist = 0; }
-            else { $dist++; $bins[$j] = $cur + ${DistSalt}L * $dist; }
-          }
-        }
-        long[] $bands = new long[$nBands];
-        for (int $b = 0; $b < $nBands; $b++) {
-          long $bh = ${seed}L;
-          for (int $r = 0; $r < $rowsPerBand; $r++) {
-            $bh = org.apache.spark.sql.catalyst.expressions.XXH64.hashLong(
-              $bins[$b * $rowsPerBand + $r], $bh);
-          }
-          $bands[$b] = $bh;
-        }
-        ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($bands);
-      """
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): OphMinHashBands =
-    copy(child = newChild)
 }
 
 /** 64-bit SimHash over an array<string> token column: one xxhash64 per
@@ -390,15 +293,25 @@ case class SimHash64(child: Expression, seed: Long = 42L) extends UnaryExpressio
   override def dataType: DataType = LongType
   override def prettyName: String = "graft_simhash"
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  override def nullSafeEval(input: Any): Any =
+    SimHash64.simhash(input.asInstanceOf[ArrayData], seed)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, arr => s"${ev.value} = graft.functions.SimHash64.simhash($arr, ${seed}L);")
+
+  override protected def withNewChildInternal(newChild: Expression): SimHash64 =
+    copy(child = newChild)
+}
+
+object SimHash64 {
+  /** Bit k set when more non-null tokens' hashes have bit k set than not. */
+  def simhash(arr: ArrayData, seed: Long): Long = {
     val acc = new Array[Int](64)
     var i = 0
     val n = arr.numElements()
     while (i < n) {
       if (!arr.isNullAt(i)) { // null tokens contribute nothing to the signature
-        val s = arr.getUTF8String(i)
-        val h = XXH64.hashUnsafeBytes(s.getBaseObject, s.getBaseOffset, s.numBytes, seed)
+        val h = MinHashSig.elementHash(arr, i, prehashed = false, seed)
         var k = 0
         while (k < 64) {
           if (((h >>> k) & 1L) == 1L) acc(k) += 1 else acc(k) -= 1
@@ -412,33 +325,6 @@ case class SimHash64(child: Expression, seed: Long = 42L) extends UnaryExpressio
     while (k < 64) { if (acc(k) > 0) sig |= (1L << k); k += 1 }
     sig
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, arr => {
-      val acc = ctx.freshName("acc"); val i = ctx.freshName("i")
-      val n = ctx.freshName("n"); val s = ctx.freshName("s")
-      val h = ctx.freshName("h"); val k = ctx.freshName("k")
-      val sig = ctx.freshName("sig")
-      s"""
-        int[] $acc = new int[64];
-        int $n = $arr.numElements();
-        for (int $i = 0; $i < $n; $i++) {
-          if ($arr.isNullAt($i)) continue;
-          ${classOf[UTF8String].getName} $s = $arr.getUTF8String($i);
-          long $h = org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
-            $s.getBaseObject(), $s.getBaseOffset(), $s.numBytes(), ${seed}L);
-          for (int $k = 0; $k < 64; $k++) {
-            if ((($h >>> $k) & 1L) == 1L) $acc[$k]++; else $acc[$k]--;
-          }
-        }
-        long $sig = 0L;
-        for (int $k = 0; $k < 64; $k++) { if ($acc[$k] > 0) $sig |= (1L << $k); }
-        ${ev.value} = $sig;
-      """
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): SimHash64 =
-    copy(child = newChild)
 }
 
 /** Fused winnowing (Schleimer, Wilkerson, Aiken, SIGMOD 2003) over a
@@ -783,28 +669,26 @@ case class RegexpCountLong(child: Expression, pattern: String)
   @transient private lazy val compiled: java.util.regex.Pattern =
     java.util.regex.Pattern.compile(pattern)
 
-  override def nullSafeEval(input: Any): Any = {
-    val m = compiled.matcher(input.asInstanceOf[UTF8String].toString)
-    var c = 0L
-    while (m.find()) c += 1L
-    c
-  }
+  override def nullSafeEval(input: Any): Any =
+    RegexpCountLong.countMatches(compiled, input.asInstanceOf[UTF8String])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val pRef = ctx.addReferenceObj("graftReCountPattern", compiled,
       classOf[java.util.regex.Pattern].getName)
-    nullSafeCodeGen(ctx, ev, s => {
-      val m = ctx.freshName("m")
-      val c = ctx.freshName("c")
-      s"""
-        java.util.regex.Matcher $m = $pRef.matcher($s.toString());
-        long $c = 0L;
-        while ($m.find()) $c++;
-        ${ev.value} = $c;
-      """
-    })
+    nullSafeCodeGen(ctx, ev, s =>
+      s"${ev.value} = graft.functions.RegexpCountLong.countMatches($pRef, $s);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): RegexpCountLong =
     copy(child = newChild)
+}
+
+object RegexpCountLong {
+  /** Number of non-overlapping leftmost matches of `p` in `s`. */
+  def countMatches(p: java.util.regex.Pattern, s: UTF8String): Long = {
+    val m = p.matcher(s.toString)
+    var c = 0L
+    while (m.find()) c += 1L
+    c
+  }
 }

@@ -3,22 +3,30 @@ package graft.functions
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
 /** Native Catalyst expressions for the vector hot path (SURVEY.md §3:
   * "custom Catalyst Expression ... codegen'd"). The higher-order-
   * function formulations in [[VectorFunctions]] are semantically
   * identical but evaluate one lambda call per element per row; these
-  * compile to a tight primitive loop inside whole-stage codegen — at
-  * 100 TB the cosine/signature scan is the dominant cost of the ANN
-  * and embedding-dedup operators, so this is where custom codegen
-  * genuinely beats composing built-ins.
+  * run one tight primitive loop per row inside whole-stage codegen —
+  * at 100 TB the cosine/signature scan is the dominant cost of the
+  * ANN and embedding-dedup operators.
   *
-  * Registered as SQL functions `graft_cosine` / `graft_srp_sig` via
-  * [[graft.plans.GraftExtensions]] (SparkSessionExtensions) and
-  * reachable from any session through
-  * [[graft.plans.GraftFunctions.ensureRegistered]].
+  * The package rule for every scalar expression in `graft.functions`:
+  * the algorithm lives ONCE, in a kernel method on the companion
+  * object that takes and returns primitive (or Catalyst-internal)
+  * values; `nullSafeEval` calls it, and `doGenCode` emits one static
+  * call to it (plan-time state such as planes or codebooks passed in
+  * through `ctx.addReferenceObj`). A kernel must not share its name
+  * with a member of the expression class: the clash suppresses the
+  * static forwarder the generated Java calls.
+  *
+  * All are registered as SQL functions through
+  * [[graft.plans.GraftFunctions.definitions]] — by
+  * [[graft.plans.GraftExtensions]] at session build or
+  * [[graft.plans.GraftFunctions.ensureRegistered]] on any session.
   */
 object VectorExpressions {
 
@@ -50,9 +58,21 @@ case class CosineSim(left: Expression, right: Expression)
   override def dataType: DataType = DoubleType
   override def prettyName: String = "graft_cosine"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any, b: Any): Any =
+    CosineSim.cosine(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = graft.functions.CosineSim.cosine($a, $b);")
+
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): CosineSim =
+    copy(left = l, right = r)
+}
+
+object CosineSim {
+  /** Cosine over the common prefix of `x` and `y`: one loop for dot
+    * and both norms, left-to-right double adds; 0.0 on a zero norm.
+    */
+  def cosine(x: ArrayData, y: ArrayData): Double = {
     val n = math.min(x.numElements(), y.numElements())
     var dot = 0.0; var nx = 0.0; var ny = 0.0
     var i = 0
@@ -65,39 +85,33 @@ case class CosineSim(left: Expression, right: Expression)
     val den = math.sqrt(nx) * math.sqrt(ny)
     if (den == 0.0) 0.0 else dot / den
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i"); val n = ctx.freshName("n")
-      val dot = ctx.freshName("dot"); val nx = ctx.freshName("nx")
-      val ny = ctx.freshName("ny"); val x = ctx.freshName("x")
-      val y = ctx.freshName("y"); val den = ctx.freshName("den")
-      s"""
-        int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-        double $dot = 0.0; double $nx = 0.0; double $ny = 0.0;
-        for (int $i = 0; $i < $n; $i++) {
-          double $x = (double) $a.getFloat($i);
-          double $y = (double) $b.getFloat($i);
-          $dot += $x * $y; $nx += $x * $x; $ny += $y * $y;
-        }
-        double $den = java.lang.Math.sqrt($nx) * java.lang.Math.sqrt($ny);
-        ${ev.value} = ($den == 0.0) ? 0.0 : $dot / $den;
-      """
-    })
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): CosineSim =
-    copy(left = l, right = r)
 }
 
 object SrpSignature {
-  /** Raised (from both interpreted and codegen paths) when a vector is
-    * wider than the plane matrix — silent truncation would degrade
-    * signature quality with no signal.
+  /** Raised when a vector is wider than the plane matrix — silent
+    * truncation would degrade signature quality with no signal.
     */
   def dimError(dim: Int, maxDim: Int): RuntimeException =
     new IllegalArgumentException(
       s"graft_srp_sig: embedding has $dim dims but the plane matrix covers " +
         s"$maxDim; pass a larger maxDim (4th argument) instead of truncating")
+
+  /** Bit b = sign of vec · planes(b), one bit per plane. */
+  def srpBits(vec: ArrayData, planes: Array[Array[Float]], maxDim: Int): Long = {
+    val dim = vec.numElements()
+    if (dim > maxDim) throw dimError(dim, maxDim)
+    var sig = 0L
+    var b = 0
+    while (b < planes.length) {
+      val p = planes(b)
+      var acc = 0.0
+      var j = 0
+      while (j < dim) { acc += vec.getFloat(j).toDouble * p(j); j += 1 }
+      if (acc >= 0.0) sig |= (1L << b)
+      b += 1
+    }
+    sig
+  }
 }
 
 /** `nBits`-bit signed-random-projection signature of an array<float>
@@ -124,46 +138,13 @@ case class SrpSignature(child: Expression, nBits: Int, seed: Long = 42L,
   @transient private lazy val planes: Array[Array[Float]] =
     VectorExpressions.planeMatrix(nBits, seed, maxDim)
 
-  override def nullSafeEval(input: Any): Any = {
-    val vec = input.asInstanceOf[ArrayData]
-    val dim = vec.numElements()
-    if (dim > maxDim) throw SrpSignature.dimError(dim, maxDim)
-    var sig = 0L
-    var b = 0
-    while (b < nBits) {
-      val p = planes(b)
-      var acc = 0.0
-      var j = 0
-      while (j < dim) { acc += vec.getFloat(j).toDouble * p(j); j += 1 }
-      if (acc >= 0.0) sig |= (1L << b)
-      b += 1
-    }
-    sig
-  }
+  override def nullSafeEval(input: Any): Any =
+    SrpSignature.srpBits(input.asInstanceOf[ArrayData], planes, maxDim)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val planesRef = ctx.addReferenceObj("planes", planes, "float[][]")
-    nullSafeCodeGen(ctx, ev, vec => {
-      val sig = ctx.freshName("sig"); val b = ctx.freshName("b")
-      val p = ctx.freshName("p"); val d = ctx.freshName("d")
-      val acc = ctx.freshName("acc"); val j = ctx.freshName("j")
-      s"""
-        int $d = $vec.numElements();
-        if ($d > $maxDim) {
-          throw graft.functions.SrpSignature.dimError($d, $maxDim);
-        }
-        long $sig = 0L;
-        for (int $b = 0; $b < $nBits; $b++) {
-          float[] $p = $planesRef[$b];
-          double $acc = 0.0;
-          for (int $j = 0; $j < $d; $j++) {
-            $acc += (double) $vec.getFloat($j) * (double) $p[$j];
-          }
-          if ($acc >= 0.0) $sig |= (1L << $b);
-        }
-        ${ev.value} = $sig;
-      """
-    })
+    nullSafeCodeGen(ctx, ev, vec =>
+      s"${ev.value} = graft.functions.SrpSignature.srpBits($vec, $planesRef, $maxDim);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): SrpSignature =
@@ -205,66 +186,13 @@ case class PqEncode(child: Expression, codebooks: Array[Array[Array[Float]]])
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def prettyName: String = "graft_pq_encode"
 
-  override def nullSafeEval(input: Any): Any = {
-    val vec = input.asInstanceOf[ArrayData]
-    if (vec.numElements() != nSub * subDim)
-      throw PqEncode.dimError(vec.numElements(), nSub, subDim)
-    val codes = new Array[Int](nSub)
-    var m = 0
-    while (m < nSub) {
-      val cb = codebooks(m)
-      var best = 0
-      var bestD = Double.MaxValue
-      var c = 0
-      while (c < nCodes) {
-        val cent = cb(c)
-        var d = 0.0
-        var j = 0
-        while (j < subDim) {
-          val diff = vec.getFloat(m * subDim + j).toDouble - cent(j).toDouble
-          d += diff * diff
-          j += 1
-        }
-        if (c == 0 || d < bestD) { bestD = d; best = c }
-        c += 1
-      }
-      codes(m) = best
-      m += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(codes)
-  }
+  override def nullSafeEval(input: Any): Any =
+    PqEncode.pqCodes(input.asInstanceOf[ArrayData], codebooks)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val cbRef = ctx.addReferenceObj("pqCodebooks", codebooks, "float[][][]")
-    nullSafeCodeGen(ctx, ev, vec => {
-      val codes = ctx.freshName("codes"); val m = ctx.freshName("m")
-      val cb = ctx.freshName("cb"); val best = ctx.freshName("best")
-      val bestD = ctx.freshName("bestD"); val c = ctx.freshName("c")
-      val cent = ctx.freshName("cent"); val d = ctx.freshName("d")
-      val j = ctx.freshName("j"); val diff = ctx.freshName("diff")
-      s"""
-        if ($vec.numElements() != ${nSub * subDim}) {
-          throw graft.functions.PqEncode.dimError($vec.numElements(), $nSub, $subDim);
-        }
-        int[] $codes = new int[$nSub];
-        for (int $m = 0; $m < $nSub; $m++) {
-          float[][] $cb = $cbRef[$m];
-          int $best = 0;
-          double $bestD = Double.MAX_VALUE;
-          for (int $c = 0; $c < $nCodes; $c++) {
-            float[] $cent = $cb[$c];
-            double $d = 0.0;
-            for (int $j = 0; $j < $subDim; $j++) {
-              double $diff = (double) $vec.getFloat($m * $subDim + $j) - (double) $cent[$j];
-              $d += $diff * $diff;
-            }
-            if ($c == 0 || $d < $bestD) { $bestD = $d; $best = $c; }
-          }
-          $codes[$m] = $best;
-        }
-        ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($codes);
-      """
-    })
+    nullSafeCodeGen(ctx, ev, vec =>
+      s"${ev.value} = graft.functions.PqEncode.pqCodes($vec, $cbRef);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): PqEncode =
@@ -293,6 +221,39 @@ object PqEncode {
     new IllegalArgumentException(
       s"graft_pq_encode: vector dim $dim != nSub($nSub) x subDim($subDim) — " +
       "the codebook was trained for a different embedding width")
+
+  /** Per subspace m, the index of the codebook centroid nearest to
+    * `vec`'s m-th slice by squared L2 (lowest index on ties).
+    */
+  def pqCodes(vec: ArrayData, codebooks: Array[Array[Array[Float]]]): ArrayData = {
+    val nSub = codebooks.length
+    val subDim = codebooks(0)(0).length
+    if (vec.numElements() != nSub * subDim)
+      throw dimError(vec.numElements(), nSub, subDim)
+    val codes = new Array[Int](nSub)
+    var m = 0
+    while (m < nSub) {
+      val cb = codebooks(m)
+      var best = 0
+      var bestD = Double.MaxValue
+      var c = 0
+      while (c < cb.length) {
+        val cent = cb(c)
+        var d = 0.0
+        var j = 0
+        while (j < subDim) {
+          val diff = vec.getFloat(m * subDim + j).toDouble - cent(j).toDouble
+          d += diff * diff
+          j += 1
+        }
+        if (c == 0 || d < bestD) { bestD = d; best = c }
+        c += 1
+      }
+      codes(m) = best
+      m += 1
+    }
+    new GenericArrayData(codes)
+  }
 }
 
 /** Fused integer squared-L2: Σ_i (floor(1e6·x_i) − c_i)² in LONG
@@ -325,39 +286,11 @@ case class L2SqMicro(left: Expression, right: Expression)
   override def dataType: DataType = LongType
   override def prettyName: String = "graft_l2sq"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val c = b.asInstanceOf[ArrayData]
-    val n = x.numElements()
-    if (c.numElements() != n) throw L2SqMicro.dimError(n, c.numElements())
-    var acc = 0L
-    var i = 0
-    while (i < n) {
-      val d = math.floor(1000000.0 * x.getFloat(i).toDouble).toLong - c.getLong(i)
-      acc += d * d
-      i += 1
-    }
-    acc
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    L2SqMicro.l2sqMicro(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n"); val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc"); val d = ctx.freshName("d")
-      s"""
-        int $n = $a.numElements();
-        if ($b.numElements() != $n) {
-          throw graft.functions.L2SqMicro.dimError($n, $b.numElements());
-        }
-        long $acc = 0L;
-        for (int $i = 0; $i < $n; $i++) {
-          long $d = (long) java.lang.Math.floor(1000000.0 * (double) $a.getFloat($i))
-                    - $b.getLong($i);
-          $acc += $d * $d;
-        }
-        ${ev.value} = $acc;
-      """
-    })
+    nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = graft.functions.L2SqMicro.l2sqMicro($a, $b);")
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): L2SqMicro =
     copy(left = l, right = r)
@@ -368,6 +301,20 @@ object L2SqMicro {
     new IllegalArgumentException(
       s"graft_l2sq: embedding has $dim dims but the centroid has $centDim — " +
         "mixed widths mean the centroid was built for a different corpus")
+
+  /** Σ_i (floor(1e6·x_i) − c_i)² in long arithmetic. */
+  def l2sqMicro(x: ArrayData, c: ArrayData): Long = {
+    val n = x.numElements()
+    if (c.numElements() != n) throw dimError(n, c.numElements())
+    var acc = 0L
+    var i = 0
+    while (i < n) {
+      val d = math.floor(1000000.0 * x.getFloat(i).toDouble).toLong - c.getLong(i)
+      acc += d * d
+      i += 1
+    }
+    acc
+  }
 }
 
 /** Fused k-means assignment: cid of the seed centroid nearest (by
@@ -402,56 +349,14 @@ case class KmeansAssign(child: Expression, cids: Array[Long],
   override def dataType: DataType = LongType
   override def prettyName: String = "graft_kmeans_assign"
 
-  override def nullSafeEval(input: Any): Any = {
-    val vec = input.asInstanceOf[ArrayData]
-    if (vec.numElements() != dim)
-      throw KmeansAssign.dimError(vec.numElements(), dim)
-    var best = 0
-    var bestD = Double.NaN
-    var k = 0
-    while (k < cids.length) {
-      val c = cents(k)
-      var d = 0.0
-      var j = 0
-      while (j < dim) {
-        val t = vec.getFloat(j).toDouble - c(j)
-        d += t * t
-        j += 1
-      }
-      if (k == 0 || java.lang.Double.compare(d, bestD) < 0) { bestD = d; best = k }
-      k += 1
-    }
-    cids(best)
-  }
+  override def nullSafeEval(input: Any): Any =
+    KmeansAssign.nearestCid(input.asInstanceOf[ArrayData], cids, cents)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val cidsRef = ctx.addReferenceObj("kmCids", cids, "long[]")
     val centsRef = ctx.addReferenceObj("kmCents", cents, "double[][]")
-    nullSafeCodeGen(ctx, ev, vec => {
-      val best = ctx.freshName("best"); val bestD = ctx.freshName("bestD")
-      val k = ctx.freshName("k"); val c = ctx.freshName("c")
-      val d = ctx.freshName("d"); val j = ctx.freshName("j")
-      val t = ctx.freshName("t")
-      s"""
-        if ($vec.numElements() != $dim) {
-          throw graft.functions.KmeansAssign.dimError($vec.numElements(), $dim);
-        }
-        int $best = 0;
-        double $bestD = Double.NaN;
-        for (int $k = 0; $k < ${cids.length}; $k++) {
-          double[] $c = $centsRef[$k];
-          double $d = 0.0;
-          for (int $j = 0; $j < $dim; $j++) {
-            double $t = (double) $vec.getFloat($j) - $c[$j];
-            $d += $t * $t;
-          }
-          if ($k == 0 || java.lang.Double.compare($d, $bestD) < 0) {
-            $bestD = $d; $best = $k;
-          }
-        }
-        ${ev.value} = $cidsRef[$best];
-      """
-    })
+    nullSafeCodeGen(ctx, ev, vec =>
+      s"${ev.value} = graft.functions.KmeansAssign.nearestCid($vec, $cidsRef, $centsRef);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): KmeansAssign =
@@ -477,6 +382,30 @@ object KmeansAssign {
     new IllegalArgumentException(
       s"graft_kmeans_assign: vector has $dim dims but seeds have $seedDim — " +
         "the seed matrix was built for a different embedding width")
+
+  /** cids(k) of the centroid nearest to `vec` by squared L2, scanning
+    * k ascending with a `Double.compare < 0` strict improve.
+    */
+  def nearestCid(vec: ArrayData, cids: Array[Long], cents: Array[Array[Double]]): Long = {
+    val dim = cents(0).length
+    if (vec.numElements() != dim) throw dimError(vec.numElements(), dim)
+    var best = 0
+    var bestD = Double.NaN
+    var k = 0
+    while (k < cids.length) {
+      val c = cents(k)
+      var d = 0.0
+      var j = 0
+      while (j < dim) {
+        val t = vec.getFloat(j).toDouble - c(j)
+        d += t * t
+        j += 1
+      }
+      if (k == 0 || java.lang.Double.compare(d, bestD) < 0) { bestD = d; best = k }
+      k += 1
+    }
+    cids(best)
+  }
 }
 
 /** cosine(probe, int8-quantized corpus vector) — the scoring kernel
@@ -505,14 +434,31 @@ case class CosineSq8(left: Expression, right: Expression)
   override def dataType: DataType = DoubleType
   override def prettyName: String = "graft_cosine_sq8"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any, b: Any): Any =
+    CosineSq8.cosineSq8(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = graft.functions.CosineSq8.cosineSq8($a, $b);")
+
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): CosineSq8 =
+    copy(left = l, right = r)
+}
+
+object CosineSq8 {
+  def dimError(probeDim: Int, codeDim: Int): IllegalArgumentException =
+    new IllegalArgumentException(
+      s"graft_cosine_sq8: probe has $probeDim dims but the codes have $codeDim — " +
+        "the sq8 code table was built for a different embedding width")
+
+  /** Cosine of a float probe against byte codes, [[CosineSim.cosine]]'s
+    * accumulation order and zero-norm rule.
+    */
+  def cosineSq8(x: ArrayData, y: ArrayData): Double = {
     val n = x.numElements()
     // loud on mismatch, like the sibling kernels (L2SqMicro,
     // KmeansAssign): a stale or wrong-width sq8 codes table must fail,
     // not score a truncated prefix plausibly-but-wrong
-    if (y.numElements() != n) throw CosineSq8.dimError(n, y.numElements())
+    if (y.numElements() != n) throw dimError(n, y.numElements())
     var dot = 0.0; var nx = 0.0; var ny = 0.0
     var i = 0
     while (i < n) {
@@ -524,36 +470,4 @@ case class CosineSq8(left: Expression, right: Expression)
     val den = math.sqrt(nx) * math.sqrt(ny)
     if (den == 0.0) 0.0 else dot / den
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i"); val n = ctx.freshName("n")
-      val dot = ctx.freshName("dot"); val nx = ctx.freshName("nx")
-      val ny = ctx.freshName("ny"); val x = ctx.freshName("x")
-      val y = ctx.freshName("y"); val den = ctx.freshName("den")
-      s"""
-        int $n = $a.numElements();
-        if ($b.numElements() != $n) {
-          throw graft.functions.CosineSq8.dimError($n, $b.numElements());
-        }
-        double $dot = 0.0; double $nx = 0.0; double $ny = 0.0;
-        for (int $i = 0; $i < $n; $i++) {
-          double $x = (double) $a.getFloat($i);
-          double $y = (double) $b.getByte($i);
-          $dot += $x * $y; $nx += $x * $x; $ny += $y * $y;
-        }
-        double $den = java.lang.Math.sqrt($nx) * java.lang.Math.sqrt($ny);
-        ${ev.value} = ($den == 0.0) ? 0.0 : $dot / $den;
-      """
-    })
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): CosineSq8 =
-    copy(left = l, right = r)
-}
-
-object CosineSq8 {
-  def dimError(probeDim: Int, codeDim: Int): IllegalArgumentException =
-    new IllegalArgumentException(
-      s"graft_cosine_sq8: probe has $probeDim dims but the codes have $codeDim — " +
-        "the sq8 code table was built for a different embedding width")
 }

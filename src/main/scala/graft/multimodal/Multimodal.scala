@@ -416,14 +416,16 @@ object Multimodal {
   def buildBmpPayloads(s: SparkSession, dir: String): DataFrame =
     materializedPayloads(s, dir, "bmp_payloads")(imagePayloadsPlan(s, dir, "bmp"))
 
-  /** The shared encode loop behind the PNG/JPEG/BMP payload fixtures:
-    * deterministic RGB pixels (pixel p channels = [[chanVal]](3p),
-    * (3p+1), (3p+2)) pushed through the named stock-JDK ImageIO
-    * writer, row-local in `mapPartitions` (the declared codec
-    * boundary).
+  /** The shared encode loop behind the PNG/JPEG/BMP payload fixtures
+    * and the variant corpus: each doc's RGB pixels are those of
+    * `source(id)` (pixel p channels = [[chanVal]](3p), (3p+1), (3p+2)),
+    * plus 32 on the R channel of every even pixel (capped at 255) when
+    * `edited(id)`, pushed through the named stock-JDK ImageIO writer,
+    * row-local in `mapPartitions` (the declared codec boundary).
     */
-  private def imagePayloadsPlan(s: SparkSession, dir: String,
-                                format: String): DataFrame = {
+  private def imagePayloadsPlan(s: SparkSession, dir: String, format: String,
+                                source: Long => Long = identity,
+                                edited: Long => Boolean = _ => false): DataFrame = {
     import s.implicits._
     // repartition BEFORE the encode loop (r22): the doc_id scan is one
     // split at test scale, and without the fan-out the whole corpus
@@ -434,15 +436,17 @@ object Multimodal {
       .repartition(buildShards(s, dir))
       .mapPartitions { it =>
         it.map { id =>
-          val w = imgW(id); val h = imgH(id)
+          val src = source(id); val edit = edited(id)
+          val w = imgW(src); val h = imgH(src)
           val img = new java.awt.image.BufferedImage(
             w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
           var p = 0; var y = 0
           while (y < h) {
             var x = 0
             while (x < w) {
-              val r = chanVal(id, 3L * p); val g = chanVal(id, 3L * p + 1)
-              val b = chanVal(id, 3L * p + 2)
+              val r = math.min(255,
+                chanVal(src, 3L * p) + (if (edit && p % 2 == 0) 32 else 0))
+              val g = chanVal(src, 3L * p + 1); val b = chanVal(src, 3L * p + 2)
               img.setRGB(x, y, (r << 16) | (g << 8) | b)
               p += 1; x += 1
             }
@@ -472,6 +476,23 @@ object Multimodal {
     img
   }
 
+  /** Per-channel (R, G, B) sums over every pixel of a decoded image. */
+  private def channelSums(img: java.awt.image.BufferedImage): (Long, Long, Long) = {
+    val w = img.getWidth; val h = img.getHeight
+    var sr = 0L; var sg = 0L; var sb = 0L
+    var y = 0
+    while (y < h) {
+      var x = 0
+      while (x < w) {
+        val rgb = img.getRGB(x, y)
+        sr += (rgb >> 16) & 0xff; sg += (rgb >> 8) & 0xff; sb += rgb & 0xff
+        x += 1
+      }
+      y += 1
+    }
+    (sr, sg, sb)
+  }
+
   /** SURVEY §2 `mm_image_decode`: binary PNG column → REAL JDK decode
     * → per-image channel statistics (the feature-extract stage of an
     * image-training pipeline, e.g. mean-pixel filtering). Every output
@@ -488,17 +509,7 @@ object Multimodal {
         it.map { mp =>
           val img = decodeImage(mp.doc_id, mp.payload)
           val w = img.getWidth; val h = img.getHeight
-          var sr = 0L; var sg = 0L; var sb = 0L
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) {
-              val rgb = img.getRGB(x, y)
-              sr += (rgb >> 16) & 0xff; sg += (rgb >> 8) & 0xff; sb += rgb & 0xff
-              x += 1
-            }
-            y += 1
-          }
+          val (sr, sg, sb) = channelSums(img)
           val n = w.toLong * h
           ImageMeta(mp.doc_id, w, h, n, sr, sg, sb,
             1000L * (sr + sg + sb) / (3L * n))
@@ -583,17 +594,7 @@ object Multimodal {
             (mp.payload(0) & 0xff) == 0xff && (mp.payload(1) & 0xff) == 0xd8
           val img = decodeImage(mp.doc_id, mp.payload)
           val w = img.getWidth; val h = img.getHeight
-          var dr = 0L; var dg = 0L; var db = 0L
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) {
-              val rgb = img.getRGB(x, y)
-              dr += (rgb >> 16) & 0xff; dg += (rgb >> 8) & 0xff; db += rgb & 0xff
-              x += 1
-            }
-            y += 1
-          }
+          val (dr, dg, db) = channelSums(img)
           var sr = 0L; var sg = 0L; var sb = 0L
           var p = 0L
           val n = w.toLong * h
@@ -629,38 +630,8 @@ object Multimodal {
     * deterministic pixels, variant docs their base's pixels plus the
     * R-channel edit. Row-local encode, (id, blob) rows only.
     */
-  def buildPngVariantPayloads(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    // same pre-encode fan-out as imagePayloadsPlan (r22)
-    Tables.documents(s, dir).select(col("doc_id")).as[Long]
-      .repartition(buildShards(s, dir))
-      .mapPartitions { it =>
-        it.map { id =>
-          val src = phashSrc(id); val variant = isVariant(id)
-          val w = imgW(src); val h = imgH(src)
-          val img = new java.awt.image.BufferedImage(
-            w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-          var p = 0; var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) {
-              val r = math.min(255,
-                chanVal(src, 3L * p) + (if (variant && p % 2 == 0) 32 else 0))
-              val g = chanVal(src, 3L * p + 1); val b = chanVal(src, 3L * p + 2)
-              img.setRGB(x, y, (r << 16) | (g << 8) | b)
-              p += 1; x += 1
-            }
-            y += 1
-          }
-          val bo = new java.io.ByteArrayOutputStream()
-          imageIoCacheOff
-          require(javax.imageio.ImageIO.write(img, "png", bo),
-            s"no JDK PNG writer available (doc $id)")
-          MediaPayload(id, bo.toByteArray)
-        }
-      }
-      .toDF()
-  }
+  def buildPngVariantPayloads(s: SparkSession, dir: String): DataFrame =
+    imagePayloadsPlan(s, dir, "png", phashSrc, isVariant)
 
   /** A decoded image's 64-bit aHash, split into two positive 32-bit
     * halves (one signed BIGINT would overflow DuckDB's `1 << 63`). */

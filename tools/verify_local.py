@@ -24,7 +24,7 @@ ap.add_argument("--repo", default=os.path.dirname(os.path.dirname(os.path.abspat
                 help="checkout to build and run graft.Verify in")
 ap.add_argument("--out", default="/tmp/graft_verify", help="graft.Verify output dir")
 ap.add_argument("--no-build", action="store_true", help="re-compare the existing output dir")
-ap.add_argument("--only", metavar="QUERY_KEY", help="run one query key")
+ap.add_argument("--only", metavar="KEY[,KEY...]", help="run only these comma-separated query keys")
 ARGS = ap.parse_args()
 # absolute: graft.Verify runs with the checkout as its working dir
 SF_DIR, OUT = os.path.abspath(ARGS.sf_dir), os.path.abspath(ARGS.out)
@@ -34,10 +34,11 @@ def run_verify():
     only = ""
     if ARGS.only is not None:
         # interpolated into the sbt runMain string — restrict to key chars
-        if not ARGS.only.replace("_", "").isalnum():
-            print(f"--only expects a query key (letters/digits/underscore), got: {ARGS.only!r}")
+        keys = ARGS.only.split(",")
+        if not all(k.replace("_", "").isalnum() for k in keys):
+            print(f"--only expects comma-separated query keys (letters/digits/underscore), got: {ARGS.only!r}")
             sys.exit(2)
-        only = " " + ARGS.only
+        only = " " + ",".join(keys)
     r = subprocess.run(
         ["sbt", "-batch", f'runMain graft.Verify {SF_DIR} {OUT}{only}'],
         capture_output=True, text=True, cwd=ARGS.repo, timeout=1200)
